@@ -1,9 +1,10 @@
 """Correctness checks run after the timed window of every benchmark run.
 
 Each check returns ``(name, ok, detail)``; a failed check counts as a
-failed operation in the run's ``fail_ratio``. The reference is the
-single-process pandas oracle (``vectrain_spark.oracle``), which shares the
-scalar rules with the engine but links by brute-force cosine.
+failed operation in the run's ``fail_ratio``. For ``build`` the reference
+is the single-process pandas oracle (``vectrain_spark.oracle``), which
+shares the scalar rules with the engine but links by brute-force cosine;
+for ``queries`` it is each query's SQL oracle run on DuckDB.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ def expected_triples(pages_pdf: pd.DataFrame) -> int:
 def counts_check(ops: list[dict], expected_total: int) -> Check:
     """Every run committed the expected triple count and the same
     canonical count."""
-    totals = {op["total_triples"] for op in ops}
+    totals = {op["triples"] for op in ops}
     canon = {op["canonical_triples"] for op in ops}
     ok = totals == {expected_total} and len(canon) == 1
     return "counts", ok, f"total={sorted(totals)} expected={expected_total} canonical={sorted(canon)}"
@@ -75,15 +76,55 @@ def sample_check(
     ]
 
 
-def same_canonical_check(spark, out_a: str, out_b: str) -> Check:
-    """Two warehouses built from one corpus hold the same canonical
-    triples (link_join against the broadcast path)."""
-    cols = ["subj_canon", "pred", "obj_canon", "cnt"]
+def _normalize(df: pd.DataFrame) -> pd.DataFrame:
+    """Order-insensitive form of a result: sorted columns and rows, floats
+    rounded to 9 places (the gate's comparison)."""
+    df = df[sorted(df.columns)].copy()
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].astype(str)
+        elif np.issubdtype(df[c].dtype, np.floating):
+            df[c] = df[c].round(9)
+        elif np.issubdtype(df[c].dtype, np.integer):
+            df[c] = df[c].astype("int64")
+    return df.sort_values(list(df.columns), kind="stable").reset_index(drop=True)
 
-    def table(root: str) -> pd.DataFrame:
-        pdf = Catalog(root).read(spark, "canonical_triples").select(*cols).toPandas()
-        return pdf.sort_values(cols).reset_index(drop=True)
 
-    a, b = table(out_a), table(out_b)
-    ok = a.equals(b)
-    return "join_equals_broadcast", ok, f"rows {len(a)} vs {len(b)}"
+def _same(got: pd.DataFrame, want: pd.DataFrame) -> tuple[bool, str]:
+    g, w = _normalize(got), _normalize(want)
+    if list(g.columns) != list(w.columns):
+        return False, f"columns {list(g.columns)} vs {list(w.columns)}"
+    if len(g) != len(w):
+        return False, f"rows {len(g)} vs {len(w)}"
+    return bool(g.equals(w)), f"{len(g)} rows"
+
+
+def query_checks(sf_dir: str, ops: list[dict], query_set, expect_offset: int = 0) -> list[Check]:
+    """Every query of the last pass, and the shared edge table, equal the
+    query's ``driver_queries.ORACLES`` SQL run on DuckDB over the same
+    files; every pass returned the same results; the edge table holds the
+    oracle's triple count."""
+    import duckdb
+
+    from vectrain_spark.driver_queries import ORACLES
+
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    last = ops[-1]
+    out: list[Check] = []
+    want_edges = con.sql(ORACLES["kg_edges"]).df()
+    ok, detail = _same(last["edges"], want_edges)
+    out.append(("edges_cache", ok, detail))
+    want_triples = int(want_edges["cnt"].sum()) + expect_offset
+    out.append(("counts", last["triples"] == want_triples,
+                f"triples={last['triples']} expected={want_triples}"))
+    for q in query_set:
+        ok, detail = _same(last["results"][q], con.sql(ORACLES[q]).df())
+        out.append((q, ok, detail))
+    stable = all(
+        _same(op["results"][q], last["results"][q])[0] for op in ops[:-1] for q in query_set
+    )
+    out.append(("passes_agree", stable, f"{len(ops)} passes"))
+    con.close()
+    return out

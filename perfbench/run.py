@@ -6,12 +6,11 @@ Run from the root of a checkout:
     python3 perfbench/run.py --workload build --seed 1 --seconds 5 --trace 0
 
 One process drives ``local[nproc]``. It generates the workload's inputs from
-``--seed`` with the package's own fixture generators, runs the pipeline in a
-closed loop (one caller, each run starting from an empty warehouse) for
-``--seconds``, checks the outputs against the pandas oracle, and prints one
-JSON object as the last line of standard output. ``--trace 0`` reports the
-end-to-end metrics; ``--trace 1`` also runs one traced pipeline run and
-reports the per-layer metrics (see perfbench/README.md).
+``--seed``, runs the workload's operation in a closed loop (one caller) for
+``--seconds``, checks the outputs, and prints one JSON object as the last
+line of standard output. ``--trace 0`` reports the end-to-end metrics;
+``--trace 1`` also runs one traced operation and reports the per-layer
+metrics (see perfbench/README.md).
 
 Everything the run writes goes under ``.perfbench_work/`` in the checkout.
 """
@@ -21,40 +20,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import resource
-import shutil
-import statistics
 import sys
-import time
-import traceback
 
-from tracing import CATALOG_TABLES, LAYERS, Tracer
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORK = os.path.join(ROOT, ".perfbench_work")
-
-# bench.CORPUS_PARAMS: Common-Crawl-weight pages, ~40 KB of html each
-BENCH_PAGES = {"min_sent": 40, "max_sent": 120, "junk_blocks": 30}
-
-WORKLOADS = {
-    # cold run_pipeline over bench-shaped pages; broadcast linking
-    "build": {"pages": 400, "page_kw": BENCH_PAGES, "n_entities": None,
-              "n_groups": 2, "join": False},
-    # light pages, a few-thousand-row dictionary, join-path linking forced
-    # through PipelineConfig.broadcast_dict_max
-    "link_join": {"pages": 120, "page_kw": {}, "n_entities": 1000,
-                  "n_groups": 1, "join": True},
-}
-MIN_PAGES = 24  # --size min, and about the size of the warm-up corpus
-MIN_ENTITIES = 200
-WARM_ENTITIES = 200
-SETUP_ROUNDS = 3
-SAMPLE_PAGES = 16
-CONTROL_ROUNDS = 6
-# A typical host_control_s() on this 4-core host. Time metrics are reported
-# scaled by CONTROL_REF_S / (this run's control time): the host's speed
-# drifts by 1.5x within an hour, and the scaled figures drift less.
-CONTROL_REF_S = 0.5
+HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
 
 END_TO_END = [
     ("setup_s", "s", "lower"),
@@ -90,375 +59,29 @@ _EXTRA = {
 
 
 def per_layer_spec() -> list[tuple[str, str, str]]:
+    from tracing import CATALOG_TABLES, PIPELINE_LAYERS
+    from workloads import QUERY_LAYERS
+
     spec = []
-    for layer in LAYERS:
+    for layer in PIPELINE_LAYERS:
         spec += [(f"{layer}.{n}", u, b) for n, u, b in _COMMON + _EXTRA[layer]]
     for table in CATALOG_TABLES:
         spec += [(f"catalog.{table}.mb", "MB", "lower"),
                  (f"catalog.{table}.files", "count", "lower"),
                  (f"catalog.{table}.commits", "count", "lower")]
-    spec += [("session.start_s", "s", "lower"), ("session.warmup_s", "s", "lower"),
+    for layer in QUERY_LAYERS:
+        spec += [(f"{layer}.{n}", u, b) for n, u, b in _COMMON]
+    spec += [("session.launch_s", "s", "lower"), ("session.start_s", "s", "lower"),
+             ("session.workers_s", "s", "lower"),
              ("trace.overhead_s", "s", "lower"), ("host.control_s", "s", "lower"),
              ("run.wall_raw_s", "s", "lower"), ("run.setup_raw_s", "s", "lower"),
              ("run.fail_ratio", "ratio", "lower")]
     return spec
 
 
-def _configure_env() -> dict[str, str]:
-    """Size the session for this host through the env vars
-    ``session.get_spark`` reads, and keep every file inside the checkout."""
-    tmp = os.path.join(WORK, "tmp")
-    os.makedirs(tmp, exist_ok=True)
-    os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    os.environ["SPARK_DRIVER_MEM"] = "4g"
-    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(WORK, "spark-local")
-    os.environ["TMPDIR"] = tmp
-    # python workers import the package from the checkout
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-    )
-    return {
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
-        "spark.sql.warehouse.dir": os.path.join(WORK, "spark-warehouse"),
-        "spark.ui.showConsoleProgress": "false",
-        "spark.ui.retainedJobs": "100000",
-        "spark.ui.retainedStages": "100000",
-        "spark.sql.ui.retainedExecutions": "100000",
-    }
-
-
-def _stop_spark(spark) -> None:
-    """Stop the session and wait for the JVM (and its Python workers) to
-    exit."""
-    from pyspark import SparkContext
-
-    spark.stop()
-    gateway = SparkContext._gateway
-    if gateway is None:
-        return
-    proc = getattr(gateway, "proc", None)
-    gateway.shutdown()
-    if proc is not None:
-        proc.stdin.close()  # the gateway server exits on stdin EOF
-        proc.wait(timeout=120)
-    SparkContext._gateway = None
-    SparkContext._jvm = None
-
-
-def _dir_bytes(path: str) -> tuple[int, int]:
-    """(total bytes, parquet files) under path."""
-    total = files = 0
-    for dirpath, _dirs, names in os.walk(path):
-        for n in names:
-            total += os.path.getsize(os.path.join(dirpath, n))
-            files += n.endswith(".parquet")
-    return total, files
-
-
-def _identity_batches(batches):
-    yield from batches
-
-
-def host_control_s(spark) -> float:
-    """Median wall time of one small Spark job that runs no program code (a
-    Python-worker pass over 50k rows, one task per core), over
-    CONTROL_ROUNDS rounds after one discarded round. It tracks how fast this
-    host runs Spark jobs right now, beside the timed runs."""
-    df = spark.range(0, 50_000, numPartitions=len(os.sched_getaffinity(0)))
-    rounds = []
-    for _ in range(CONTROL_ROUNDS + 1):
-        t0 = time.perf_counter()
-        df.mapInArrow(_identity_batches, df.schema).count()
-        rounds.append(time.perf_counter() - t0)
-    return statistics.median(rounds[1:])
-
-
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-class Bench:
-    def __init__(self, args):
-        self.args = args
-        self.wl = dict(WORKLOADS[args.workload])
-        if args.size == "min":
-            self.wl["pages"] = MIN_PAGES
-            if self.wl["n_entities"]:
-                self.wl["n_entities"] = MIN_ENTITIES
-        self.conf = _configure_env()
-        self.cores = int(os.environ["SPARK_GRAFT_CPUS"])
-        self.spark = None
-        self.checks: list[tuple[str, bool, str]] = []
-        self.ops: list[dict] = []
-        self.failed_ops = 0
-
-    # ------------------------------------------------------------ inputs
-    def _gen_pages(self, n_pages: int, out_dir: str):
-        """Write the seeded corpus to out_dir; returns the alias dictionary."""
-        from vectrain_spark.fixtures import pages_spark
-
-        pages, aliases_pdf = pages_spark(
-            self.spark, n_pages, seed=self.args.seed,
-            n_entities=self.wl["n_entities"], **self.wl["page_kw"],
-        )
-        pages.write.mode("overwrite").parquet(out_dir)
-        return aliases_pdf
-
-    def _load(self, pages_dir: str, aliases_pdf):
-        pages = self.spark.read.parquet(pages_dir)
-        pages.count()
-        return pages, self.spark.createDataFrame(aliases_pdf[["entity_id", "alias"]])
-
-    def setup(self) -> None:
-        """Start the session and generate the inputs, then SETUP_ROUNDS
-        times restart the session and load the inputs; setup_s is the
-        median round."""
-        from vectrain_spark.session import get_spark
-
-        def start():
-            return get_spark(app_name=f"perfbench-{self.args.workload}", extra=self.conf)
-
-        self.spark = start()
-        pages_dir = os.path.join(WORK, "inputs", "pages")
-        self.aliases_pdf = self._gen_pages(self.wl["pages"], pages_dir)
-        self.setup_rounds, self.start_rounds = [], []
-        for _ in range(SETUP_ROUNDS):
-            t0 = time.perf_counter()
-            self.spark.stop()
-            self.spark = start()
-            t1 = time.perf_counter()
-            self.pages, self.aliases = self._load(pages_dir, self.aliases_pdf)
-            self.setup_rounds.append(time.perf_counter() - t0)
-            self.start_rounds.append(t1 - t0)
-        self.spark.sparkContext.setJobGroup("perfbench-untraced", "untraced")
-
-    def config(self, join: bool | None = None):
-        from vectrain_spark.pipeline import PipelineConfig
-
-        cfg = PipelineConfig(n_groups=self.wl["n_groups"])
-        if self.wl["join"] if join is None else join:
-            # just below the dictionary's row count: the join path
-            cfg.broadcast_dict_max = len(self.aliases_pdf) - 1
-        return cfg
-
-    def warm_up(self) -> None:
-        """One untimed single-group run over a ~MIN_PAGES slice of the
-        corpus: JIT, codegen and Python workers are warm before timing."""
-        from pyspark.sql import functions as F
-
-        from vectrain_spark.pipeline import run_pipeline
-
-        t0 = time.perf_counter()
-        every = max(1, self.wl["pages"] // MIN_PAGES)
-        pages = self.pages.filter(F.pmod(F.xxhash64("url"), F.lit(every)) == 0)
-        out = os.path.join(WORK, "warm")
-        shutil.rmtree(out, ignore_errors=True)
-        cfg = self.config()
-        cfg.n_groups = 1
-        if self.wl["join"]:
-            cfg.broadcast_dict_max = 0
-        # a slice of the dictionary too: embedding it is Python work the
-        # timed runs repeat anyway
-        aliases = self.aliases.filter(F.col("entity_id") <= WARM_ENTITIES)
-        run_pipeline(self.spark, pages, aliases, out, cfg)
-        self.warmup_s = time.perf_counter() - t0
-
-    # ------------------------------------------------------------ timed loop
-    def one_op(self, out: str) -> dict | None:
-        from vectrain_spark import pipeline
-
-        shutil.rmtree(out, ignore_errors=True)
-        before = _persistent_rdds(self.spark)
-        t0 = time.perf_counter()
-        try:
-            stats = pipeline.run_pipeline(self.spark, self.pages, self.aliases, out, self.config())
-        except Exception:  # a failed run is counted, and the loop goes on
-            traceback.print_exc()
-            self.failed_ops += 1
-            return None
-        wall = time.perf_counter() - t0
-        op = {
-            "wall_s": wall,
-            "total_triples": stats["total_triples"],
-            "canonical_triples": stats["canonical_triples"],
-            "link_strategy": stats["link_strategy"],
-            "bytes_written": _dir_bytes(out)[0],
-            "leaked_rdds": _persistent_rdds(self.spark) - before,
-        }
-        self.ops.append(op)
-        return op
-
-    def timed_loop(self, out: str) -> None:
-        t_start = time.perf_counter()
-        while not self.ops or time.perf_counter() - t_start < self.args.seconds:
-            self.one_op(out)
-            if self.failed_ops and not self.ops:
-                break
-        self.peak_rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
-
-    # ------------------------------------------------------------ checks
-    def run_checks(self, out: str) -> None:
-        from checks import counts_check, expected_triples, same_canonical_check, sample_check
-
-        pages_pdf = self.pages.select("url", "warc_ts", "html", "lang").toPandas()
-        expected = expected_triples(pages_pdf) + self.args.expect_offset
-        self.checks.append(counts_check(self.ops, expected))
-        self.checks += sample_check(
-            self.spark, pages_pdf, self.aliases_pdf, out, self.args.seed, SAMPLE_PAGES
-        )
-        if self.wl["join"]:
-            from vectrain_spark.pipeline import run_pipeline
-
-            ref = os.path.join(WORK, "ref")
-            shutil.rmtree(ref, ignore_errors=True)
-            t0 = time.perf_counter()
-            stats = run_pipeline(self.spark, self.pages, self.aliases, ref, self.config(join=False))
-            self.broadcast_wall_s = time.perf_counter() - t0
-            print(f"broadcast path on the same corpus: {self.broadcast_wall_s:.2f}s", file=sys.stderr)
-            paths = {op["link_strategy"] for op in self.ops} | {stats["link_strategy"]}
-            self.checks.append(
-                ("paths", paths == {"join", "broadcast"}, f"strategies={sorted(paths)}")
-            )
-            self.checks.append(same_canonical_check(self.spark, out, ref))
-        for name, ok, detail in self.checks:
-            print(f"[{'ok' if ok else 'FAIL'}] {name}: {detail}", file=sys.stderr)
-
-    # ------------------------------------------------------------ metrics
-    def end_to_end(self) -> dict:
-        scale = CONTROL_REF_S / self.control_s
-        wall = statistics.median(op["wall_s"] for op in self.ops) * scale
-        last = self.ops[-1]
-        return {
-            "setup_s": statistics.median(self.setup_rounds) * scale,
-            "wall_s": wall,
-            "triples_per_s": last["total_triples"] / wall,
-            "write_amp": last["bytes_written"] / self.html_bytes,
-            "driver_peak_rss_mb": self.peak_rss_mb,
-        }
-
-    def per_layer(self, traced: dict, out: str, untraced_wall: float) -> dict:
-        from vectrain_spark.catalog import Catalog
-
-        rep = traced["report"]
-        m: dict[str, float] = {}
-        for layer, d in rep["layers"].items():
-            for k, v in d.items():
-                m[f"{layer}.{k}"] = v
-        spark, cat = self.spark, Catalog(out)
-        ext = cat.read(spark, "extracted")
-        n_pages = ext.count()
-        n_bad = ext.filter("error IS NOT NULL").count()
-        m["extract.html.pages"] = n_pages
-        m["extract.html.quarantine_ratio"] = n_bad / n_pages
-        m["extract.triples.triples"] = traced["op"]["total_triples"]
-        m.update(self._link_stats(cat))
-        m["linking.setup_s"] = rep["self_s_by_span"].get("linking.setup", 0.0)
-        m["linking.path_join"] = float("join" in rep["link_paths"])
-        m["canonicalize.branch_distributed"] = float(bool(rep["canon_branches"]))
-        m["canonicalize.dedup_ratio"] = (
-            traced["op"]["canonical_triples"] / traced["op"]["total_triples"]
-        )
-        for table in CATALOG_TABLES:
-            size, files = _dir_bytes(os.path.join(out, table))
-            m[f"catalog.{table}.mb"] = size / 2**20
-            m[f"catalog.{table}.files"] = files
-            m[f"catalog.{table}.commits"] = len(cat.snapshots(table)) if cat.exists(table) else 0
-        m["pipeline.leaked_rdds"] = max(op["leaked_rdds"] for op in self.ops)
-        m["session.start_s"] = statistics.median(self.start_rounds)
-        m["session.warmup_s"] = self.warmup_s
-        m["trace.overhead_s"] = traced["op"]["wall_s"] - untraced_wall
-        m["host.control_s"] = self.control_s
-        m["run.wall_raw_s"] = untraced_wall
-        m["run.setup_raw_s"] = statistics.median(self.setup_rounds)
-        return m
-
-    def _link_stats(self, cat) -> dict:
-        """surfaces and hit ratio, from the committed (surface, entity) links:
-        exact = the surface is an alias, lsh = it linked to a dictionary
-        entity, else a fallback id was minted."""
-        from pyspark.sql import functions as F
-
-        tri = cat.read(self.spark, "triples")
-        links = (
-            tri.select(F.col("subj").alias("s"), F.col("subj_id").alias("e"))
-            .union(tri.select(F.col("obj").alias("s"), F.col("obj_id").alias("e")))
-            .distinct()
-            .toPandas()
-        )
-        aliases = set(self.aliases_pdf["alias"])
-        eids = set(self.aliases_pdf["entity_id"].astype(int))
-        hits = sum(s in aliases or int(e) in eids for s, e in zip(links["s"], links["e"]))
-        n = max(len(links), 1)
-        return {"linking.surfaces": len(links), "linking.hit_ratio": hits / n}
-
-    # ------------------------------------------------------------ main
-    def run(self) -> dict:
-        t0 = time.perf_counter()
-        self.setup()
-        t1 = time.perf_counter()
-        self.warm_up()
-        t2 = time.perf_counter()
-        from pyspark.sql import functions as F
-
-        self.html_bytes = self.pages.agg(F.sum(F.length("html"))).collect()[0][0]
-        out = os.path.join(WORK, "out")
-        self.control_s = host_control_s(self.spark)
-        self.timed_loop(out)
-        metrics: dict[str, float] = {}
-        if self.ops:
-            metrics = self.end_to_end()
-        traced = None
-        if self.args.trace and self.ops:
-            untraced = statistics.median(op["wall_s"] for op in self.ops)
-            tracer = Tracer(self.spark, run_id=f"{self.args.workload}-{self.args.seed}")
-            tracer.install()
-            try:
-                op = self.one_op(out)
-            finally:
-                tracer.uninstall()
-            if op is not None:
-                traced = {"op": op, "report": tracer.report(self.cores)}
-        t3 = time.perf_counter()
-        if self.ops:
-            self.run_checks(out)
-        t4 = time.perf_counter()
-        print(f"host control {self.control_s:.3f}s, "
-              f"setup rounds {[round(x, 2) for x in self.setup_rounds]}, "
-              f"runs {[round(op['wall_s'], 2) for op in self.ops]}", file=sys.stderr)
-        print(f"phases: setup {t1 - t0:.1f}s warm-up {t2 - t1:.1f}s timed+traced {t3 - t2:.1f}s "
-              f"checks {t4 - t3:.1f}s", file=sys.stderr)
-        attempted = len(self.ops) + self.failed_ops + len(self.checks)
-        failed = self.failed_ops + sum(not ok for _n, ok, _d in self.checks)
-        if self.args.trace:
-            metrics = {}
-            if traced is not None:
-                metrics = self.per_layer(traced, out, untraced)
-                metrics["run.fail_ratio"] = failed / attempted
-                self._write_trace(traced, metrics)
-        return {"attempted": attempted, "failed": failed, "metrics": metrics}
-
-    def _write_trace(self, traced: dict, metrics: dict) -> None:
-        path = self.args.trace_out or os.path.join(WORK, f"trace_{self.args.workload}.json")
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        doc = {
-            "workload": self.args.workload,
-            "seed": self.args.seed,
-            "cores": self.cores,
-            "pages": self.wl["pages"],
-            "untraced_wall_s": [op["wall_s"] for op in self.ops[:-1]],
-            "traced_wall_s": traced["op"]["wall_s"],
-            "broadcast_path_wall_s": getattr(self, "broadcast_wall_s", None),
-            "checks": [{"name": n, "ok": ok, "detail": d} for n, ok, d in self.checks],
-            "per_layer": metrics,
-            **{k: v for k, v in traced["report"].items() if k != "layers"},
-        }
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=1, default=float)
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
+    ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -473,21 +96,31 @@ def main(argv: list[str] | None = None) -> int:
     try:
         import pyspark  # noqa: F401
 
+        import vectrain_spark.driver_queries  # noqa: F401
         import vectrain_spark.pipeline  # noqa: F401
     except ImportError as e:
         print(f"perfbench: cannot import the program from {ROOT}: {e}", file=sys.stderr)
         return 2
+    from harness import stop_spark
+    from workloads import WORKLOADS
 
-    bench = Bench(args)
+    if args.workload not in WORKLOADS:
+        ap.error(f"--workload must be one of {sorted(WORKLOADS)}")
+    cls, wl = WORKLOADS[args.workload]
+    bench = cls(args, wl)
     try:
         result = bench.run()
     finally:
         if bench.spark is not None:
-            _stop_spark(bench.spark)
+            stop_spark(bench.spark)
     attempted, failed = result["attempted"], result["failed"]
     spec = per_layer_spec() if args.trace else END_TO_END
     units = {n: u for n, u, _b in spec}
-    missing = [n for n in units if n not in result["metrics"]]
+    metrics = result["metrics"]
+    if args.trace and metrics:
+        # layers of the other workload did not run: they read 0
+        metrics = {n: metrics.get(n, 0.0) for n in units}
+    missing = [n for n in units if n not in metrics]
     if missing:
         print(f"perfbench: no value for {missing}", file=sys.stderr)
         return 1
@@ -495,7 +128,7 @@ def main(argv: list[str] | None = None) -> int:
         "correct": failed == 0,
         "attempted": attempted,
         "failed": failed,
-        "metrics": {n: {"value": float(result["metrics"][n]), "unit": units[n]} for n in units},
+        "metrics": {n: {"value": float(metrics[n]), "unit": units[n]} for n in units},
     }
     print(json.dumps(out), flush=True)
     return 0

@@ -3,9 +3,10 @@
     python3 -m pytest perfbench/test_smoke.py -q
 
 Checks that every workload runs and passes its correctness checks, that the
-emitted metric names and units are exactly BENCHMARK.json's, and that a
-deliberately wrong expected triple count shows up as a failed operation.
-Takes a few minutes: each case starts its own Spark session.
+emitted metric names and units are exactly BENCHMARK.json's, that the traced
+run attributes work to each layer, and that a deliberately wrong expected
+triple count shows up as a failed operation. Takes several minutes: each
+case starts its own Spark session.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ ROOT = os.path.dirname(HERE)
 
 with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
     SPEC = json.load(_f)
+WORKLOADS = [w["name"] for w in SPEC["workloads"]]
 
 
 def _run(workload: str, trace: int, *extra: str) -> dict:
@@ -38,7 +40,7 @@ def _units(kind: str) -> dict[str, str]:
     return {m["name"]: m["unit"] for m in SPEC[kind]}
 
 
-@pytest.mark.parametrize("workload", [w["name"] for w in SPEC["workloads"]])
+@pytest.mark.parametrize("workload", WORKLOADS)
 def test_end_to_end_metrics(workload):
     out = _run(workload, 0)
     assert out["correct"] and out["failed"] == 0 and out["attempted"] >= 1
@@ -46,12 +48,23 @@ def test_end_to_end_metrics(workload):
     assert all(m["value"] > 0 for m in out["metrics"].values())
 
 
-def test_per_layer_metrics_of_traced_run():
-    out = _run("link_join", 1, "--trace-out", os.path.join(ROOT, ".perfbench_work", "smoke.json"))
+@pytest.mark.parametrize("workload", WORKLOADS)
+def test_per_layer_metrics_of_traced_run(workload):
+    trace_out = os.path.join(ROOT, ".perfbench_work", f"smoke_{workload}.json")
+    out = _run(workload, 1, "--trace-out", trace_out)
     assert out["correct"]
     assert {n: m["unit"] for n, m in out["metrics"].items()} == _units("per_layer")
-    assert out["metrics"]["linking.path_join"]["value"] == 1.0
-    assert out["metrics"]["linking.jobs"]["value"] > 0
+    value = {n: m["value"] for n, m in out["metrics"].items()}
+    if workload == "build":
+        busy = ["extract.html", "extract.triples", "linking", "canonicalize", "catalog"]
+        assert value["linking.path_join"] == 0.0  # the broadcast path
+    else:
+        busy = [m["name"][: -len(".jobs")] for m in SPEC["per_layer"]
+                if m["name"].startswith("queries.") and m["name"].endswith(".jobs")]
+    assert all(value[f"{layer}.jobs"] > 0 for layer in busy), busy
+    assert value["trace.overhead_s"] > 0
+    with open(trace_out) as f:
+        assert json.load(f)["spans"]
 
 
 def test_wrong_expected_count_raises_fail_ratio():

@@ -20,6 +20,9 @@ Two kinds of entry point exist:
   the segment's layer; only the write's driver-side remainder (commit,
   listing) is charged to ``catalog``.
 
+The ``queries`` workload uses ``eager`` directly: each query and the
+shared edge-table build is one span, and therefore one layer, of its own.
+
 Spans are kept in memory and returned by ``report()``.
 """
 
@@ -30,7 +33,7 @@ import statistics
 import threading
 import time
 
-LAYERS = (
+PIPELINE_LAYERS = (
     "extract.html",
     "extract.triples",
     "linking",
@@ -81,11 +84,29 @@ def _clip(intervals, lo: float, hi: float) -> list[tuple[float, float]]:
     return [(max(s, lo), min(e, hi)) for s, e in intervals if e > lo and s < hi]
 
 
+def group_shuffle_write_bytes(sc, group: str) -> int:
+    """Shuffle bytes written by the finished stages of one job group."""
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    stage_ids = set()
+    for jid in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(jid)
+        stage_ids.update(info.stageIds if info else [])
+    total = 0
+    for sid in stage_ids:
+        try:
+            total += store.lastStageAttempt(sid).shuffleWriteBytes()
+        except Exception:  # stage skipped: never attempted
+            continue
+    return total
+
+
 class Tracer:
     """Records spans around the layer entry points of one traced run."""
 
-    def __init__(self, spark, run_id: str):
+    def __init__(self, spark, run_id: str, layers: tuple[str, ...]):
         self.spark = spark
+        self.layers = layers
         self.sc = spark.sparkContext
         self.run_id = run_id
         self.spans: list[dict] = []
@@ -93,6 +114,7 @@ class Tracer:
         self._local = threading.local()
         self._main_stack: list[dict] | None = None
         self._patches: list[tuple[object, str, object]] = []
+        self.overhead_s = 0.0  # time spent in the wrappers themselves
         self.link_paths: list[str] = []
         self.canon_branches: list[str] = []
 
@@ -147,6 +169,7 @@ class Tracer:
         def wrap(fn):
             @functools.wraps(fn)
             def inner(*args, **kwargs):
+                t0 = time.perf_counter()
                 stack = self._stack()
                 pending = self._close_segment(stack[-1]) if stack else None
                 span = self._new_span(name, layer, self._parent(stack))
@@ -157,9 +180,11 @@ class Tracer:
                 else:
                     self._set_group(span)
                 stack.append({"span": span, "segment": None})
+                self.overhead_s += time.perf_counter() - t0
                 try:
                     return fn(*args, **kwargs)
                 finally:
+                    t1 = time.perf_counter()
                     frame = stack.pop()
                     self._close_segment(frame)
                     span["end"] = time.time()
@@ -167,6 +192,7 @@ class Tracer:
                         self._set_group(stack[-1]["span"])
                     else:
                         self.sc.setJobGroup(f"perfbench-{self.run_id}-idle", "idle")
+                    self.overhead_s += time.perf_counter() - t1
 
             return inner
 
@@ -179,6 +205,7 @@ class Tracer:
         def wrap(fn):
             @functools.wraps(fn)
             def inner(*args, **kwargs):
+                t0 = time.perf_counter()
                 stack = self._stack()
                 if stack:
                     self._close_segment(stack[-1])
@@ -188,6 +215,7 @@ class Tracer:
                     stack[-1]["segment"] = seg
                 else:
                     seg["end"] = seg["start"]
+                self.overhead_s += time.perf_counter() - t0
                 return fn(*args, **kwargs)
 
             return inner
@@ -263,6 +291,7 @@ class Tracer:
         store = self.sc._jsc.sc().statusStore()
         by_group = {s["group"]: s for s in self.spans if s["charge_to"] is None}
         jobs: dict[int, dict] = {}
+        seen: set[int] = set()  # a stage reused by a later job counts once
         for group, span in by_group.items():
             for jid in tracker.getJobIdsForGroup(group):
                 jd = store.job(jid)
@@ -271,6 +300,9 @@ class Tracer:
                 info = tracker.getJobInfo(jid)
                 stages = []
                 for sid in info.stageIds if info else []:
+                    if sid in seen:
+                        continue
+                    seen.add(sid)
                     try:
                         sd = store.lastStageAttempt(sid)
                     except Exception:  # stage evicted or never attempted
@@ -331,7 +363,7 @@ class Tracer:
         for s in self.spans:
             if s["parent"] is not None:
                 children.setdefault(s["parent"], []).append((s["start"], s["end"]))
-        layer_wall = {layer: 0.0 for layer in LAYERS}
+        layer_wall = {layer: 0.0 for layer in self.layers}
         for s in self.spans:
             own = s["end"] - s["start"]
             s["self_s"] = own - _union(_clip(children.get(s["id"], []), s["start"], s["end"]))
@@ -353,7 +385,7 @@ class Tracer:
         layers: dict[str, dict] = {
             layer: {"wall_s": layer_wall[layer], "jobs": 0, "stages": 0,
                     "task_s": 0.0, "shuffle_mb": 0.0, "spill_mb": 0.0}
-            for layer in LAYERS
+            for layer in self.layers
         }
         for j in jobs.values():
             d = layers[j["span"]["layer"]]
@@ -375,19 +407,21 @@ class Tracer:
             _union(_clip([(j["start"], j["end"]) for j in jobs.values()], r["start"], r["end"]))
             for r in runs
         )
-        layers["pipeline"].update(
-            groups=len(groups),
-            group_p50_s=statistics.median(groups) if groups else 0.0,
-            group_max_s=max(groups) if groups else 0.0,
-            finalize_s=sum(fin),
-            driver_s=run_wall - busy,
-        )
+        if "pipeline" in layers:
+            layers["pipeline"].update(
+                groups=len(groups),
+                group_p50_s=statistics.median(groups) if groups else 0.0,
+                group_max_s=max(groups) if groups else 0.0,
+                finalize_s=sum(fin),
+                driver_s=run_wall - busy,
+            )
         self_by_name: dict[str, float] = {}
         for s in self.spans:
             self_by_name[s["name"]] = self_by_name.get(s["name"], 0.0) + s["self_s"]
         return {
             "layers": layers,
             "run_wall_s": run_wall,
+            "overhead_s": self.overhead_s,
             "self_s_by_span": self_by_name,
             "link_paths": self.link_paths,
             "canon_branches": self.canon_branches,
