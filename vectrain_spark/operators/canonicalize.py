@@ -22,26 +22,43 @@ DataFrame programs:
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Deduped edge sets at or under this count are solved with a driver-side
-# union-find instead of paying O(log n) star-contraction rounds, each a
-# full job submission (~0.4 s floor measured on local[32]) — the same
-# cost-based dispatch run_pipeline applies via pipeline.SMALL_GRAPH_EDGES
-# and strongly_connected_components applies via SCC_SMALL_GRAPH_EDGES.
-# Both paths emit the identical (id, canon) mapping (pytest-asserted);
-# the distributed star contraction remains the scale path.
-CC_SMALL_GRAPH_EDGES = int(
-    _os.environ.get("VECTRAIN_CC_SMALL_GRAPH_EDGES", "1000000")
-)
+# The one small-graph limit. Graphs whose distinct (src, dst) pairs number
+# at or under it are collected and solved driver-side (union-find for CC,
+# Tarjan for SCC, the layered sweep for Brandes) instead of paying one job
+# submission per distributed round (~0.4 s floor measured on local[32]);
+# the same count bounds the node-sized loop state that graph.py's
+# iterative joins broadcast. 1M pairs of long ids is tens of MB on the
+# driver. Both paths of every dispatch emit identical rows (tested); the
+# distributed path is the scale path.
+SMALL_GRAPH_ROWS = 1_000_000
+
+
+def collect_small_graph(
+    edges: DataFrame, limit: int | None = None
+) -> tuple[list[tuple] | None, DataFrame | None]:
+    """Checkpoint the distinct (src, dst) pairs of ``edges`` and count
+    them -> ``(pairs, None)`` with the pairs collected as Python tuples
+    and the checkpoint released when 0 < count <= ``limit`` (default
+    SMALL_GRAPH_ROWS), else ``(None, frame)`` with the checkpointed pairs
+    for the scale path, which the caller releases."""
+    from ..session import fresh_checkpoint, release_checkpoint
+
+    if limit is None:
+        limit = SMALL_GRAPH_ROWS
+    e_all = fresh_checkpoint(edges.select("src", "dst").distinct())
+    if not 0 < e_all.count() <= limit:
+        return None, e_all
+    pdf = e_all.toPandas()
+    release_checkpoint(e_all)
+    return list(zip(pdf["src"].tolist(), pdf["dst"].tolist())), None
 
 
 def _union_find_local(pairs) -> list[tuple]:
-    """Driver-side union-find over collected (src, dst) pairs -> one
-    (id, canon) tuple per touched node, canon = component minimum (the
+    """Driver-side union-find over (src, dst) pairs -> one (id, canon)
+    tuple per touched node, sorted by id, canon = component minimum (the
     min node stays root under union-by-min, exactly the star
     contraction's converged labeling)."""
     parent: dict = {}
@@ -59,7 +76,7 @@ def _union_find_local(pairs) -> list[tuple]:
                 parent[rd] = rs
             else:
                 parent[rs] = rd
-    return [(n, find(n)) for n in parent]
+    return [(n, find(n)) for n in sorted(parent)]
 
 
 def edges_from_aliases(aliases: DataFrame) -> DataFrame:
@@ -128,35 +145,29 @@ def connected_components(
     """(src, dst) undirected edges -> (id, canon) for every node, where
     canon = min node id in the component (roots map to themselves).
 
-    Cost-based dispatch (round-6): the deduped edge set is counted
-    first; at or under ``small_graph_max_edges`` (default
-    CC_SMALL_GRAPH_EDGES) the pairs are collected and solved with
-    driver-side union-find — identical mapping, none of the per-round
-    job-submission floor. The star contraction below remains the scale
-    path."""
-    if small_graph_max_edges is None:
-        small_graph_max_edges = CC_SMALL_GRAPH_EDGES
+    Small-graph dispatch (:func:`collect_small_graph`): at or under
+    ``small_graph_max_edges`` (default SMALL_GRAPH_ROWS) distinct pairs
+    the graph is solved with driver-side union-find — identical mapping,
+    none of the per-round job-submission floor. The star contraction
+    below remains the scale path."""
     from ..session import fresh_checkpoint, release_checkpoint
 
-    e_all = fresh_checkpoint(edges.select("src", "dst").distinct())
-    n_pairs = e_all.count()
-    if 0 < n_pairs <= small_graph_max_edges:
-        pdf = e_all.toPandas()
-        release_checkpoint(e_all)
-        rows = _union_find_local(
-            list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-        )
+    pairs, e_all = collect_small_graph(edges, small_graph_max_edges)
+    if pairs is not None:
         from pyspark.sql import types as T
 
         src_type = edges.schema["src"].dataType
         schema = T.StructType(
             [T.StructField("id", src_type), T.StructField("canon", src_type)]
         )
-        return edges.sparkSession.createDataFrame(rows, schema)
-    nodes = e_all.select(F.col("src").alias("id")).unionAll(
-        e_all.select(F.col("dst").alias("id"))
-    ).distinct()
+        return edges.sparkSession.createDataFrame(_union_find_local(pairs), schema)
+    nodes = fresh_checkpoint(
+        e_all.select(F.col("src").alias("id"))
+        .unionAll(e_all.select(F.col("dst").alias("id")))
+        .distinct()
+    )
     e = e_all.filter(F.col("src") != F.col("dst")).localCheckpoint()
+    release_checkpoint(e_all)
     prev = None
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint()

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .canonicalize import SMALL_GRAPH_ROWS, collect_small_graph
+
 DAMPING = 0.85
 N_ITER = 5
 ITER_ROUND = 8
@@ -76,7 +78,7 @@ def _materialize(*dfs: DataFrame) -> list[int]:
 def _bc_if(cond: bool, df: DataFrame) -> DataFrame:
     """Size-adaptive broadcast hint (guide §3.1): node-sized loop state
     frames ride broadcast joins when the measured node count fits
-    ITER_BCAST_MAX_ROWS — a stats-reset checkpoint estimates at the
+    SMALL_GRAPH_ROWS — a stats-reset checkpoint estimates at the
     engine default, so the planner would otherwise sort-merge 347-row
     rank tables against the cached edge list every iteration. Identical
     results either way; bigger graphs keep the keyed shuffle plan."""
@@ -128,7 +130,7 @@ def pagerank(
         .persist()
     )
     n_nodes, _ = _materialize(nodes, outdeg)  # nodes' pass also fills e's cache
-    small = n_nodes <= ITER_BCAST_MAX_ROWS
+    small = n_nodes <= SMALL_GRAPH_ROWS
     ranks = nodes.select("id", F.lit(1.0).alias("rank"))
     base = 1.0 - damping
     # each round references the previous ranks exactly ONCE, so the whole
@@ -249,7 +251,7 @@ def katz_centrality(
         .persist()
     )
     (n_nodes,) = _materialize(nodes)  # nodes' pass also populates e's cache
-    small = n_nodes <= ITER_BCAST_MAX_ROWS
+    small = n_nodes <= SMALL_GRAPH_ROWS
     x = nodes.select("id", F.lit(beta).alias("katz"))
     for _ in range(n_iter):
         contribs = (
@@ -1176,7 +1178,7 @@ def hits(edges: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
         .persist()
     )
     (n_nodes,) = _materialize(nodes)  # nodes' pass also populates e's cache
-    small = n_nodes <= ITER_BCAST_MAX_ROWS
+    small = n_nodes <= SMALL_GRAPH_ROWS
     hubs = nodes.select("id", F.lit(1.0).alias("hub"))
     auths = None
     # per half-round the raw score frame feeds BOTH the L1 total and the
@@ -1336,7 +1338,7 @@ def label_propagation(pairs: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     ).persist()
     nodes = sym.select(F.col("v").alias("id")).distinct().persist()
     (n_nodes,) = _materialize(nodes)  # nodes' pass also populates sym's cache
-    small = n_nodes <= ITER_BCAST_MAX_ROWS
+    small = n_nodes <= SMALL_GRAPH_ROWS
     labels = nodes.select("id", F.col("id").alias("label"))
     from pyspark.sql import Window
 
@@ -1701,14 +1703,16 @@ def shortest_paths(
     )
     e = e.repartition(parts, "src").persist()
     (n_e,) = _materialize(e)
-    small = n_e <= ITER_BCAST_MAX_ROWS
+    # dist holds (seed, reached node) rows, and one seed reaches at most
+    # n_e + 1 nodes: broadcast it only when that bound fits
+    small = seeds.count() * (n_e + 1) <= SMALL_GRAPH_ROWS
     dist = seeds.select(
         F.col("seed"), F.col("seed").alias("id"), F.lit(0.0).alias("dist")
     )
     # each round references the previous dist TWICE (relax + carry), so
     # every level gets a lazy persist — deduped by the cache manager
     # inside the single final job (round-6: was one eager checkpoint job
-    # per round); the frontier side broadcasts when the graph is small
+    # per round); the dist side broadcasts under the bound above
     levels: list[DataFrame] = []
     for _ in range(rounds):
         relaxed = (
@@ -1838,7 +1842,7 @@ def personalized_pagerank(
         F.when(F.col("_s"), F.lit(base_mass)).otherwise(F.lit(0.0)).alias("b"),
     ).persist()
     n_nodes, _, _ = _materialize(nodes, outdeg, base)  # also fills e's cache
-    small = n_nodes <= ITER_BCAST_MAX_ROWS
+    small = n_nodes <= SMALL_GRAPH_ROWS
     ranks = base.select("id", F.col("b").alias("rank"))
     for _ in range(n_iter):
         contribs = (
@@ -3303,21 +3307,14 @@ SELECT a, b, s FROM s{rounds} ORDER BY s DESC, a ASC, b ASC LIMIT {k}"""
 
 FB_MAX_ROUNDS = 256  # safety cap on any single fixpoint loop below
 
-# Size-adaptive broadcast for the per-round joins of the FB/BFS loops
-# below (guide-§3.1 shape: hint the side you KNOW is small; the engine's
-# own estimate for a stats-reset checkpoint is the conservative default,
-# so it would never broadcast on its own). Node/frontier frames at or
-# under this row count ride a broadcast join — zero exchanges on the
-# edge side — while bigger graphs keep the shuffle plan. Row counts come
-# from the loop's own drain-check counts (no extra jobs). The default is
-# sized for executor memory (~2M rows x ~30 B = tens of MB); production
-# clusters tune it via the environment, the algorithm is identical on
-# both paths.
-import os as _os
-
-ITER_BCAST_MAX_ROWS = int(
-    _os.environ.get("VECTRAIN_ITER_BCAST_MAX_ROWS", "2000000")
-)
+# The per-round joins of the FB/BFS loops below broadcast their
+# node/frontier side at or under SMALL_GRAPH_ROWS rows (guide-§3.1 shape:
+# hint the side you KNOW is small; the engine's own estimate for a
+# stats-reset checkpoint is the conservative default, so it would never
+# broadcast on its own) — zero exchanges on the edge side — while bigger
+# graphs keep the shuffle plan. Row counts come from the loop's own
+# drain-check counts (no extra jobs); the algorithm is identical on both
+# paths.
 
 
 def _fckpt(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -3381,7 +3378,7 @@ def _reach_keyed(
     state is released as soon as its replacement has materialized
     (round-6: retained blocks were VERDICT r5's kg_scc 5.3x constant
     factor). The drain counts double as size signals: frontier and
-    reached sets at or under ITER_BCAST_MAX_ROWS ride broadcast joins,
+    reached sets at or under SMALL_GRAPH_ROWS ride broadcast joins,
     so the small-graph rounds touch the edge table without a single
     exchange — bigger graphs keep the keyed shuffle plan unchanged."""
     reached = _fckpt(seeds.select("part", "node").distinct())
@@ -3393,10 +3390,10 @@ def _reach_keyed(
         lhs = (frontier if frontier is not None else reached).withColumnRenamed(
             "node", "src"
         )
-        if n_frontier <= ITER_BCAST_MAX_ROWS:
+        if n_frontier <= SMALL_GRAPH_ROWS:
             lhs = F.broadcast(lhs)
         anti = reached
-        if n_reached <= ITER_BCAST_MAX_ROWS:
+        if n_reached <= SMALL_GRAPH_ROWS:
             anti = F.broadcast(anti)
         step = _fckpt(
             lhs.join(edges, ["part", "src"])
@@ -3456,7 +3453,14 @@ def _scc_colors(
     shuffle rounds. Lazy multi-round blocks were measured 2x slower here
     (same finding as :func:`_reach_keyed`), so every round is one short
     job, and each round's superseded color table is released the moment
-    its replacement materializes."""
+    its replacement materializes.
+
+    Precondition: every endpoint of an edge in ``edges`` is in ``nodes``.
+    Candidates are not joined back to the node set, so an edge target
+    outside ``nodes`` would enter the color table as a phantom row (and
+    the convergence sum with it). Both call sites in
+    :func:`strongly_connected_components` pass edges between remaining
+    nodes only."""
     colors = _fckpt(
         nodes.select(
             "node", F.xxhash64("node").alias("ch"), F.col("node").alias("cn")
@@ -3478,7 +3482,7 @@ def _scc_colors(
         F.count(F.lit(1)).alias("n"), F.count_distinct(F.col("ch")).alias("d"), _dec
     ).collect()[0]
     n_nodes, injective, prev_s = setup["n"], setup["d"] == setup["n"], setup["s"]
-    small = n_nodes <= ITER_BCAST_MAX_ROWS
+    small = n_nodes <= SMALL_GRAPH_ROWS
     for _ in range(max_rounds):
         rhs = colors.select(F.col("node").alias("src"), "ch", "cn")
         via_rhs = colors.select(F.col("node").alias("via"), "ch", "cn")
@@ -3518,18 +3522,6 @@ def _scc_colors(
         _release(colors)
         colors = new_colors
     raise RuntimeError(f"color propagation open after {max_rounds} rounds")
-
-
-# Deduped edge sets at or under this count are solved with driver-side
-# iterative Tarjan instead of paying dozens of fixpoint shuffle rounds —
-# the same cost-based dispatch the pipeline applies to connected
-# components (pipeline.SMALL_GRAPH_EDGES): both paths produce the
-# identical (node, scc_id, scc_size) rows (pytest-asserted), the
-# distributed coloring remains the scale path, and the threshold is a
-# conservative driver-memory bound (1M edge pairs ~ tens of MB).
-SCC_SMALL_GRAPH_EDGES = int(
-    _os.environ.get("VECTRAIN_SCC_SMALL_GRAPH_EDGES", "1000000")
-)
 
 
 def _tarjan_scc_local(pairs) -> list[tuple]:
@@ -3631,24 +3623,17 @@ def strongly_connected_components(
     definition — identical whenever component diameters fit the cap);
     the coloring itself is exact and loop-guarded by FB_MAX_ROUNDS.
 
-    Cost-based dispatch (round-6): the deduped edge set is counted
-    first; at or under ``small_graph_max_edges`` (default
-    SCC_SMALL_GRAPH_EDGES) the pairs are collected and solved with
-    driver-side iterative Tarjan — on this engine every fixpoint round
-    is a full job submission, so a ~30-round coloring over a graph that
-    fits in one task's memory pays seconds of pure scheduling for
-    milliseconds of compute. Same dispatch shape (and default
-    threshold) as the pipeline's connected-components path
-    (pipeline.SMALL_GRAPH_EDGES); both paths emit identical rows.
+    Small-graph dispatch (:func:`collect_small_graph
+    <..canonicalize.collect_small_graph>`, shared with connected
+    components): at or under ``small_graph_max_edges`` (default
+    SMALL_GRAPH_ROWS) distinct pairs the graph is solved with driver-side
+    iterative Tarjan — on this engine every fixpoint round is a full job
+    submission, so a ~30-round coloring over a graph that fits in one
+    task's memory pays seconds of pure scheduling for milliseconds of
+    compute. Both paths emit identical rows.
     """
-    if small_graph_max_edges is None:
-        small_graph_max_edges = SCC_SMALL_GRAPH_EDGES
-    e_all = _fckpt(edges.select("src", "dst").distinct())
-    n_pairs = e_all.count()
-    if 0 < n_pairs <= small_graph_max_edges:
-        pdf = e_all.toPandas()
-        _release(e_all)
-        pairs = list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+    pairs, e_all = collect_small_graph(edges, small_graph_max_edges)
+    if pairs is not None:
         rows = _tarjan_scc_local(pairs)
         from pyspark.sql import types as T
 
@@ -3925,28 +3910,27 @@ def betweenness_sampled(
     node pairs is exactly zero, so output is restricted to seed-reached
     nodes (the oracle mirrors this).
 
-    Cost-based dispatch (round-6, same shape as
+    Small-graph dispatch (the same :func:`collect_small_graph
+    <..canonicalize.collect_small_graph>` as
     :func:`strongly_connected_components`): at or under
-    SCC_SMALL_GRAPH_EDGES deduped edges the layered sweep runs
-    driver-side — identical layer structure, exact long sigmas, and the
-    same per-layer 6-dp delta rounding that already pins the Spark and
-    DuckDB engines to common doubles — instead of paying ~2 job
-    submissions per BFS layer. The batched dataflow below remains the
-    scale path."""
-    from ..session import fresh_checkpoint, release_checkpoint
+    ``small_graph_max_edges`` (default SMALL_GRAPH_ROWS) distinct pairs
+    the layered sweep runs driver-side — identical layer structure,
+    exact long sigmas, and the same per-layer 6-dp delta rounding that
+    already pins the Spark and DuckDB engines to common doubles — instead
+    of paying ~2 job submissions per BFS layer. The batched dataflow
+    below remains the scale path.
 
-    if small_graph_max_edges is None:
-        small_graph_max_edges = SCC_SMALL_GRAPH_EDGES
-    e_all = fresh_checkpoint(edges.select("src", "dst").distinct())
-    n_pairs = e_all.count()
-    if 0 < n_pairs <= small_graph_max_edges:
-        pdf = e_all.toPandas()
-        release_checkpoint(e_all)
+    Contract: the two branches return the same node set, and their
+    values agree within 1e-6, one unit of the 6-dp rounding — summation
+    order at an exact .xxxxxx5 boundary is the one freedom. With unique
+    shortest paths (sigma = 1, integer deltas) they are bit-identical."""
+    pairs, e = collect_small_graph(edges, small_graph_max_edges)
+    if pairs is not None:
         seed_vals = sorted(
             {r[0] for r in seeds.select("seed").distinct().collect()}
         )
         adj: dict = {}
-        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+        for s, d in pairs:
             adj.setdefault(s, []).append(d)
         total: dict = {}
         for seed in seed_vals:
@@ -3997,7 +3981,6 @@ def betweenness_sampled(
         )
         rows = [(v, round(dv, 6)) for v, dv in total.items()]
         return edges.sparkSession.createDataFrame(rows, schema)
-    e = e_all
     cur = (
         seeds.select(
             F.col("seed"),
@@ -4062,6 +4045,7 @@ def betweenness_sampled(
             .localCheckpoint()
         )
         acc.append(dl)
+    _release(e)  # every layer above is an eager checkpoint
     all_d = acc[0]
     for part in acc[1:]:
         all_d = all_d.unionByName(part)

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog, GroupManifest
 from .operators.canonicalize import (
+    _union_find_local,
     apply_canonical,
     connected_components,
     dedup_triples,
@@ -118,33 +119,6 @@ class InjectedFailure(RuntimeError):
 SINK_PARTITIONS = 16
 
 
-# Below this edge count the entity graph is collected and solved with
-# driver-side union-find (exactly the oracle algorithm) instead of paying
-# ~2 shuffles x O(log n) rounds of distributed star contraction. Both paths
-# produce the identical mapping (tested); the distributed path is the scale
-# path for dictionary graphs that don't fit one machine.
-SMALL_GRAPH_EDGES = 1_000_000
-
-
-def _union_find(edge_iter) -> list[tuple[int, int]]:
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s, d in edge_iter:
-        rs, rd = find(int(s)), find(int(d))
-        if rs != rd:
-            if rs < rd:
-                parent[rd] = rs
-            else:
-                parent[rs] = rd
-    return [(n, find(n)) for n in sorted(parent)]
-
-
 def _canonical_mapping(
     spark: SparkSession,
     aliases_df: DataFrame,
@@ -156,41 +130,31 @@ def _canonical_mapping(
     Deterministic in the alias dictionary alone, so it is computed once per
     run and cached as a replace snapshot — resume reuses it bit-identically.
     When the dictionary was already collected for the broadcast linker
-    (``alias_pdf``), the shared-alias edges come straight out of pandas —
-    no extra Spark jobs in the serial setup phase. The distributed
-    large-star/small-star path remains the scale route for dictionaries
-    whose merge graph exceeds SMALL_GRAPH_EDGES.
+    (``alias_pdf``), the shared-alias edges come straight out of pandas into
+    the driver-side union-find — no extra Spark jobs in the serial setup
+    phase. Otherwise :func:`connected_components` solves the alias edges and
+    picks its own path (driver union-find up to SMALL_GRAPH_ROWS distinct
+    pairs, distributed star contraction above).
     """
     import pandas as pd
 
     if cat.exists("entity_canon"):
         return cat.read(spark, "entity_canon")
-    if alias_pdf is not None:
-        amin = alias_pdf.groupby("alias")["entity_id"].transform("min")
-        mask = alias_pdf["entity_id"] != amin
-        rows = _union_find(zip(alias_pdf.loc[mask, "entity_id"], amin[mask]))
-        mapping = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["id", "canon"]).astype("int64")
-        )
-    else:
-        edges = edges_from_aliases(aliases_df).persist()
-        if edges.count() <= SMALL_GRAPH_EDGES:
-            pdf = edges.toPandas()
-            rows = _union_find(zip(pdf["src"], pdf["dst"]))
-            mapping = spark.createDataFrame(
-                pd.DataFrame(rows, columns=["id", "canon"]).astype("int64")
-            )
-            cat.write("entity_canon", mapping, mode="replace")
-            edges.unpersist()
-            return mapping  # tiny local frame; serves this run directly
-        # distributed CC path: commit FIRST, then hand every consumer the
-        # committed parquet — returning the lazy CC plan would re-derive
-        # nodes from the alias table on each of the 2-per-group mapping
-        # joins instead of scanning the already-materialized snapshot
-        mapping = connected_components(edges)
+    if alias_pdf is None:
+        # commit FIRST, then hand every consumer the committed parquet —
+        # returning the lazy CC plan would re-derive it from the alias
+        # table on each of the 2-per-group mapping joins
+        mapping = connected_components(edges_from_aliases(aliases_df))
         cat.write("entity_canon", mapping, mode="replace")
-        edges.unpersist()
         return cat.read(spark, "entity_canon")
+    amin = alias_pdf.groupby("alias")["entity_id"].transform("min")
+    mask = alias_pdf["entity_id"] != amin
+    rows = _union_find_local(
+        zip(alias_pdf.loc[mask, "entity_id"].tolist(), amin[mask].tolist())
+    )
+    mapping = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["id", "canon"]).astype("int64")
+    )
     cat.write("entity_canon", mapping, mode="replace")
     return mapping  # written for resume; the in-memory frame serves this run
 
