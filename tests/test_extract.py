@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from vectrain_spark.operators.extract import (
     extract_pages,
     extract_triples_df,
@@ -59,7 +61,7 @@ def test_spark_text_byte_identical(spark, pages_df, golden):
 
 
 def test_spark_triples_match_oracle(spark, pages_df, golden):
-    good, _ = split_quarantine(extract_pages(pages_df))
+    good, _ = split_quarantine(extract_pages(pages_df, triples=True))
     tri = extract_triples_df(good)
     got = set(map(tuple, tri.select("url", "subj", "pred", "obj").toPandas().values))
     want = set(map(tuple, golden["triples"][["url", "subj", "pred", "obj"]].values))
@@ -67,10 +69,34 @@ def test_spark_triples_match_oracle(spark, pages_df, golden):
     assert p == 1.0 and r == 1.0
 
 
+def test_fused_pass_triples_match_textops_per_url(spark, pages_df):
+    """The nested column of the fused pass is textops.extract_triples of
+    the text the same pass extracted, per url; error rows carry none, and
+    the text-only pass keeps its old columns."""
+    ext = extract_pages(pages_df, triples=True)
+    rows = ext.select("url", "text", "error", "triples").collect()
+    n_err = 0
+    for r in rows:
+        got = [(t.sent_idx, t.subj, t.pred, t.obj) for t in r["triples"]]
+        want = [(t.sent_idx, t.subj, t.pred, t.obj) for t in extract_triples(r["text"])]
+        assert got == want, r["url"]
+        if r["error"] is not None:
+            n_err += 1
+            assert got == [], r["url"]
+    assert n_err > 0 and len(rows) > n_err
+    assert ext.columns == extract_pages(pages_df).columns + ["triples"]
+
+
+def test_extract_triples_df_requires_fused_pass(spark, pages_df):
+    good, _ = split_quarantine(extract_pages(pages_df))
+    with pytest.raises(ValueError, match="triples=True"):
+        extract_triples_df(good)
+
+
 def test_generator_truth_recovered(spark, pages_df, small_fixture):
     """Pipeline recovers exactly the generator-planted relations."""
     _, truth, _ = small_fixture
-    good, _ = split_quarantine(extract_pages(pages_df))
+    good, _ = split_quarantine(extract_pages(pages_df, triples=True))
     tri = extract_triples_df(good)
     got = set(map(tuple, tri.select("url", "subj", "pred", "obj").toPandas().values))
     want = set(map(tuple, truth[["url", "subj", "pred", "obj"]].values))

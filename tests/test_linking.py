@@ -43,7 +43,7 @@ def test_lsh_identical_vectors_share_all_bands():
 
 def test_link_mentions_matches_oracle(spark, pages_df, aliases_df, small_fixture, golden):
     _, _, aliases = small_fixture
-    good, _ = split_quarantine(extract_pages(pages_df))
+    good, _ = split_quarantine(extract_pages(pages_df, triples=True))
     tri = extract_triples_df(good)
     surfaces = mention_surfaces(tri)
     idx = build_alias_index(aliases)
@@ -116,7 +116,7 @@ def test_broadcast_and_join_paths_give_identical_links(
     from vectrain_spark.operators.linking import link_mentions_join_full, make_linker
 
     _, _, aliases = small_fixture
-    good, _ = split_quarantine(extract_pages(pages_df))
+    good, _ = split_quarantine(extract_pages(pages_df, triples=True))
     surfaces = mention_surfaces(extract_triples_df(good)).unionByName(
         spark.createDataFrame(
             pd.DataFrame({"surface": ["zzqx unlinkable 99", "wwvv nodict 42"]})

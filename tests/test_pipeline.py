@@ -3,6 +3,9 @@ crash-resume (Z3), idempotent re-run, lineage (Z2)."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 
 from vectrain_spark.catalog import Catalog
@@ -66,6 +69,33 @@ def test_lineage_accounts_for_every_page(spark, full_run, small_fixture):
     }
     tri = cat.read(spark, "triples")
     assert lin["triples"].sum() == tri.count()
+
+
+def test_extracted_commit_has_no_triples_column(spark, full_run):
+    """The fused pass's nested triples never reach the staged table."""
+    root, _ = full_run
+    cols = Catalog(root).read(spark, "extracted").columns
+    assert "triples" not in cols
+    assert {"url", "text", "error", "part_id", "group_id"} <= set(cols)
+
+
+def test_run_releases_caches_and_sizes_sink_files(spark, pages_df, aliases_df, tmp_path):
+    """A run leaves no persisted RDD behind (the fused-pass cache and the
+    linker/finalize checkpoints are all released), and each group's
+    `triples` append is a handful of files sized from its data, not one
+    per fixed sink partition."""
+    jsc = spark.sparkContext._jsc
+    pages_df.count()  # fill the session fixtures' own caches first
+    aliases_df.count()
+    before = jsc.getPersistentRDDs().size()
+    root = str(tmp_path / "kg")
+    run_pipeline(spark, pages_df, aliases_df, root, PipelineConfig(n_groups=2))
+    assert jsc.getPersistentRDDs().size() == before
+    dirs = Catalog(root).snapshots("triples")[-1]["data_dirs"]
+    assert len(dirs) == 2
+    for d in dirs:
+        n_files = len(glob.glob(os.path.join(d, "*.parquet")))
+        assert 1 <= n_files <= 2, (d, n_files)
 
 
 def test_crash_resume_equals_uninterrupted(

@@ -30,11 +30,14 @@ def test_extract_prunes_columns(spark, pages_df):
     ext = extract_pages(pages_df)
     plan = _plan(ext)
     assert "html" in plan
-    # downstream triple extraction needs only url/text/part_id: the
-    # extract->triples chain is a single pipelined stage with no Exchange
-    good, _ = split_quarantine(ext)
+    # triples come out of the SAME Arrow pass as the text and are exploded
+    # in the JVM: the extract->triples chain is one Python map node in a
+    # single pipelined stage with no Exchange
+    good, _ = split_quarantine(extract_pages(pages_df, triples=True))
     tri_plan = _plan(extract_triples_df(good))
     assert "Exchange" not in tri_plan, tri_plan
+    assert tri_plan.count("MapInArrow") == 1, tri_plan
+    assert "Generate inline" in tri_plan, tri_plan
 
 
 def test_scan_pushdown_on_parquet(spark):

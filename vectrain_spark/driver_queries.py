@@ -132,13 +132,13 @@ def q_kg_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
+    good, _ = split_quarantine(extract_pages(pages, triples=True))
     return extract_triples_df(good).select("url", "subj", "pred", "obj")
 
 
 def q_kg_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
+    good, _ = split_quarantine(extract_pages(pages, triples=True))
     tri = extract_triples_df(good)
     idx = build_alias_index(corpus_aliases(spark).toPandas())
     return link_mentions(spark, mention_surfaces(tri), idx).select(
@@ -156,7 +156,7 @@ def q_kg_link_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.linking import link_mentions_join_full
 
     pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
+    good, _ = split_quarantine(extract_pages(pages, triples=True))
     tri = extract_triples_df(good)
     surfaces = (
         mention_surfaces(tri).select(F.lower(F.col("surface")).alias("surface")).distinct()
@@ -178,7 +178,7 @@ def q_kg_link_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.linking import make_linker
 
     pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
+    good, _ = split_quarantine(extract_pages(pages, triples=True))
     surfaces = mention_surfaces(extract_triples_df(good))
     aliases = corpus_aliases(spark)
     n = aliases.count()
@@ -195,7 +195,7 @@ def q_kg_link_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
+    good, _ = split_quarantine(extract_pages(pages, triples=True))
     tri = extract_triples_df(good)
     aliases = corpus_aliases(spark)
     idx = build_alias_index(aliases.toPandas())
@@ -283,7 +283,7 @@ def q_kg_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalized triples; the evidence cap keeps hub facts from building
     unbounded arrays (slice after sort_array, all JVM)."""
     pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
+    good, _ = split_quarantine(extract_pages(pages, triples=True))
     tri = extract_triples_df(good)
     aliases = corpus_aliases(spark)
     idx = build_alias_index(aliases.toPandas())
@@ -5190,7 +5190,7 @@ def q_kg_fact_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for d, ts in crawls:
         good, _ = split_quarantine(
-            extract_pages(pages_from_documents(d, warc_ts=ts))
+            extract_pages(pages_from_documents(d, warc_ts=ts), triples=True)
         )
         parts.append(
             extract_triples_df(good)
@@ -7464,7 +7464,7 @@ def q_kg_fact_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.fusion import fuse_facts
 
     pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
+    good, _ = split_quarantine(extract_pages(pages, triples=True))
     tri = extract_triples_df(good)
     aliases = corpus_aliases(spark)
     idx = build_alias_index(aliases.toPandas())
@@ -8711,7 +8711,7 @@ def q_kg_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for d, ts in crawls:
         good, _ = split_quarantine(
-            extract_pages(pages_from_documents(d, warc_ts=ts))
+            extract_pages(pages_from_documents(d, warc_ts=ts), triples=True)
         )
         parts.append(
             extract_triples_df(good)
@@ -9356,7 +9356,7 @@ def q_kg_link_costed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.linking import make_costed_linker
 
     pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
+    good, _ = split_quarantine(extract_pages(pages, triples=True))
     surfaces = mention_surfaces(extract_triples_df(good))
     linker, strategy, _info = make_costed_linker(
         spark, surfaces, corpus_aliases(spark)

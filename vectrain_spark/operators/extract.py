@@ -1,16 +1,19 @@
 """X2/X3/X4 — boilerplate strip, quarantine gate, triple extraction.
 
-Spark-first layout: both stages are narrow ``mapInArrow`` transformations
-(Arrow-batched, no per-row Python at the plan level), so Catalyst pipelines
-scan -> extract -> explode-triples inside ONE task with no shuffle. The
-scalar rules live in textops.py and are shared verbatim with the oracle —
-that is what makes the byte-identity invariant hold by construction.
+Spark-first layout: ONE narrow ``mapInArrow`` pass (Arrow-batched, no
+per-row Python at the plan level) extracts the text and, on request, the
+triples of that same text as a nested ``triples`` column; the explode to
+one row per triple is a JVM ``inline``. Catalyst pipelines scan -> extract
+-> explode inside ONE task with no shuffle, and every page crosses the
+Python boundary exactly once. The scalar rules live in textops.py and are
+shared verbatim with the oracle — that is what makes the byte-identity
+invariant hold by construction.
 
-Round-6 boundary optimization (guide §4.2): the stages consume raw Arrow
+Round-6 boundary optimization (guide §4.2): the pass consumes raw Arrow
 record batches instead of pandas frames — pass-through columns (url,
 warc_ts, lang, part_id) are re-emitted as the INPUT arrays, zero-copy, so
 the only bytes that ever cross into Python objects are the html column in
-(and text/error out). The pandas round-trip previously converted every
+(and text/error/triples out). The pandas round-trip previously converted every
 column both ways per batch; measured ~20% off the whole extract stage at
 bench scale.
 
@@ -40,10 +43,30 @@ EXTRACT_SCHEMA = (
     "part_id int, html_bytes long, wall_share double"
 )
 
-TRIPLES_SCHEMA = "url string, sent_idx int, subj string, pred string, obj string, part_id int"
+# nested per-page triples, emitted by the fused pass (extract_pages(triples=True))
+TRIPLES_COLUMN = "triples array<struct<sent_idx:int,subj:string,pred:string,obj:string>>"
+_TRIPLE_FIELDS = ("sent_idx", "subj", "pred", "obj")
 
 
-def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _triples_array(texts: list[str | None]) -> pa.ListArray:
+    """``textops.extract_triples`` of each text as one list<struct> array
+    (empty list for a null text, i.e. an error row)."""
+    offsets = [0]
+    flat: list = []
+    for text in texts:
+        flat.extend(extract_triples(text))
+        offsets.append(len(flat))
+    values = pa.StructArray.from_arrays(
+        [pa.array([t.sent_idx for t in flat], pa.int32())]
+        + [pa.array([getattr(t, f) for t in flat], pa.string()) for f in _TRIPLE_FIELDS[1:]],
+        names=list(_TRIPLE_FIELDS),
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
+
+
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch], triples: bool = False
+) -> Iterator[pa.RecordBatch]:
     for rb in batches:
         t0 = time.time()
         idx = {name: i for i, name in enumerate(rb.schema.names)}
@@ -55,6 +78,7 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
             texts.append(text)
             errs.append(err)
             nbytes.append(0 if html is None else len(html))
+        extra = [_triples_array(texts)] if triples else []
         wall = time.time() - t0
         n = max(rb.num_rows, 1)
         yield pa.record_batch(
@@ -69,6 +93,7 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
                 # per-row share of batch wall time: summing over a partition's
                 # rows reconstructs the partition's exact extract wall time (Z2)
                 pa.array([wall / n] * rb.num_rows, pa.float64()),
+                *extra,
             ],
             names=[
                 "url",
@@ -79,21 +104,38 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
                 "part_id",
                 "html_bytes",
                 "wall_share",
+                *(["triples"] if triples else []),
             ],
         )
 
 
-def extract_pages(pages: DataFrame) -> DataFrame:
+def _extract_batches_with_triples(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    return _extract_batches(batches, triples=True)
+
+
+def extract_pages(pages: DataFrame, triples: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, lang, ...) -> one row per page with
     extracted ``text`` or non-null ``error``.
 
-    ``part_id``/``batch_wall`` feed the per-partition lineage rows (Z2).
+    ``triples=True`` adds the nested ``triples`` column (see
+    :data:`TRIPLES_COLUMN`): ``textops.extract_triples`` of the text the
+    same Arrow pass just extracted, empty for error rows. Only callers that
+    go on to :func:`extract_triples_df` should ask for it — it roughly
+    doubles the pass's CPU.
+
+    ``part_id``/``wall_share`` feed the per-partition lineage rows (Z2).
     Column pruning: only (url, warc_ts, html, lang) are read — the parquet
     scan never materializes other columns.
     """
     src = pages.select("url", "warc_ts", "html", "lang").withColumn(
         "part_id", F.spark_partition_id()
     )
+    if triples:
+        return src.mapInArrow(
+            _extract_batches_with_triples, schema=f"{EXTRACT_SCHEMA}, {TRIPLES_COLUMN}"
+        )
     return src.mapInArrow(_extract_batches, schema=EXTRACT_SCHEMA)
 
 
@@ -106,47 +148,16 @@ def split_quarantine(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:
     return good, quarantine
 
 
-def _triples_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for rb in batches:
-        idx = {name: i for i, name in enumerate(rb.schema.names)}
-        urls: list[str] = []
-        sent_idx: list[int] = []
-        subj: list[str] = []
-        pred: list[str] = []
-        obj: list[str] = []
-        parts: list[int] = []
-        for url, text, part in zip(
-            rb.column(idx["url"]).to_pylist(),
-            rb.column(idx["text"]).to_pylist(),
-            rb.column(idx["part_id"]).to_pylist(),
-        ):
-            for t in extract_triples(text):
-                urls.append(url)
-                sent_idx.append(t.sent_idx)
-                subj.append(t.subj)
-                pred.append(t.pred)
-                obj.append(t.obj)
-                parts.append(part)
-        yield pa.record_batch(
-            [
-                pa.array(urls, pa.string()),
-                pa.array(sent_idx, pa.int32()),
-                pa.array(subj, pa.string()),
-                pa.array(pred, pa.string()),
-                pa.array(obj, pa.string()),
-                pa.array(parts, pa.int32()),
-            ],
-            names=["url", "sent_idx", "subj", "pred", "obj", "part_id"],
-        )
-
-
 def extract_triples_df(good: DataFrame) -> DataFrame:
-    """(url, text, part_id) -> exploded (url, sent_idx, subj, pred, obj, part_id).
+    """Output of ``extract_pages(..., triples=True)`` ->
+    (url, sent_idx, subj, pred, obj, part_id), one row per triple.
 
-    The explode happens inside the Arrow batch (one output frame per input
-    batch), so no JVM-side explode/shuffle is needed and the stage stays
-    fused with extraction. part_id is carried through for lineage (Z2).
+    A JVM ``inline`` of the nested column: no second Python pass and no
+    shuffle, so the stage stays fused with extraction. part_id is carried
+    through for lineage (Z2).
     """
-    return good.select("url", "text", "part_id").mapInArrow(
-        _triples_batches, schema=TRIPLES_SCHEMA
+    if "triples" not in good.columns:
+        raise ValueError("extract_triples_df needs extract_pages(..., triples=True)")
+    return good.select("url", "part_id", F.inline("triples")).select(
+        "url", *_TRIPLE_FIELDS, "part_id"
     )

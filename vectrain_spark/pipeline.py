@@ -8,18 +8,21 @@ Catalyst plan):
     pages (bucketed by xxhash64(url) into n_groups resume units)
       └─ per pending group (at cluster scale each group is a full
          partition-batch, the unit of checkpoint commit; two commits):
-           1. stage `extracted` (Arrow UDF pass: html -> text/error),
-              columnar on disk — bounds executor memory at any group size
-           2. triples (Arrow UDF over staged text, fused with the scan)
+           1. ONE Arrow pass (html -> text/error + nested triples of that
+              text), persisted; appending `extracted` (the pass minus its
+              triples column) fills the cache
+           2. triples (JVM explode of the cached nested column)
               -> distinct mention surfaces (the ONLY shuffle pre-sink)
               -> link (broadcast probe, zero shuffle; or shuffle-join path
-                 when the dictionary exceeds broadcast_dict_max)
+                 when the dictionary exceeds broadcast_dict_max),
+                 checkpointed so AQE sizes the stage from the data
               -> canonical ids (broadcast mapping join)
-              -> append `triples` snapshot  = the group's authoritative
-                 commit; then mark the group done in the manifest
+              -> append `triples` snapshot (rebalanced: AQE picks the file
+                 count) = the group's authoritative commit; then mark the
+                 group done in the manifest
       └─ finalize (derived replace-snapshots, rebuildable any time):
            quarantine (X3) + per-partition lineage (Z2) from `extracted`,
-           canonical dedup / edges / adjacency from `triples`
+           canonical dedup (checkpointed) / edges / adjacency from `triples`
 
 Group membership is ``pmod(xxhash64(url), n_groups)`` — stable across
 cluster sizes and re-runs, so the resume manifest means the same thing at
@@ -69,6 +72,7 @@ from .operators.linking import (
     make_linker,
     mention_surfaces,
 )
+from .session import fresh_checkpoint, release_checkpoint
 from .textops import EMBED_DIM
 
 
@@ -111,14 +115,6 @@ class InjectedFailure(RuntimeError):
     """Raised by the fail_after test hook to simulate a mid-run crash."""
 
 
-# Per-group sink file count. At local/bench scale this keeps the triples
-# table at a handful of right-sized files per snapshot instead of
-# shuffle-partition-many tiny ones (small-file reads dominate finalize
-# otherwise). On a real cluster you'd target Iceberg's write.target-file-
-# size-bytes instead and let the table format split.
-SINK_PARTITIONS = 16
-
-
 def _canonical_mapping(
     spark: SparkSession,
     aliases_df: DataFrame,
@@ -155,7 +151,8 @@ def _canonical_mapping(
     mapping = spark.createDataFrame(
         pd.DataFrame(rows, columns=["id", "canon"]).astype("int64")
     )
-    cat.write("entity_canon", mapping, mode="replace")
+    # a dictionary-sized table: one file, not one per createDataFrame slice
+    cat.write("entity_canon", mapping.coalesce(1), mode="replace")
     return mapping  # written for resume; the in-memory frame serves this run
 
 
@@ -174,12 +171,16 @@ def _run_group(
 ) -> dict:
     """Process one bucket-group end-to-end and commit its snapshots.
 
-    Intermediates (`extracted`, `triples_raw`) are STAGED as catalog tables
-    rather than held in executor memory: each Python (Arrow) stage makes
-    exactly one pass and lands on disk; every downstream consumer is a pure
-    JVM scan of columnar parquet. This bounds memory independently of group
-    size (no cache eviction/recompute races) and gives the pipeline real
-    intermediate tables — the same shape a production run would stage.
+    Extraction crosses the Python boundary ONCE: a single Arrow pass yields
+    text/error and the nested triples of that text. The pass is persisted
+    (memory and disk, so executor memory stays bounded at any group size)
+    and the `extracted` append fills the cache; the triple explode and
+    every consumer after it are JVM stages over that cache. The linked-
+    mention maps are checkpointed rather than persisted: a checkpoint runs
+    under AQE, so their shuffle coalesces to what the surface set needs
+    (a persisted shuffle-fed frame keeps ``spark.sql.shuffle.partitions``
+    tasks), and the sink write is rebalanced so AQE also picks its file
+    count. Both the cache and the checkpoint are released at group end.
     """
     t0 = time.time()
     # group membership = pmod(xxhash64(url), n_groups). If the pages table
@@ -201,82 +202,76 @@ def _run_group(
         seen_g = seen_urls.filter(F.col("group_id") == group).select("url")
         sub = sub.join(seen_g, "url", "left_anti")
 
-    # Python pass 1: html -> text (+ error tags); one scan of the pages.
-    # Staged on disk so every downstream consumer is a columnar JVM scan.
+    # the one Python pass: html -> text (+ error tags) + nested triples.
+    # It runs over the input partitions (no shuffle precedes it outside a
+    # wave's anti-join), so persisting it pins no shuffle-partition count.
+    # The `extracted` commit (the pass minus its triples) fills the cache
+    # and still lands before `triples`, so resume is unchanged.
     tp = time.time()
-    ext_snap = cat.write(
-        "extracted",
-        extract_pages(sub).withColumn("group_id", F.lit(group)),
-        mode="append",
-        meta={"group": group, "wave": wave},
-    )
-    ext = cat.read_snapshot_delta(spark, "extracted", ext_snap)
-    _prof(f"group {group} stage extracted", tp)
-
-    good, _quarantine = split_quarantine(ext)
-    # the triple set feeds the surface chain TWICE (subj ∪ obj), the
-    # linked-mention maps, and the final canonical join — persist +
-    # materialize it once so the Python (Arrow) triple-extraction pass
-    # over the staged text runs exactly once per group (round-6: every
-    # consumer raced the lazy cache and re-ran the whole chain)
-    tp = time.time()
-    tri = extract_triples_df(good).persist()
-    tri.count()
-
-    # Linking: distinct surfaces (small) -> broadcast probe UDF -> tiny maps
-    surfaces = mention_surfaces(tri)
-    linked_m = linker(surfaces).persist()
-    linked_m.count()
-    subj_map = linked_m.select(
-        F.col("surface").alias("subj"),
-        F.col("entity_id").alias("subj_id"),
-        F.col("method").alias("subj_method"),
-    )
-    obj_map = linked_m.select(
-        F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-    )
-    # linked-mention maps are distinct-surface-sized (bounded by dictionary
-    # + tail): broadcast-hinted while the dictionary itself is broadcast-
-    # sized, otherwise planned as shuffle joins (AQE re-broadcasts from the
-    # runtime size if the group's surface set turns out small)
-    if broadcast_maps:
-        subj_map, obj_map = F.broadcast(subj_map), F.broadcast(obj_map)
-    linked = tri.join(subj_map, "subj").join(obj_map, "obj")
-    canon = apply_canonical(linked, mapping, broadcast_map=broadcast_maps).select(
-        "url",
-        "sent_idx",
-        "subj",
-        "pred",
-        "obj",
-        "subj_id",
-        "obj_id",
-        "subj_canon",
-        "obj_canon",
-        "part_id",
-        F.lit(group).alias("group_id"),
-    )
+    fused = extract_pages(sub, triples=True).withColumn("group_id", F.lit(group)).persist()
+    linked_m = None
     try:
+        cat.write(
+            "extracted",
+            fused.drop("triples"),
+            mode="append",
+            meta={"group": group, "wave": wave},
+        )
+        _prof(f"group {group} stage extracted", tp)
+
+        good, _quarantine = split_quarantine(fused)
+        tp = time.time()
+        tri = extract_triples_df(good)
+
+        # Linking: distinct surfaces (small) -> broadcast probe UDF -> tiny maps
+        linked_m = fresh_checkpoint(linker(mention_surfaces(tri)))
+        subj_map = linked_m.select(
+            F.col("surface").alias("subj"),
+            F.col("entity_id").alias("subj_id"),
+            F.col("method").alias("subj_method"),
+        )
+        obj_map = linked_m.select(
+            F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
+        )
+        # linked-mention maps are distinct-surface-sized (bounded by dictionary
+        # + tail): broadcast-hinted while the dictionary itself is broadcast-
+        # sized, otherwise planned as shuffle joins (AQE re-broadcasts from the
+        # runtime size if the group's surface set turns out small)
+        if broadcast_maps:
+            subj_map, obj_map = F.broadcast(subj_map), F.broadcast(obj_map)
+        linked = tri.join(subj_map, "subj").join(obj_map, "obj")
+        canon = apply_canonical(linked, mapping, broadcast_map=broadcast_maps).select(
+            "url",
+            "sent_idx",
+            "subj",
+            "pred",
+            "obj",
+            "subj_id",
+            "obj_id",
+            "subj_canon",
+            "obj_canon",
+            "part_id",
+            F.lit(group).alias("group_id"),
+        )
         # the group's authoritative commit (quarantine/lineage are derived
         # tables rebuilt in finalize from `extracted` + `triples` — fewer
         # commit round-trips per group, and a crash can never leave them
-        # inconsistent with the fact tables)
-        # repartition, NOT coalesce: coalesce(k) propagates k upward and
-        # caps the whole extract-triples/link stage at k tasks regardless
-        # of cluster size (measured: it made the heaviest Python stage
-        # one straggler-bound wave at higher parallelism, costing ~20%
-        # scaling efficiency). The extra shuffle is a few hundred MB of
-        # final triples per group — cheap insurance that sink file count
-        # never dictates compute parallelism.
+        # inconsistent with the fact tables). Rebalance, NOT coalesce:
+        # coalesce(k) propagates k upward and caps the extract/link stage
+        # at k tasks regardless of cluster size; a rebalance is a shuffle
+        # whose output AQE sizes from the data (one file for a small
+        # group, advisory-size files at scale).
         cat.write(
             "triples",
-            canon.repartition(SINK_PARTITIONS),
+            canon.hint("rebalance"),
             mode="append",
             meta={"group": group, "fingerprint": fingerprint, "wave": wave},
         )
         _prof(f"group {group} write triples", tp)
     finally:
-        linked_m.unpersist()
-        tri.unpersist()
+        if linked_m is not None:
+            release_checkpoint(linked_m)
+        fused.unpersist()
     return {"group": group, "wall_sec": time.time() - t0}
 
 
@@ -300,7 +295,8 @@ def finalize(spark: SparkSession, cat: Catalog) -> dict:
     )
 
     # per-partition lineage (Z2): pages/errors/bytes/extract wall time per
-    # (group, input partition), joined with sink triple counts
+    # (group, input partition), joined with sink triple counts. The wall
+    # time is the fused Arrow pass's: text AND triple extraction.
     lineage_pages = extracted.groupBy("group_id", "part_id").agg(
         F.count(F.lit(1)).alias("pages"),
         F.count("error").alias("errors"),
@@ -337,37 +333,41 @@ def finalize(spark: SparkSession, cat: Catalog) -> dict:
     with ThreadPoolExecutor(max_workers=2) as ex:
         futs = [ex.submit(_write_quarantine), ex.submit(_write_lineage)]
         # one shuffle produces the canonical table; edges and adjacency
-        # derive from the persisted result without re-reading parquet
+        # derive from it without re-reading parquet. Checkpointed, not
+        # persisted, so AQE coalesces that shuffle — and the files of the
+        # writes below — to what the data needs.
         t0 = time.time()
-        canonical = dedup_triples(triples).persist()
-        n_canonical = canonical.count()
+        canonical = fresh_checkpoint(dedup_triples(triples))
         _prof("finalize dedup", t0)
+    try:
         for f in futs:
             f.result()  # re-raise derived-table write failures
-    t0 = time.time()
-    cat.write("canonical_triples", canonical, mode="replace")
-    edges = canonical.select(
-        F.col("subj_canon").alias("src"),
-        F.col("obj_canon").alias("dst"),
-        "pred",
-        "cnt",
-    ).persist()
-    cat.write("edges", edges, mode="replace")
-    adjacency = edges.groupBy("src").agg(
-        F.sort_array(F.collect_list(F.struct("dst", "pred", "cnt"))).alias("out_edges"),
-        F.sum("cnt").alias("degree"),
-    )
-    cat.write("adjacency", adjacency, mode="replace")
-    # total triples = sum of canonical counts (algebraic identity) — the
-    # persisted aggregate answers it without another full fact-table scan
-    n_triples = int(canonical.agg(F.sum("cnt")).collect()[0][0] or 0)
-    _prof("finalize materialize", t0)
-    canonical.unpersist()
-    edges.unpersist()
+        t0 = time.time()
+        # total triples = sum of canonical counts (algebraic identity) —
+        # one aggregate over the checkpoint, no fact-table re-scan
+        n_canonical, n_triples = canonical.agg(
+            F.count(F.lit(1)), F.coalesce(F.sum("cnt"), F.lit(0))
+        ).collect()[0]
+        cat.write("canonical_triples", canonical, mode="replace")
+        edges = canonical.select(
+            F.col("subj_canon").alias("src"),
+            F.col("obj_canon").alias("dst"),
+            "pred",
+            "cnt",
+        )
+        cat.write("edges", edges, mode="replace")
+        adjacency = edges.groupBy("src").agg(
+            F.sort_array(F.collect_list(F.struct("dst", "pred", "cnt"))).alias("out_edges"),
+            F.sum("cnt").alias("degree"),
+        )
+        cat.write("adjacency", adjacency, mode="replace")
+        _prof("finalize materialize", t0)
+    finally:
+        release_checkpoint(canonical)
     return {
-        "total_triples": n_triples,
-        "canonical_triples": n_canonical,
-        "edges": n_canonical,
+        "total_triples": int(n_triples),
+        "canonical_triples": int(n_canonical),
+        "edges": int(n_canonical),
     }
 
 

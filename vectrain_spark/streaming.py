@@ -146,7 +146,7 @@ def start_ingest(
         q_done = batch_id in _committed_batches(cat, "quarantine")
         if tri_done and q_done:
             return
-        ext = extract_pages(batch_df)
+        ext = extract_pages(batch_df, triples=True)
         good, quarantine = split_quarantine(ext)
         tri = extract_triples_df(good)
         linked_m = link_mentions(spark, mention_surfaces(tri), index).persist()
