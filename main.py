@@ -118,6 +118,20 @@ def run_maintenance(spark, args) -> dict:
     return {"op": "delete", "table": args.table, "snapshot": snap}
 
 
+def pipeline_config(args: argparse.Namespace, job=None):
+    """The run's PipelineConfig: the job file's ``pipeline`` section (or
+    the engine defaults with 8 groups), then every CLI flag that was given.
+    An unset flag keeps the default, so ``max_concurrent_groups`` stays
+    derived from the input unless ``--max-concurrent-groups`` is passed."""
+    from vectrain_spark.pipeline import PipelineConfig
+
+    cfg = job.pipeline if job else PipelineConfig(n_groups=8)
+    for key in ("n_groups", "max_concurrent_groups", "broadcast_dict_max"):
+        if getattr(args, key) is not None:
+            setattr(cfg, key, getattr(args, key))
+    return cfg
+
+
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
     if args.list_queries:
@@ -128,7 +142,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
     from pyspark.sql import SparkSession
 
-    from vectrain_spark.pipeline import PipelineConfig, run_pipeline
+    from vectrain_spark.pipeline import run_pipeline
 
     # declarative job config (reference: YAML AppConfig + typed sections,
     # internal/config/config.go:16-54); explicit CLI flags win over it
@@ -212,25 +226,7 @@ def main(argv: list[str] | None = None) -> int:
         pages = spark.read.parquet(pages_path)
         aliases = spark.read.parquet(aliases_path)
 
-    if job:
-        cfg = job.pipeline
-        if args.n_groups is not None:
-            cfg.n_groups = args.n_groups
-        if args.max_concurrent_groups is not None:
-            cfg.max_concurrent_groups = args.max_concurrent_groups
-        if args.broadcast_dict_max is not None:
-            cfg.broadcast_dict_max = args.broadcast_dict_max
-    else:
-        kw = {}
-        if args.broadcast_dict_max is not None:
-            kw["broadcast_dict_max"] = args.broadcast_dict_max
-        cfg = PipelineConfig(
-            n_groups=args.n_groups if args.n_groups is not None else 8,
-            max_concurrent_groups=args.max_concurrent_groups
-            if args.max_concurrent_groups is not None
-            else 1,
-            **kw,
-        )
+    cfg = pipeline_config(args, job)
     wave = args.wave or (job.wave if job else None)
     stats = run_pipeline(spark, pages, aliases, out, cfg, wave=wave)
     print(json.dumps({

@@ -56,6 +56,34 @@ def test_example_config_loads():
     assert job.pipeline.max_concurrent_groups == 1
 
 
+def test_group_concurrency_stays_derived_unless_given():
+    """Leaving out max_concurrent_groups (YAML key or CLI flag) keeps the
+    None default that run_pipeline derives from the input; a given value
+    is kept, and a CLI flag wins over the job file."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "main", os.path.join(os.path.dirname(__file__), "..", "main.py")
+    )
+    main = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(main)
+
+    job = config_from_dict({**VALID, "pipeline": {"n_groups": 2}})
+    assert job.pipeline.max_concurrent_groups is None
+    base = ["--generate", "10", "--out", "kg_out"]
+    cli = main.parse_args(base)
+    assert main.pipeline_config(cli).max_concurrent_groups is None
+    assert main.pipeline_config(cli).n_groups == 8
+    assert main.pipeline_config(cli, job).max_concurrent_groups is None
+    cli = main.parse_args(base + ["--max-concurrent-groups", "3"])
+    assert main.pipeline_config(cli).max_concurrent_groups == 3
+    assert main.pipeline_config(cli, config_from_dict(VALID)).max_concurrent_groups == 3
+    assert main.pipeline_config(main.parse_args(base), config_from_dict(VALID)) == (
+        config_from_dict(VALID).pipeline
+    )
+
+
 def test_duration_parsing():
     assert parse_duration("500ms") == pytest.approx(0.5)
     assert parse_duration("2s") == 2.0

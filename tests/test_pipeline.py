@@ -10,7 +10,24 @@ import pytest
 
 from vectrain_spark.catalog import Catalog
 from vectrain_spark.oracle import prf
-from vectrain_spark.pipeline import InjectedFailure, PipelineConfig, run_pipeline
+from vectrain_spark import pipeline
+from vectrain_spark.pipeline import (
+    InjectedFailure,
+    PipelineConfig,
+    group_workers,
+    run_pipeline,
+)
+
+# the tables a run commits; lineage's wall-clock columns differ run to run
+TABLES = (
+    "triples",
+    "canonical_triples",
+    "edges",
+    "adjacency",
+    "entity_canon",
+    "quarantine",
+    "lineage",
+)
 
 
 def _canon_set(spark, root):
@@ -88,14 +105,18 @@ def test_run_releases_caches_and_sizes_sink_files(spark, pages_df, aliases_df, t
     pages_df.count()  # fill the session fixtures' own caches first
     aliases_df.count()
     before = jsc.getPersistentRDDs().size()
-    root = str(tmp_path / "kg")
-    run_pipeline(spark, pages_df, aliases_df, root, PipelineConfig(n_groups=2))
-    assert jsc.getPersistentRDDs().size() == before
-    dirs = Catalog(root).snapshots("triples")[-1]["data_dirs"]
-    assert len(dirs) == 2
-    for d in dirs:
-        n_files = len(glob.glob(os.path.join(d, "*.parquet")))
-        assert 1 <= n_files <= 2, (d, n_files)
+    # 8 input partitions at local[8]: one group at a time; 2 partitions:
+    # both groups side by side
+    for pages, workers in ((pages_df, 1), (pages_df.coalesce(2), 2)):
+        root = str(tmp_path / f"kg{workers}")
+        stats = run_pipeline(spark, pages, aliases_df, root, PipelineConfig(n_groups=2))
+        assert stats["group_workers"]["workers"] == workers
+        assert jsc.getPersistentRDDs().size() == before
+        dirs = Catalog(root).snapshots("triples")[-1]["data_dirs"]
+        assert len(dirs) == 2
+        for d in dirs:
+            n_files = len(glob.glob(os.path.join(d, "*.parquet")))
+            assert 1 <= n_files <= 2, (d, n_files)
 
 
 def test_crash_resume_equals_uninterrupted(
@@ -199,3 +220,93 @@ def test_config_switch_back_does_not_resurrect_pruned_groups(
     assert len(stats["groups"]) == 2
     assert _canon_set(spark, root3) == want
     assert Catalog(root3).read(spark, "triples").count() == want_n
+
+
+@pytest.mark.parametrize(
+    "n_pending, cores, parts, override, want",
+    [
+        (4, 8, 1, None, 4),  # P = 1: every core could run a group, pending caps it
+        (8, 8, 1, None, 8),
+        (4, 8, 4, None, 2),  # P = cores / 2
+        (4, 8, 8, None, 1),  # P = cores
+        (4, 32, 64, None, 1),  # P > cores: bench.py's sf0.1 layout stays sequential
+        (4, 4, 2, None, 2),  # perfbench build: 2 splits per group at local[4]
+        (1, 4, 2, None, 1),  # fewer pending groups than workers
+        (4, 4, 0, None, 4),  # empty input plans no partitions
+        (4, 32, 64, 3, 3),  # an explicit value wins...
+        (2, 8, 1, 4, 2),  # ...but never exceeds the pending groups
+        (4, 8, 1, 0, 1),  # ...nor drops below one
+    ],
+)
+def test_group_workers_rule(n_pending, cores, parts, override, want):
+    assert group_workers(n_pending, cores, parts, override) == want
+
+
+def _table_rows(spark, root, table):
+    df = Catalog(root).read(spark, table).drop("committed_at", "extract_wall_sec")
+    return sorted(map(str, df.collect()))
+
+
+@pytest.fixture(scope="module")
+def two_part_pages(pages_df):
+    """The fixture pages in 2 partitions: at local[8] one group's pass
+    leaves cores idle, so the derived default runs groups side by side."""
+    return pages_df.coalesce(2)
+
+
+@pytest.fixture(scope="module")
+def concurrent_run(spark, two_part_pages, aliases_df, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("kg_concurrent"))
+    stats = run_pipeline(spark, two_part_pages, aliases_df, root, PipelineConfig(n_groups=4))
+    return root, stats
+
+
+def test_derived_concurrency_matches_sequential(
+    spark, two_part_pages, aliases_df, concurrent_run, tmp_path_factory
+):
+    """Groups run side by side by default when one leaves cores idle, and
+    every committed table holds the same rows as a one-at-a-time run."""
+    root, stats = concurrent_run
+    assert stats["group_workers"] == {"workers": 4, "partitions": 2}
+    assert any(
+        label == "dispatch group_workers=4 partitions=2" for label, _ in pipeline.PROF_EVENTS
+    )
+    root1 = str(tmp_path_factory.mktemp("kg_sequential"))
+    stats1 = run_pipeline(
+        spark, two_part_pages, aliases_df, root1,
+        PipelineConfig(n_groups=4, max_concurrent_groups=1),
+    )
+    assert stats1["group_workers"] == {"workers": 1, "partitions": 2}
+    for table in TABLES:
+        assert _table_rows(spark, root, table) == _table_rows(spark, root1, table), table
+
+
+def test_failure_in_a_concurrent_group_surfaces_and_resumes(
+    spark, two_part_pages, aliases_df, concurrent_run, tmp_path_factory, monkeypatch
+):
+    """A group that fails while another runs beside it fails the run; the
+    other group still commits, and a re-run resumes to the uninterrupted
+    result."""
+    import threading
+
+    real = pipeline._run_group
+    both_in_flight = threading.Barrier(2, timeout=120)
+
+    def flaky(spark_, pages, linker, mapping, group, *args, **kwargs):
+        both_in_flight.wait()  # breaks (and fails the test) if groups run one by one
+        if group == 1:
+            raise RuntimeError("group 1 failed")
+        return real(spark_, pages, linker, mapping, group, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "_run_group", flaky)
+    root = str(tmp_path_factory.mktemp("kg_concurrent_fail"))
+    cfg = PipelineConfig(n_groups=4)
+    with pytest.raises(RuntimeError, match="group 1 failed"):
+        run_pipeline(spark, two_part_pages, aliases_df, root, cfg)
+    monkeypatch.undo()
+    stats = run_pipeline(spark, two_part_pages, aliases_df, root, cfg)
+    assert 0 in stats["resumed_from"] and 1 not in stats["resumed_from"]
+    assert 1 in {g["group"] for g in stats["groups"]}
+    want_root, _ = concurrent_run
+    for table in TABLES:
+        assert _table_rows(spark, root, table) == _table_rows(spark, want_root, table), table

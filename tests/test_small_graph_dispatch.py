@@ -99,6 +99,13 @@ def test_scale_path_releases_pair_checkpoint(spark, monkeypatch, op):
     assert pair_rdd not in {int(k) for k in persistent}
 
 
+@pytest.mark.parametrize("op", ["cc", "scc", "betweenness"])
+def test_local_branch_schema_matches_scale_path(spark, op):
+    """The driver-built frame carries the scale path's schema, nullability
+    included (SCC's scc_size is a non-nullable count on both)."""
+    assert _run(spark, op).schema == _run(spark, op, small_graph_max_edges=0).schema
+
+
 def _sssp_broadcasts(spark, monkeypatch, edges, seeds) -> tuple[bool, set]:
     """Run shortest_paths and report whether its dist side carried the
     broadcast hint (read from the analyzed plan of the final frame)."""

@@ -19,7 +19,9 @@ A "leg" is name:pythonpath[:mcg=N] — the subprocess imports
 ``vectrain_spark`` from that path, so any commit checked out into a git
 worktree is measurable against head without touching the main tree.
 mcg=N overrides PipelineConfig.max_concurrent_groups (the r2 1->4 change
-is the prime suspect), when the field exists at that commit.
+is the prime suspect), when the field exists at that commit; a leg without
+it takes that commit's default (derived from the input since the default
+became ``pipeline.group_workers``).
 
 Usage:
   python tools/ab_kg.py --pages 200000 --cores 32 --trials 2 \

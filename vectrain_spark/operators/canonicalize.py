@@ -56,6 +56,17 @@ def collect_small_graph(
     return list(zip(pdf["src"].tolist(), pdf["dst"].tolist())), None
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema`` field order),
+    built from pandas so the rows reach the JVM as Arrow batches.
+    ``createDataFrame`` of a tuple list instead runs a Python RDD of
+    ``defaultParallelism`` tasks: 5 rows took 2.2-2.6 s cold and
+    0.43-0.54 s warm at local[4], against 0.05-0.15 s this way."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)
+
+
 def _union_find_local(pairs) -> list[tuple]:
     """Driver-side union-find over (src, dst) pairs -> one (id, canon)
     tuple per touched node, sorted by id, canon = component minimum (the
@@ -160,7 +171,7 @@ def connected_components(
         schema = T.StructType(
             [T.StructField("id", src_type), T.StructField("canon", src_type)]
         )
-        return edges.sparkSession.createDataFrame(_union_find_local(pairs), schema)
+        return local_frame(edges.sparkSession, _union_find_local(pairs), schema)
     nodes = fresh_checkpoint(
         e_all.select(F.col("src").alias("id"))
         .unionAll(e_all.select(F.col("dst").alias("id")))

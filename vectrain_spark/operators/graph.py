@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .canonicalize import SMALL_GRAPH_ROWS, collect_small_graph
+from .canonicalize import SMALL_GRAPH_ROWS, collect_small_graph, local_frame
 
 DAMPING = 0.85
 N_ITER = 5
@@ -3646,7 +3646,7 @@ def strongly_connected_components(
                 T.StructField("scc_size", T.LongType(), nullable=False),
             ]
         )
-        out = edges.sparkSession.createDataFrame(rows, schema)
+        out = local_frame(edges.sparkSession, rows, schema)
         _note_frame(stats, out)
         return out
     e0 = _fckpt(e_all.filter(F.col("src") != F.col("dst")))
@@ -3980,7 +3980,7 @@ def betweenness_sampled(
             ]
         )
         rows = [(v, round(dv, 6)) for v, dv in total.items()]
-        return edges.sparkSession.createDataFrame(rows, schema)
+        return local_frame(edges.sparkSession, rows, schema)
     cur = (
         seeds.select(
             F.col("seed"),

@@ -26,7 +26,10 @@ Catalyst plan):
 
 Group membership is ``pmod(xxhash64(url), n_groups)`` — stable across
 cluster sizes and re-runs, so the resume manifest means the same thing at
-any parallelism (SURVEY.md §4.2 partitioning note).
+any parallelism (SURVEY.md §4.2 partitioning note). Pending groups run
+side by side when one group's partitions leave cores idle
+(:func:`group_workers`); at scale, where each group fills the cores, they
+run one at a time.
 """
 
 from __future__ import annotations
@@ -89,20 +92,21 @@ class PipelineConfig:
     # produce identical links (tests/test_linking.py), so the switch never
     # changes results.
     broadcast_dict_max: int = BROADCAST_DICT_MAX
-    # Concurrent group submission (>1): bucket-groups are independent, so
-    # the driver MAY overlap their jobs (commits serialize inside Catalog/
-    # GroupManifest locks; FAIR scheduler shares cores). Round 2 defaulted
-    # this to 4 on a "20% faster at local[16]" measurement; a same-window
-    # interleaved A/B on the identical 200k-page corpus at local[32]
-    # (tools/ab_kg.py, BENCH/BASELINE.md round-3 addendum) showed the
-    # opposite at full width: mcg=4 ran 222-231 s vs 92-137 s for mcg=1
-    # across both trials — overlapping groups quadruple the
-    # python-UDF worker pools and interleave their shuffle spills, which
-    # thrashes a single host even with disk-staged intermediates. Default
-    # is 1 (each group already saturates local[*]); >1 is the lever for a
-    # REAL multi-executor cluster where per-group commit latency leaves
-    # executors idle and workers are per-executor, not per-host.
-    max_concurrent_groups: int = 1
+    # Bucket-groups run at once. None (the default) derives it from the
+    # input (group_workers): cores // P, where P is the planned partition
+    # count of one pending group's pages, so groups overlap only when one
+    # group's tasks leave cores idle. bench.py's sf0.1 layout (64
+    # bucket-pruned splits per group at local[32]) gives 1: that is the
+    # round-3 case where a same-window A/B on identical corpus files
+    # (tools/ab_kg.py, BENCH/BASELINE.md round-3 addendum) measured mcg=4
+    # at 222-231 s vs 92-137 s for mcg=1, because overlapping full-width
+    # groups multiply the Python worker pools and interleave their shuffle
+    # spills. perfbench `build` (P = 2 at local[4]) gives 2: the second
+    # group's Python pass runs on the cores the first leaves idle. Commits
+    # serialize inside the Catalog/GroupManifest locks and the FAIR
+    # scheduler shares cores, so the value never changes results. An
+    # explicit value wins.
+    max_concurrent_groups: int | None = None
 
     def fingerprint(self) -> str:
         d = asdict(self)
@@ -156,6 +160,31 @@ def _canonical_mapping(
     return mapping  # written for resume; the in-memory frame serves this run
 
 
+def _group_pages(pages: DataFrame, group: int, n_groups: int) -> DataFrame:
+    """One bucket-group's pages: ``pmod(xxhash64(url), n_groups) == group``.
+
+    If the pages table is bucketed (a ``page_bucket = pmod(xxhash64(url),
+    B)`` partition column with B % n_groups == 0, the Iceberg
+    bucket-transform layout), the filter is on the partition column
+    instead: partition PRUNING skips the other groups' files entirely,
+    instead of scanning the full corpus once per group.
+    """
+    if "page_bucket" in pages.columns:
+        return pages.filter(F.pmod(F.col("page_bucket"), F.lit(n_groups)) == group)
+    return pages.filter(F.pmod(F.xxhash64("url"), F.lit(n_groups)) == group)
+
+
+def group_workers(
+    n_pending: int, cores: int, group_parts: int, override: int | None = None
+) -> int:
+    """How many bucket-groups to run at once: ``override`` when given,
+    else as many groups of ``group_parts`` tasks as fit side by side on
+    ``cores`` (``cores // group_parts``); never more than ``n_pending``,
+    never fewer than one."""
+    want = override if override is not None else cores // max(group_parts, 1)
+    return max(1, min(want, n_pending))
+
+
 def _run_group(
     spark: SparkSession,
     pages: DataFrame,
@@ -183,16 +212,7 @@ def _run_group(
     count. Both the cache and the checkpoint are released at group end.
     """
     t0 = time.time()
-    # group membership = pmod(xxhash64(url), n_groups). If the pages table
-    # is bucketed (a `page_bucket = pmod(xxhash64(url), B)` partition
-    # column with B % n_groups == 0 — the Iceberg bucket-transform layout),
-    # filter on the partition column instead: partition PRUNING skips the
-    # other groups' files entirely, instead of scanning the full corpus
-    # once per group.
-    if "page_bucket" in pages.columns:
-        sub = pages.filter(F.pmod(F.col("page_bucket"), F.lit(n_groups)) == group)
-    else:
-        sub = pages.filter(F.pmod(F.xxhash64("url"), F.lit(n_groups)) == group)
+    sub = _group_pages(pages, group, n_groups)
 
     # incremental wave: skip pages already processed by a committed unit.
     # Both sides are filtered to THIS group (the same url-hash bucketing),
@@ -576,7 +596,20 @@ def _run_groups_and_finalize(
         # ones stay pending, and the next run resumes from the manifest —
         # the reference's start/stop control plane re-expressed over
         # spark-submit + durable checkpoints
-        workers = max(1, min(cfg.max_concurrent_groups, len(pending)))
+        # P = planned partitions of one pending group's pages: bucket
+        # pruning applies, the wave anti-join and the Python pass come
+        # after. Planning a scan-shaped frame (parquet, generated, cached)
+        # runs no job; a shuffle below the pages runs once more under AQE.
+        # The chosen count lands in the stats and PROF_EVENTS, so a bench
+        # JSON names the branch.
+        t_disp = time.time()
+        parts = _group_pages(pages, pending[0], cfg.n_groups).rdd.getNumPartitions()
+        workers = group_workers(
+            len(pending), spark.sparkContext.defaultParallelism, parts,
+            cfg.max_concurrent_groups,
+        )
+        stats["group_workers"] = {"workers": workers, "partitions": parts}
+        _prof(f"dispatch group_workers={workers} partitions={parts}", t_disp)
         queue = list(pending)
         inflight: dict = {}
         with ThreadPoolExecutor(max_workers=workers) as ex:

@@ -20,6 +20,20 @@ from pyspark.sql import SparkSession
 ARROW_BATCH = 2_048
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: 24g, capped at half
+    of the host's MemTotal, so a runaway plan fails with a Java heap error
+    in its own query instead of growing the JVM until the kernel kills it
+    (and every later query in the session with it). 24g where the host's
+    memory cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "vectrain_spark",
     cores: int | None = None,
@@ -42,7 +56,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.scheduler.mode", "FAIR")  # concurrent group jobs share cores
         .config("spark.sql.files.maxPartitionBytes", "134217728")
