@@ -341,16 +341,24 @@ def test_bloom_filter_is_jvm_and_prunes_before_join(spark):
     assert "*(1) Filter" in plan
 
 
-def test_pq_topk_jvm_only_with_broadcast_luts(spark):
+def test_pq_topk_jvm_only_with_broadcast_luts(spark, monkeypatch):
     """The PQ ADC scan must stay whole-stage-codegen JVM (no Python eval
     anywhere) and probe the per-subspace LUTs via broadcast joins — the
     code table is the only large side at scale."""
-    from vectrain_spark.operators.similarity import pq_topk
+    from vectrain_spark.operators import similarity
 
+    plans: list[str] = []
+    orig = similarity.checkpoint_result
+
+    def spy(out, *working):
+        # the LAZY dataflow, planned before it is checkpointed
+        plans.append(_plan(out))
+        return orig(out, *working)
+
+    monkeypatch.setattr(similarity, "checkpoint_result", spy)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # materialize=False: inspect the LAZY dataflow (the public path
-    # checkpoints the result and releases its caches, round-6)
-    plan = _plan(pq_topk(spark, emb, materialize=False))
+    similarity.pq_topk(spark, emb)
+    (plan,) = plans
     assert "EvalPython" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 

@@ -9,7 +9,7 @@ import pytest
 
 from vectrain_spark.operators import canonicalize, graph
 from vectrain_spark.operators.canonicalize import collect_small_graph
-from vectrain_spark.session import release_checkpoint
+from vectrain_spark.session import release
 
 
 def _persistent(spark) -> int:
@@ -37,7 +37,7 @@ def test_collect_small_graph_boundary(spark, monkeypatch):
     got, frame = collect_small_graph(df)
     assert got is None
     assert sorted(tuple(r) for r in frame.collect()) == pairs
-    release_checkpoint(frame)
+    release(frame)
     assert _persistent(spark) == before
 
     # an explicit limit wins over the constant
@@ -49,7 +49,7 @@ def test_collect_small_graph_empty_takes_scale_path(spark):
     empty = spark.createDataFrame([], "src long, dst long")
     got, frame = collect_small_graph(empty)
     assert got is None and frame.count() == 0
-    release_checkpoint(frame)
+    release(frame)
 
 
 def _spy(monkeypatch, module) -> list[tuple]:
@@ -110,13 +110,13 @@ def _sssp_broadcasts(spark, monkeypatch, edges, seeds) -> tuple[bool, set]:
     """Run shortest_paths and report whether its dist side carried the
     broadcast hint (read from the analyzed plan of the final frame)."""
     plans: list[str] = []
-    orig = graph._finalize_iterative
+    orig = graph.checkpoint_result
 
-    def spy(out, persisted):
+    def spy(out, *working):
         plans.append(out._jdf.queryExecution().analyzed().toString())
-        return orig(out, persisted)
+        return orig(out, *working)
 
-    monkeypatch.setattr(graph, "_finalize_iterative", spy)
+    monkeypatch.setattr(graph, "checkpoint_result", spy)
     rows = {tuple(r) for r in graph.shortest_paths(edges, seeds).collect()}
     return "strategy=broadcast" in plans[0], rows
 

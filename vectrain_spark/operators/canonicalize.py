@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import fresh_checkpoint, release
+
 # The one small-graph limit. Graphs whose distinct (src, dst) pairs number
 # at or under it are collected and solved driver-side (union-find for CC,
 # Tarjan for SCC, the layered sweep for Brandes) instead of paying one job
@@ -44,15 +46,13 @@ def collect_small_graph(
     and the checkpoint released when 0 < count <= ``limit`` (default
     SMALL_GRAPH_ROWS), else ``(None, frame)`` with the checkpointed pairs
     for the scale path, which the caller releases."""
-    from ..session import fresh_checkpoint, release_checkpoint
-
     if limit is None:
         limit = SMALL_GRAPH_ROWS
     e_all = fresh_checkpoint(edges.select("src", "dst").distinct())
     if not 0 < e_all.count() <= limit:
         return None, e_all
     pdf = e_all.toPandas()
-    release_checkpoint(e_all)
+    release(e_all)
     return list(zip(pdf["src"].tolist(), pdf["dst"].tolist())), None
 
 
@@ -161,8 +161,6 @@ def connected_components(
     the graph is solved with driver-side union-find — identical mapping,
     none of the per-round job-submission floor. The star contraction
     below remains the scale path."""
-    from ..session import fresh_checkpoint, release_checkpoint
-
     pairs, e_all = collect_small_graph(edges, small_graph_max_edges)
     if pairs is not None:
         from pyspark.sql import types as T
@@ -178,7 +176,7 @@ def connected_components(
         .distinct()
     )
     e = e_all.filter(F.col("src") != F.col("dst")).localCheckpoint()
-    release_checkpoint(e_all)
+    release(e_all)
     prev = None
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint()

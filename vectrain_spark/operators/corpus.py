@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import release
+
 # Java-regex / RE2 common-subset patterns (no lookaround, no \b needed —
 # the planted fixture delimits tokens with spaces).
 RE_EMAIL = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
@@ -279,7 +281,7 @@ def pack_sequences(
             .localCheckpoint()
         )
     finally:
-        parted.unpersist()
+        release(parted)
     return out
 
 

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint_result
+
 N_MINHASH = 128
 N_MINHASH_BANDS = 32  # r = 4 rows/band: P(miss | J=0.8) = (1-0.8^4)^32 ~ 5e-8
 JACCARD_THRESHOLD = 0.8
@@ -174,21 +176,15 @@ def minhash_pairs(
     the result equals the brute-force O(n^2) oracle up to MinHash recall
     (~1 - 5e-8 at J >= threshold).
     """
-    hashed = _hashed_shingles(corpus)
+    hashed, sigs = minhash_signature_index(corpus, n_hashes, n_bands)
     # materialize the shared frames once: the band self-join references
     # the signature frame twice and the verify join references the
     # shingle cache twice more — left lazy, concurrent stages race to
     # fill the cache and re-run the shingle scan / signature UDF per
     # consumer (round-6)
+    hashed = hashed.persist()
     hashed.count()
-    sigs = (
-        hashed.mapInPandas(
-            _minhash_udf_factory(n_hashes, n_bands),
-            schema="doc_id long, band int, sig long",
-        )
-        .select("doc_id", "band", "sig")
-        .persist()
-    )
+    sigs = sigs.persist()
     sigs.count()
     left = sigs.alias("l")
     right = sigs.alias("r")
@@ -198,38 +194,20 @@ def minhash_pairs(
         .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
         .distinct()
     )
-    return _finalize_cached(
-        _verify_jaccard(cand, hashed, hashed, threshold), [hashed, sigs]
+    return checkpoint_result(
+        _verify_jaccard(cand, hashed, hashed, threshold), hashed, sigs
     )
 
 
-def _finalize_cached(out: DataFrame, persisted: list[DataFrame]) -> DataFrame:
-    """Materialize a pair operator's result once (stats-reset checkpoint)
-    and unpersist its internal working-set caches — in a long shared
-    session (the 87-query bench) leaked per-query persists otherwise
-    accumulate into memory pressure that taxes every later query
-    (round-6; the result frame itself is pair-list-sized)."""
-    from ..session import fresh_checkpoint
-
-    res = fresh_checkpoint(out)
-    for df in persisted:
-        df.unpersist()
-    return res
-
-
-def _hashed_shingles(corpus: DataFrame, persist: bool = True) -> DataFrame:
+def _hashed_shingles(corpus: DataFrame) -> DataFrame:
     """(doc_id, hsh): distinct shingle sets hashed to int64 ONCE, JVM-side
     (xxhash64, inside the scan stage): the persisted working set, the
     signature UDF input, and the verification join all carry compact int64
     sets instead of string arrays (~20x smaller shuffle/cache; distinct-set
     semantics preserved, collision odds ~n^2/2^64). Exact Jaccard on the
     hash sets equals Jaccard on the strings, so the SQL oracles match.
-
-    ``persist=False`` skips caching: used by the incremental path, whose
-    cache lifecycle belongs to the CALLER (see
-    :func:`minhash_signature_index`) — an operator that persists internally
-    and returns a lazy result can never unpersist safely."""
-    out = (
+    Lazy: the caller owns the cache lifecycle."""
+    return (
         spread(corpus)
         .select(
             "doc_id",
@@ -239,7 +217,6 @@ def _hashed_shingles(corpus: DataFrame, persist: bool = True) -> DataFrame:
         )
         .filter(F.size("hsh") > 0)
     )
-    return out.persist() if persist else out
 
 
 def minhash_signature_index(
@@ -256,7 +233,7 @@ def minhash_signature_index(
     :func:`incremental_minhash_pairs` so the old corpus is never
     re-shingled. The caller owns the lifecycle (persist/unpersist or
     catalog write) — nothing here caches behind the caller's back."""
-    hashed = _hashed_shingles(corpus, persist=False)
+    hashed = _hashed_shingles(corpus)
     sigs = hashed.mapInPandas(
         _minhash_udf_factory(n_hashes, n_bands),
         schema="doc_id long, band int, sig long",
@@ -330,11 +307,7 @@ def incremental_minhash_pairs(
     if new_index is not None:
         hn, sigs_new = new_index
     else:
-        hn = _hashed_shingles(new, persist=False)
-        sigs_new = hn.mapInPandas(
-            _minhash_udf_factory(n_hashes, n_bands),
-            schema="doc_id long, band int, sig long",
-        )
+        hn, sigs_new = minhash_signature_index(new, n_hashes, n_bands)
     if hn.join(ho, "doc_id", "left_semi").limit(1).count():
         raise ValueError(
             "incremental_minhash_pairs: new wave reuses doc_ids already in "
@@ -355,6 +328,34 @@ def incremental_minhash_pairs(
         .distinct()
     )
     return _verify_jaccard(cand, hn, ho.unionByName(hn), threshold)
+
+
+def _rare_first_hash_sets(corpus: DataFrame, n: int) -> DataFrame:
+    """(doc_id, hsh): each doc's distinct n-gram shingles hashed to int64
+    (xxhash64) and sorted by ascending document frequency, ties by hash —
+    the global rarest-first token order of the prefix filters below. One
+    explode + groupBy for the frequency table, one re-group per doc, all
+    on int64 tokens. Lazy: the caller persists it."""
+    distinct_hashes = spread(corpus).select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(
+                F.transform(shingles_col(n=n), lambda s: F.xxhash64(s))
+            )
+        ).alias("tok"),
+    )
+    tok_df = distinct_hashes.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    return (
+        distinct_hashes.join(tok_df, "tok")
+        .groupBy("doc_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("df", "tok"))),
+                lambda s: s["tok"],
+            ).alias("hsh")
+        )
+        .filter(F.size("hsh") > 0)
+    )
 
 
 def ngram_jaccard_pairs(
@@ -396,30 +397,7 @@ def ngram_jaccard_pairs(
     candidate filters, never toward misses.
     """
     t = float(threshold)
-    distinct_hashes = (
-        spread(corpus)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(shingles_col(n=n), lambda s: F.xxhash64(s))
-                )
-            ).alias("tok"),
-        )
-    )
-    tok_df = distinct_hashes.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    hashed = (
-        distinct_hashes.join(tok_df, "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("df", "tok"))),
-                lambda s: s["tok"],
-            ).alias("hsh")
-        )
-        .filter(F.size("hsh") > 0)
-        .persist()
-    )
+    hashed = _rare_first_hash_sets(corpus, n).persist()
     # materialize once: prefix explode (twice) + verify (twice) otherwise
     # race the lazy cache and re-run the shingle/df chain per consumer
     hashed.count()
@@ -445,18 +423,8 @@ def ngram_jaccard_pairs(
         .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
         .distinct()
     )
-    sa = hashed.select(F.col("doc_id").alias("a"), F.col("hsh").alias("sha"))
-    sb = hashed.select(F.col("doc_id").alias("b"), F.col("hsh").alias("shb"))
-    inter = F.size(F.array_intersect("sha", "shb")).cast("double")
-    na = F.size("sha").cast("double")
-    nb = F.size("shb").cast("double")
-    jac = inter / (na + nb - inter)
-    return _finalize_cached(
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .select("a", "b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold),
-        [hashed],
+    return checkpoint_result(
+        _verify_jaccard(cand, hashed, hashed, threshold), hashed
     )
 
 
@@ -479,27 +447,7 @@ def containment_pairs(
     the candidates only.
     """
     t = float(threshold)
-    distinct_hashes = spread(corpus).select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(shingles_col(n=n), lambda s: F.xxhash64(s))
-            )
-        ).alias("tok"),
-    )
-    tok_df = distinct_hashes.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    hashed = (
-        distinct_hashes.join(tok_df, "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("df", "tok"))),
-                lambda s: s["tok"],
-            ).alias("hsh")
-        )
-        .filter(F.size("hsh") > 0)
-        .persist()
-    )
+    hashed = _rare_first_hash_sets(corpus, n).persist()
     # materialize once (same rationale as ngram_jaccard_pairs)
     hashed.count()
     eps = 1e-9
@@ -523,12 +471,12 @@ def containment_pairs(
     containment = F.size(F.array_intersect("sha", "shb")).cast("double") / F.size(
         "sha"
     ).cast("double")
-    return _finalize_cached(
+    return checkpoint_result(
         cand.join(sa, "a")
         .join(sb, "b")
         .select("a", "b", F.round(containment, 6).alias("containment"))
         .filter(F.col("containment") >= threshold),
-        [hashed],
+        hashed,
     )
 
 
@@ -639,7 +587,7 @@ def simhash_pairs(corpus: DataFrame, max_hamming: int = MAX_HAMMING) -> DataFram
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    return _finalize_cached(pairs, [sim])
+    return checkpoint_result(pairs, sim)
 
 
 def sentence_dup_profile(docs: DataFrame, min_chars: int = 20) -> DataFrame:

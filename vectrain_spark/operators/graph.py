@@ -31,48 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint_result, fresh_checkpoint, release
 from .canonicalize import SMALL_GRAPH_ROWS, collect_small_graph, local_frame
 
 DAMPING = 0.85
 N_ITER = 5
 ITER_ROUND = 8
 OUT_ROUND = 6
-
-
-def _finalize_iterative(out: DataFrame, persisted: list[DataFrame]) -> DataFrame:
-    """Materialize a fixed-round loop's result ONCE and release its
-    cached inputs.
-
-    Round-6 measurement: on this engine every eager per-round
-    ``localCheckpoint`` is a full job submission with a ~0.4 s floor at
-    local[32], so a 5-round loop paid 5 job round-trips plus retained
-    every round's blocks until GC. A fixed-round loop whose round
-    references the previous state exactly once (pagerank/katz/ppr/LPA
-    shape) unrolls into ONE lazy plan — linear in round count, stats
-    growing multiplicatively in VALUE but linearly in digit count, so no
-    SPARK-39834 pathology — and this helper executes it as a single job
-    via a stats-reset checkpoint, then unpersists the loop's shared
-    frames (edge table, degrees, node set). States that a round
-    references more than once must be ``persist()``-ed by the caller
-    (lazy — the cache manager dedupes them inside the same job) and
-    passed here for release."""
-    from ..session import fresh_checkpoint
-
-    res = fresh_checkpoint(out)
-    for df in persisted:
-        df.unpersist()
-    return res
-
-
-def _materialize(*dfs: DataFrame) -> list[int]:
-    """Populate lazily-persisted shared loop frames BEFORE the single
-    materializing job: concurrent stages inside that job would otherwise
-    race to fill the same cache and recompute the frame's whole lineage
-    per consumer (measured 2x on label propagation's symmetrized edge
-    cache). One cheap count per frame; later frames reuse earlier ones'
-    cached blocks. Returns the counts — the loops reuse them as the
-    size signal for broadcast-vs-shuffle join dispatch."""
-    return [df.count() for df in dfs]
 
 
 def _bc_if(cond: bool, df: DataFrame) -> DataFrame:
@@ -129,13 +94,16 @@ def pagerank(
         .distinct()
         .persist()
     )
-    n_nodes, _ = _materialize(nodes, outdeg)  # nodes' pass also fills e's cache
+    # fill the caches before the single job (see checkpoint_result);
+    # nodes' pass also fills e's cache
+    n_nodes = nodes.count()
+    outdeg.count()
     small = n_nodes <= SMALL_GRAPH_ROWS
     ranks = nodes.select("id", F.lit(1.0).alias("rank"))
     base = 1.0 - damping
     # each round references the previous ranks exactly ONCE, so the whole
     # loop unrolls into one lazy plan executed as a single job by
-    # _finalize_iterative — no per-round job submissions or retained
+    # checkpoint_result — no per-round job submissions or retained
     # per-round checkpoint blocks; node-sized state rides broadcast joins
     # when it fits, so the cached edge table never re-exchanges
     # (round-6, guide §2.4/§3.1/§5)
@@ -160,7 +128,7 @@ def pagerank(
             )
         )
     out = ranks.select("id", F.round("rank", OUT_ROUND).alias("rank"))
-    return _finalize_iterative(out, [e, outdeg, nodes])
+    return checkpoint_result(out, e, outdeg, nodes)
 
 
 def pagerank_oracle_sql(
@@ -250,7 +218,7 @@ def katz_centrality(
         .distinct()
         .persist()
     )
-    (n_nodes,) = _materialize(nodes)  # nodes' pass also populates e's cache
+    n_nodes = nodes.count()  # also fills e's cache (see checkpoint_result)
     small = n_nodes <= SMALL_GRAPH_ROWS
     x = nodes.select("id", F.lit(beta).alias("katz"))
     for _ in range(n_iter):
@@ -273,7 +241,7 @@ def katz_centrality(
         )
     # single-reference rounds -> one lazy plan, one job (round-6)
     out = x.select("id", F.round("katz", OUT_ROUND).alias("katz"))
-    return _finalize_iterative(out, [e, nodes])
+    return checkpoint_result(out, e, nodes)
 
 
 def katz_oracle_sql(
@@ -858,7 +826,7 @@ def k_core(pairs: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("core_degree"))
         .filter(F.col("core_degree") >= k)
     )
-    e0.unpersist()
+    release(e0)
     return out
 
 
@@ -1048,7 +1016,7 @@ def _global_sorted_rank(
             .localCheckpoint(eager=True)
         )
     finally:
-        parted.unpersist()
+        release(parted)
     return ranked, acc
 
 
@@ -1177,7 +1145,7 @@ def hits(edges: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
         .distinct()
         .persist()
     )
-    (n_nodes,) = _materialize(nodes)  # nodes' pass also populates e's cache
+    n_nodes = nodes.count()  # also fills e's cache (see checkpoint_result)
     small = n_nodes <= SMALL_GRAPH_ROWS
     hubs = nodes.select("id", F.lit(1.0).alias("hub"))
     auths = None
@@ -1192,7 +1160,7 @@ def hits(edges: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
     a_raw = h_raw = None
     pending: list[DataFrame] = []
     for _ in range(n_iter):
-        a_raw = _fckpt(
+        a_raw = fresh_checkpoint(
             nodes.join(
                 _bc_if(
                     small,
@@ -1207,13 +1175,12 @@ def hits(edges: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
             eager=False,
         )
         a_tot = a_raw.agg(F.sum("raw").alias("tot")).collect()[0]["tot"]
-        for h in pending:
-            _release(h)
+        release(*pending)
         pending = []
         auths = a_raw.select(
             "id", F.round(F.col("raw") / F.lit(a_tot), ITER_ROUND).alias("auth")
         )
-        h_raw = _fckpt(
+        h_raw = fresh_checkpoint(
             nodes.join(
                 _bc_if(
                     small,
@@ -1240,10 +1207,7 @@ def hits(edges: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
             F.round("auth", OUT_ROUND).alias("auth"),
         )
     )
-    res = _finalize_iterative(out, [e, nodes])
-    for h in pending:
-        _release(h)
-    return res
+    return checkpoint_result(out, e, nodes, *pending)
 
 
 def hits_oracle_sql(edges_sql: str, n_iter: int = HITS_ITER) -> str:
@@ -1337,7 +1301,7 @@ def label_propagation(pairs: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
         parts, "u"
     ).persist()
     nodes = sym.select(F.col("v").alias("id")).distinct().persist()
-    (n_nodes,) = _materialize(nodes)  # nodes' pass also populates sym's cache
+    n_nodes = nodes.count()  # also fills sym's cache (see checkpoint_result)
     small = n_nodes <= SMALL_GRAPH_ROWS
     labels = nodes.select("id", F.col("id").alias("label"))
     from pyspark.sql import Window
@@ -1355,21 +1319,18 @@ def label_propagation(pairs: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
             .groupBy("v", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = _fckpt(
+        labels = fresh_checkpoint(
             counts.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(F.col("v").alias("id"), "label")
         )
-        if prev is not None:
-            _release(prev)
+        release(prev)
         prev = labels
     size = labels.groupBy("label").agg(F.count(F.lit(1)).alias("community_size"))
     out = labels.join(F.broadcast(size), "label").select(
         "id", "label", "community_size"
     )
-    res = _finalize_iterative(out, [sym, nodes])
-    _release(labels)
-    return res
+    return checkpoint_result(out, sym, nodes, labels)
 
 
 def neighbor_mean_embeddings(
@@ -1702,7 +1663,7 @@ def shortest_paths(
         1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
     )
     e = e.repartition(parts, "src").persist()
-    (n_e,) = _materialize(e)
+    n_e = e.count()  # fill the cache before the single job
     # dist holds (seed, reached node) rows, and one seed reaches at most
     # n_e + 1 nodes: broadcast it only when that bound fits
     small = seeds.count() * (n_e + 1) <= SMALL_GRAPH_ROWS
@@ -1731,7 +1692,7 @@ def shortest_paths(
         )
         levels.append(dist)
     out = dist.select("seed", "id", F.round("dist", OUT_ROUND).alias("dist"))
-    return _finalize_iterative(out, [e, *levels])
+    return checkpoint_result(out, e, *levels)
 
 
 def _shortest_paths_cte_parts(
@@ -1841,7 +1802,11 @@ def personalized_pagerank(
         "id",
         F.when(F.col("_s"), F.lit(base_mass)).otherwise(F.lit(0.0)).alias("b"),
     ).persist()
-    n_nodes, _, _ = _materialize(nodes, outdeg, base)  # also fills e's cache
+    # fill the caches before the single job (see checkpoint_result);
+    # nodes' pass also fills e's cache
+    n_nodes = nodes.count()
+    outdeg.count()
+    base.count()
     small = n_nodes <= SMALL_GRAPH_ROWS
     ranks = base.select("id", F.col("b").alias("rank"))
     for _ in range(n_iter):
@@ -1866,7 +1831,7 @@ def personalized_pagerank(
         )
     # single-reference rounds -> one lazy plan, one job (round-6)
     out = ranks.select("id", F.round("rank", OUT_ROUND).alias("rank"))
-    return _finalize_iterative(out, [e, outdeg, nodes, base])
+    return checkpoint_result(out, e, outdeg, nodes, base)
 
 
 def personalized_pagerank_oracle_sql(
@@ -1970,7 +1935,7 @@ def transitive_closure(edges: DataFrame, max_hops: int = CLOSURE_MAX_HOPS) -> Da
             break
         closure = closure.unionByName(new).localCheckpoint()
         frontier = new
-    e.unpersist()
+    release(e)
     return closure.filter(F.col("src") != F.col("dst"))
 
 
@@ -3314,37 +3279,11 @@ FB_MAX_ROUNDS = 256  # safety cap on any single fixpoint loop below
 # broadcast on its own) — zero exchanges on the edge side — while bigger
 # graphs keep the shuffle plan. Row counts come from the loop's own
 # drain-check counts (no extra jobs); the algorithm is identical on both
-# paths.
-
-
-def _fckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Stats-resetting checkpoint (see session.fresh_checkpoint): the
-    coloring loop below JOINS its checkpointed state with itself every
-    round (pointer jumping), and since SPARK-39834 a plain
-    ``localCheckpoint`` inherits the origin plan's sizeInBytes — which a
-    self-join SQUARES, doubling the estimate's BigInt digit count per
-    round until Catalyst's stats visitor is doing million-digit
-    arithmetic (measured 2.5x slowdown per round, then driver OOM, on a
-    24-node ring). The reset pins every round's estimate at the engine
-    default so 256 rounds cost 256x one round, not 2^256.
-
-    ``eager=False`` defers materialization into the next consuming job:
-    loop-state rebuilds (anti-join + union of frames the round already
-    materialized) don't need their own job submission — the next round's
-    eager job computes and persists them in one pass."""
-    from ..session import fresh_checkpoint
-
-    return fresh_checkpoint(df, eager=eager)
-
-
-def _release(df: DataFrame | None) -> None:
-    """Free a superseded checkpoint frame's blocks (no-op on None).
-    Only call once every consumer has materialized — checkpoint lineage
-    is truncated, so released blocks cannot be recomputed."""
-    if df is not None:
-        from ..session import release_checkpoint
-
-        release_checkpoint(df)
+# paths. Loop state is a stats-reset checkpoint (fresh_checkpoint), never
+# a plain localCheckpoint: pointer jumping joins the state with itself
+# every round, and an inherited size estimate would square per round
+# (driver OOM on a 24-node ring), where the reset keeps 256 rounds at
+# 256x one round.
 
 
 def _note_frame(stats: dict | None, df: DataFrame) -> None:
@@ -3381,7 +3320,7 @@ def _reach_keyed(
     reached sets at or under SMALL_GRAPH_ROWS ride broadcast joins,
     so the small-graph rounds touch the edge table without a single
     exchange — bigger graphs keep the keyed shuffle plan unchanged."""
-    reached = _fckpt(seeds.select("part", "node").distinct())
+    reached = fresh_checkpoint(seeds.select("part", "node").distinct())
     n_reached = reached.count()
     frontier: DataFrame | None = None
     n_frontier = n_reached
@@ -3395,7 +3334,7 @@ def _reach_keyed(
         anti = reached
         if n_reached <= SMALL_GRAPH_ROWS:
             anti = F.broadcast(anti)
-        step = _fckpt(
+        step = fresh_checkpoint(
             lhs.join(edges, ["part", "src"])
             .select("part", F.col("dst").alias("node"))
             .distinct()
@@ -3403,17 +3342,14 @@ def _reach_keyed(
         )
         # the step job materialized any lazy `reached`, so the frames it
         # superseded (last round's reached + frontier) are now dead
-        for h in pending:
-            _release(h)
+        release(*pending)
         pending = []
         _note_frame(stats, step)
         n_step = step.count()
         if n_step == 0:
-            _release(step)
-            if frontier is not None:
-                _release(frontier)
+            release(step, frontier)
             return reached
-        new_reached = _fckpt(reached.unionByName(step), eager=False)
+        new_reached = fresh_checkpoint(reached.unionByName(step), eager=False)
         _note_frame(stats, new_reached)
         pending = [reached] + ([frontier] if frontier is not None else [])
         reached, frontier = new_reached, step
@@ -3461,7 +3397,7 @@ def _scc_colors(
     the convergence sum with it). Both call sites in
     :func:`strongly_connected_components` pass edges between remaining
     nodes only."""
-    colors = _fckpt(
+    colors = fresh_checkpoint(
         nodes.select(
             "node", F.xxhash64("node").alias("ch"), F.col("node").alias("cn")
         )
@@ -3496,7 +3432,7 @@ def _scc_colors(
             .join(via_rhs, "via")
             .select("node", "ch", "cn")
         )
-        new_colors = _fckpt(
+        new_colors = fresh_checkpoint(
             edge_cand.unionByName(jump_cand)
             .unionByName(colors)
             .groupBy("node")
@@ -3517,9 +3453,9 @@ def _scc_colors(
                 colors, ["node", "ch", "cn"], "left_anti"
             ).isEmpty()
         if converged:
-            _release(new_colors)
+            release(new_colors)
             return colors
-        _release(colors)
+        release(colors)
         colors = new_colors
     raise RuntimeError(f"color propagation open after {max_rounds} rounds")
 
@@ -3649,20 +3585,20 @@ def strongly_connected_components(
         out = local_frame(edges.sparkSession, rows, schema)
         _note_frame(stats, out)
         return out
-    e0 = _fckpt(e_all.filter(F.col("src") != F.col("dst")))
-    nodes = _fckpt(
+    e0 = fresh_checkpoint(e_all.filter(F.col("src") != F.col("dst")))
+    nodes = fresh_checkpoint(
         e_all.select(F.col("src").alias("node"))
         .unionByName(e_all.select(F.col("dst").alias("node")))
         .distinct()
     )
-    _release(e_all)
+    release(e_all)
     remaining, live = nodes, e0
     found: list[DataFrame] = []
     for _ in range(FB_MAX_ROUNDS):
         if remaining.isEmpty():
             break
         colors = _scc_colors(live, remaining, stats=stats)
-        same_color_rev = _fckpt(
+        same_color_rev = fresh_checkpoint(
             live.join(
                 colors.select(
                     F.col("node").alias("src"), F.col("cn").alias("c1")
@@ -3680,7 +3616,7 @@ def strongly_connected_components(
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         bwd = _scc_colors(same_color_rev, remaining, stats=stats)
-        members = _fckpt(
+        members = fresh_checkpoint(
             colors.select("node", F.col("cn").alias("part"))
             .join(bwd.select("node", F.col("cn").alias("bpart")), "node")
             .filter(F.col("part") == F.col("bpart"))
@@ -3688,30 +3624,40 @@ def strongly_connected_components(
         )
         _note_frame(stats, members)
         ids = members.groupBy("part").agg(F.min("node").alias("scc_id"))
-        found.append(_fckpt(members.join(ids, "part").select("node", "scc_id")))
+        found.append(
+            fresh_checkpoint(members.join(ids, "part").select("node", "scc_id"))
+        )
         done = members.select("node").distinct()
-        new_remaining = _fckpt(remaining.join(done, "node", "left_anti"))
-        new_live = _fckpt(
+        new_remaining = fresh_checkpoint(remaining.join(done, "node", "left_anti"))
+        new_live = fresh_checkpoint(
             live.join(done.withColumnRenamed("node", "src"), "src", "left_anti")
             .join(done.withColumnRenamed("node", "dst"), "dst", "left_anti")
         )
         # every consumer of this round's intermediates has materialized
         # (found / new_remaining / new_live are eager checkpoints) — free
         # the superseded blocks instead of holding them to end of query
-        for h in (colors, same_color_rev, bwd, members, remaining, live):
-            _release(h)
+        release(colors, same_color_rev, bwd, members, remaining, live)
         remaining, live = new_remaining, new_live
     else:
         raise RuntimeError(f"SCC open after {FB_MAX_ROUNDS} pivot rounds")
     if not found:
-        return nodes.select(
-            "node", F.col("node").alias("scc_id"), F.lit(1).alias("scc_size")
-        ).limit(0)
+        return checkpoint_result(
+            nodes.select(
+                "node", F.col("node").alias("scc_id"), F.lit(1).alias("scc_size")
+            ).limit(0),
+            remaining,
+            live,
+        )
     scc = found[0]
     for f in found[1:]:
         scc = scc.unionByName(f)
     sizes = scc.groupBy("scc_id").agg(F.count(F.lit(1)).alias("scc_size"))
-    return scc.join(sizes, "scc_id").select("node", "scc_id", "scc_size")
+    return checkpoint_result(
+        scc.join(sizes, "scc_id").select("node", "scc_id", "scc_size"),
+        *found,
+        remaining,
+        live,
+    )
 
 
 def scc_oracle_sql(edges_sql: str, max_hops: int = CLOSURE_MAX_HOPS) -> str:
@@ -3780,7 +3726,9 @@ def bowtie_classes(
     signature compatibility (see :func:`strongly_connected_components`);
     :func:`bowtie_oracle_sql` still replays the hop-capped definition,
     identical whenever core-relative distances fit the cap."""
-    scc = _fckpt(strongly_connected_components(edges, max_hops, stats=stats))
+    components = strongly_connected_components(edges, max_hops, stats=stats)
+    scc = fresh_checkpoint(components)
+    release(components)  # the scale path returns its own checkpoint
     core = (
         scc.orderBy(F.desc("scc_size"), F.asc("scc_id"))
         .limit(1)
@@ -3804,13 +3752,13 @@ def bowtie_classes(
     # who reaches the core = backward sweep FROM the core; whom the core
     # reaches = forward sweep. Both include the core itself — harmless,
     # the when-chain tests 'core' first.
-    reaches = _reach_keyed(bwd, seeds, stats=stats).select("node")
-    reached = _reach_keyed(fwd, seeds, stats=stats).select("node")
+    reaches = _reach_keyed(bwd, seeds, stats=stats)
+    reached = _reach_keyed(fwd, seeds, stats=stats)
     flags = (
         scc.select("node")
         .join(core_nodes.withColumn("_c", F.lit(True)), "node", "left")
-        .join(reaches.withColumn("_i", F.lit(True)), "node", "left")
-        .join(reached.withColumn("_o", F.lit(True)), "node", "left")
+        .join(reaches.select("node").withColumn("_i", F.lit(True)), "node", "left")
+        .join(reached.select("node").withColumn("_o", F.lit(True)), "node", "left")
     )
     cls = (
         F.when(F.col("_c"), F.lit("core"))
@@ -3818,7 +3766,9 @@ def bowtie_classes(
         .when(F.col("_o"), F.lit("out"))
         .otherwise(F.lit("other"))
     )
-    return flags.select("node", cls.alias("cls"))
+    return checkpoint_result(
+        flags.select("node", cls.alias("cls")), scc, reaches, reached
+    )
 
 
 def bowtie_oracle_sql(edges_sql: str, max_hops: int = CLOSURE_MAX_HOPS) -> str:
@@ -4045,7 +3995,7 @@ def betweenness_sampled(
             .localCheckpoint()
         )
         acc.append(dl)
-    _release(e)  # every layer above is an eager checkpoint
+    release(e)  # every layer above is an eager checkpoint
     all_d = acc[0]
     for part in acc[1:]:
         all_d = all_d.unionByName(part)

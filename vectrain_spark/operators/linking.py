@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import release
 from ..textops import EMBED_DIM, embed_many, hyperplanes, lsh_bands, stable_id
 
 LINK_THRESHOLD = 0.60
@@ -448,7 +449,7 @@ def make_linker(
     # the persisted dictionary-side frames live for the whole run; the
     # caller releases them when the run ends (run_pipeline's finally) so
     # repeated runs in one session don't pile up dead cached tables
-    _linker.cleanup = lambda: (exact_map.unpersist(), alias_bands.unpersist())
+    _linker.cleanup = lambda: release(exact_map, alias_bands)
     return _linker, "join"
 
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import release
+
 
 def skyline_2d(df: DataFrame, min_col: str, max_col: str) -> DataFrame:
     """Exact 2-D skyline via the sorted SWEEP, distributed two-phase:
@@ -74,7 +76,7 @@ def skyline_2d(df: DataFrame, min_col: str, max_col: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        parted.unpersist()
+        release(parted)
     dominated = F.coalesce(
         F.col("_strict_max") >= F.col(max_col), F.lit(False)
     ) | (F.col("_gmax") > F.col(max_col))

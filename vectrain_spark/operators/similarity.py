@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint_result, fresh_checkpoint, release
+
 
 def _dot(a: str | object, b: str | object):
     """Left-fold float64 dot product of two array<double> columns."""
@@ -237,6 +239,16 @@ def _vecs(embeddings: DataFrame) -> DataFrame:
     )
 
 
+def _subspace_width(vecs: DataFrame, m: int) -> int:
+    """Width of one of ``m`` PQ subspaces; raises ValueError when the
+    vector width does not split evenly. Read before the caller persists
+    ``vecs``, so rejected input leaves no cache behind."""
+    dims = vecs.select(F.size("emb").alias("d")).first()["d"]
+    if dims % m != 0:
+        raise ValueError(f"dim {dims} not divisible by m={m}")
+    return dims // m
+
+
 def centroids_df(embeddings: DataFrame, n_cells: int = 16) -> DataFrame:
     """Deterministic centroid INIT: the n_cells lowest vec_ids as a
     (cell, c_emb) DataFrame — the seed :func:`kmeans_refine` iterates on."""
@@ -279,8 +291,6 @@ def kmeans_refine(
     coalesce), so a lazy chain would re-execute the whole refinement
     per reference, doubling per iteration, and every downstream consumer
     (corpus assignment, query probes) would pay it again."""
-    from ..session import fresh_checkpoint, release_checkpoint
-
     prev: DataFrame | None = None
     for _ in range(iters):
         assign = assign_cells(vecs, cents, n_probe=1, metric=metric)
@@ -308,8 +318,7 @@ def kmeans_refine(
             cents.join(refined, "cell", "left")
             .select("cell", F.coalesce("r_emb", "c_emb").alias("c_emb"))
         )
-        if prev is not None:
-            release_checkpoint(prev)
+        release(prev)
         prev = cents
     return cents
 
@@ -421,12 +430,7 @@ def ann_ivf(
     )
     # materialize the (query-sized) result once and release the working
     # set, so nothing stays cached behind the answer in a shared session
-    from ..session import fresh_checkpoint, release_checkpoint
-
-    res = fresh_checkpoint(out)
-    vecs.unpersist()
-    release_checkpoint(cents)
-    return res
+    return checkpoint_result(out, vecs, cents)
 
 
 def maxsim_topk(
@@ -595,7 +599,6 @@ def pq_topk(
     kmeans_iters: int = 1,
     n_queries: int = 10,
     k: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation —
     the billion-scale memory-compression path (Jégou et al., PQ): split
@@ -616,12 +619,10 @@ def pq_topk(
     FIXED expression order (d0^2+d1^2+...+sqrt+round), so the DuckDB
     oracle reproduces the ranking bit-for-bit. Approximate by design —
     recall vs :func:`knn_bruteforce` is measured in tests."""
-    vecs = _vecs(embeddings).persist()
+    vecs = _vecs(embeddings)
+    dsub = _subspace_width(vecs, m)
+    vecs = vecs.persist()
     vecs.count()  # m subspaces re-slice this table; read cache, not parquet
-    dims = vecs.select(F.size("emb").alias("d")).first()["d"]
-    if dims % m != 0:
-        raise ValueError(f"dim {dims} not divisible by m={m}")
-    dsub = dims // m
     codes = None
     luts = []
     books: list[DataFrame] = []
@@ -670,17 +671,7 @@ def pq_topk(
         .filter(F.col("rank") <= k)
         .select("q_id", "n_id", "score", "rank")
     )
-    if not materialize:
-        # plan-inspection path (tests): hand back the LAZY dataflow so the
-        # broadcast-LUT/JVM-only plan shape stays assertable
-        return out
-    from ..session import fresh_checkpoint, release_checkpoint
-
-    res = fresh_checkpoint(out)
-    vecs.unpersist()
-    for c in books:
-        release_checkpoint(c)
-    return res
+    return checkpoint_result(out, vecs, *books)
 
 
 def ivfpq_topk(
@@ -711,12 +702,10 @@ def ivfpq_topk(
     rounded float64, fixed summation order): the DuckDB oracle
     reproduces the exact ranking.
     """
-    vecs = _vecs(embeddings).persist()
+    vecs = _vecs(embeddings)
+    dsub = _subspace_width(vecs, m)
+    vecs = vecs.persist()
     vecs.count()  # coarse + m fine stages re-read this; cache it once
-    dims = vecs.select(F.size("emb").alias("d")).first()["d"]
-    if dims % m != 0:
-        raise ValueError(f"dim {dims} not divisible by m={m}")
-    dsub = dims // m
     # coarse quantizer (euclid, to match the PQ distance space)
     coarse = centroids_df(embeddings, n_cells)
     if kmeans_iters:
@@ -777,13 +766,7 @@ def ivfpq_topk(
         .filter(F.col("rank") <= k)
         .select("q_id", "n_id", "score", "rank")
     )
-    from ..session import fresh_checkpoint, release_checkpoint
-
-    res = fresh_checkpoint(out)
-    vecs.unpersist()
-    for c in books:
-        release_checkpoint(c)
-    return res
+    return checkpoint_result(out, vecs, *books)
 
 
 def mmr_rerank(

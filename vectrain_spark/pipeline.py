@@ -75,7 +75,7 @@ from .operators.linking import (
     make_linker,
     mention_surfaces,
 )
-from .session import fresh_checkpoint, release_checkpoint
+from .session import fresh_checkpoint, release
 from .textops import EMBED_DIM
 
 
@@ -289,9 +289,7 @@ def _run_group(
         )
         _prof(f"group {group} write triples", tp)
     finally:
-        if linked_m is not None:
-            release_checkpoint(linked_m)
-        fused.unpersist()
+        release(linked_m, fused)
     return {"group": group, "wall_sec": time.time() - t0}
 
 
@@ -383,7 +381,7 @@ def finalize(spark: SparkSession, cat: Catalog) -> dict:
         cat.write("adjacency", adjacency, mode="replace")
         _prof("finalize materialize", t0)
     finally:
-        release_checkpoint(canonical)
+        release(canonical)
     return {
         "total_triples": int(n_triples),
         "canonical_triples": int(n_canonical),

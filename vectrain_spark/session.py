@@ -97,7 +97,7 @@ def fresh_checkpoint(df, eager: bool = True):
     next round consumes the frame anyway.
 
     The checkpointed JVM-side RDD handle is attached to the returned
-    frame so :func:`release_checkpoint` can free its blocks as soon as a
+    frame so :func:`release` can free its blocks as soon as a
     loop supersedes it — otherwise every round's blocks stay resident
     until GC, which VERDICT r5 measured as a 5.3x constant factor on
     kg_scc and suspected of degrading every query after it in a shared
@@ -133,16 +133,43 @@ def fresh_checkpoint(df, eager: bool = True):
         return ck
 
 
-def release_checkpoint(df) -> None:
-    """Free the storage blocks of a frame returned by
-    :func:`fresh_checkpoint`, once every consumer of the frame has
-    materialized. A local checkpoint's lineage is truncated, so this
-    must only be called when the frame is genuinely dead — a later job
-    over it cannot recompute. No-op for non-checkpoint frames and on
-    the fallback path."""
-    jrdd = getattr(df, "_fresh_ckpt_jrdd", None)
-    if jrdd is not None:
-        try:
-            jrdd.unpersist(False)
-        except Exception:  # pragma: no cover - session already stopped
-            pass
+def release(*frames) -> None:
+    """Free the working set behind each frame: the storage blocks of a
+    :func:`fresh_checkpoint` frame, the cache of any other (persisted)
+    frame; ``None`` is skipped. Call it only once every consumer has
+    materialized: a checkpoint's lineage is truncated, so a later job
+    over a released checkpoint cannot recompute it."""
+    for df in frames:
+        jrdd = getattr(df, "_fresh_ckpt_jrdd", None)
+        if jrdd is not None:
+            try:
+                jrdd.unpersist(False)
+            except Exception:  # pragma: no cover - session already stopped
+                pass
+        elif df is not None:
+            df.unpersist()
+
+
+def checkpoint_result(out, *working):
+    """Materialize an operator's result once, as a stats-reset
+    checkpoint, then :func:`release` the ``working`` frames it was
+    built from (persisted inputs, superseded loop state), so nothing
+    stays cached behind the answer in a shared session: leaked
+    per-query working sets otherwise pile up into memory pressure that
+    taxes every later query. The caller owns the returned checkpoint.
+
+    A fixed-round loop whose round references the previous state once
+    (pagerank/katz/ppr shape) unrolls into ONE lazy plan, linear in the
+    round count (its size estimate grows in value, not in digit count,
+    so no SPARK-39834 blow-up), and this runs it as a single job: on
+    this engine every eager per-round checkpoint is a job submission
+    with a ~0.4 s floor at local[32]. Frames that the plan references more than once are
+    ``persist()``-ed lazily by the caller and filled by a plain
+    ``count()`` each BEFORE this job: concurrent stages inside one job
+    would otherwise race to fill the same cache and recompute the
+    frame's lineage per consumer (measured 2x on label propagation's
+    symmetrized edge cache). The counts double as the size signal for
+    broadcast-vs-shuffle join dispatch."""
+    res = fresh_checkpoint(out)
+    release(*working)
+    return res

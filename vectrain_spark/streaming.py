@@ -33,6 +33,7 @@ from .catalog import Catalog
 from .operators.canonicalize import apply_canonical
 from .operators.extract import extract_pages, extract_triples_df, split_quarantine
 from .operators.linking import AliasIndex, link_mentions, mention_surfaces
+from .session import release
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -181,7 +182,7 @@ def start_ingest(
                     meta={"stream_batch": batch_id},
                 )
         finally:
-            linked_m.unpersist()
+            release(linked_m)
 
     writer = (
         pages_stream(spark, pages_dir, max_files_per_trigger)
@@ -313,8 +314,7 @@ def start_dedup_ingest(
                     meta={"stream_batch": batch_id},
                 )
         finally:
-            hn.unpersist()
-            sn.unpersist()
+            release(hn, sn)
 
     writer = (
         docs_stream(spark, docs_dir, max_files_per_trigger)
