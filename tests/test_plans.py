@@ -24,6 +24,26 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _lazy_plans(monkeypatch, *modules, plan=_plan, run=False) -> list[str]:
+    """Plans of every lazy frame the operators in ``modules`` hand to
+    session.checkpoint_result, in call order: the operator's own
+    dataflow, planned before it is checkpointed (the returned result is
+    a checkpoint scan). ``run`` executes the frame first, so adaptive
+    execution has settled the plan being read."""
+    plans: list[str] = []
+    for module in modules:
+        orig = module.checkpoint_result
+
+        def spy(out, *working, _orig=orig):
+            if run:
+                out.collect()
+            plans.append(plan(out))
+            return _orig(out, *working)
+
+        monkeypatch.setattr(module, "checkpoint_result", spy)
+    return plans
+
+
 def test_extract_prunes_columns(spark, pages_df):
     """The pages scan must read only (url, warc_ts, html, lang) — never a
     full-row materialization (ReadSchema check ~ column pruning)."""
@@ -347,15 +367,7 @@ def test_pq_topk_jvm_only_with_broadcast_luts(spark, monkeypatch):
     code table is the only large side at scale."""
     from vectrain_spark.operators import similarity
 
-    plans: list[str] = []
-    orig = similarity.checkpoint_result
-
-    def spy(out, *working):
-        # the LAZY dataflow, planned before it is checkpointed
-        plans.append(_plan(out))
-        return orig(out, *working)
-
-    monkeypatch.setattr(similarity, "checkpoint_result", spy)
+    plans = _lazy_plans(monkeypatch, similarity)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     similarity.pq_topk(spark, emb)
     (plan,) = plans
@@ -433,14 +445,16 @@ def test_link_eval_pr_is_hash_join_not_nested_loop(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_neighbor_jaccard_wedges_are_degree_oriented(spark):
+def test_neighbor_jaccard_wedges_are_degree_oriented(spark, monkeypatch):
     """The common-neighbor stage must ride the oriented wedge join (two
     broadcast degree joins feeding the orientation), never a symmetric
     self-join on the raw pivot."""
-    from vectrain_spark.operators.graph import neighbor_jaccard
+    from vectrain_spark.operators import graph
 
+    plans = _lazy_plans(monkeypatch, graph, plan=_optimized)
     e = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "a long, b long")
-    plan = _optimized(neighbor_jaccard(e))
+    graph.neighbor_jaccard(e)
+    (plan,) = plans
     # the orientation's CASE WHEN on (deg, id) is present in the plan
     assert "deg_a" in plan and "deg_b" in plan
 
@@ -484,10 +498,10 @@ def test_anchor_aliases_no_python_in_extraction(spark, pages_df):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_fact_fusion_windows_are_partitioned(spark):
+def test_fact_fusion_windows_are_partitioned(spark, monkeypatch):
     """Both fusion windows partition by (subj, pred): no partition-less
     window (single-reducer global sort) may appear."""
-    from vectrain_spark.operators.fusion import fuse_facts
+    from vectrain_spark.operators import fusion
 
     claims = spark.createDataFrame(
         pd.DataFrame(
@@ -499,9 +513,10 @@ def test_fact_fusion_windows_are_partitioned(spark):
             }
         )
     )
-    df = fuse_facts(claims)
-    df.collect()  # finalize AQE so window nodes are visible
-    plan = _plan(df)
+    # run the lazy dataflow first: AQE's final plan shows the windows
+    plans = _lazy_plans(monkeypatch, fusion, run=True)
+    fusion.fuse_facts(claims)
+    (plan,) = plans
     win_lines = [
         ln for ln in plan.splitlines() if "windowspecdefinition(" in ln
     ]
@@ -512,29 +527,31 @@ def test_fact_fusion_windows_are_partitioned(spark):
         assert spec.startswith("subj") and "pred" in spec.split(",")[1], ln
 
 
-def test_r4f_graph_ops_stay_jvm_no_nested_loop(spark):
+def test_r4f_graph_ops_stay_jvm_no_nested_loop(spark, monkeypatch):
     """local_clustering / wl_refinement / modularity: zero Python in the
     plan and no BroadcastNestedLoopJoin / CartesianProduct — every join
     is keyed (the wedge close on (a, b), color/label lookups on id); the
     only cross join allowed is the 1-row broadcast scalar."""
+    from vectrain_spark.operators import graph
     from vectrain_spark.operators.graph import (
         local_clustering,
         modularity,
         wl_refinement,
     )
 
+    lazy = _lazy_plans(monkeypatch, graph)
     pairs = spark.createDataFrame(
         [(i % 7, 7 + (i * 3) % 11) for i in range(40)], "a int, b int"
     ).filter("a < b")
     labels = spark.createDataFrame(
         [(i, i % 3) for i in range(20)], "id int, label int"
     )
-    for df in (
+    dfs = (
         local_clustering(pairs),
         wl_refinement(pairs, rounds=2),
         modularity(pairs, labels),
-    ):
-        plan = _plan(df)
+    )
+    for plan in lazy + [_plan(df) for df in dfs]:
         assert "EvalPython" not in plan, plan
         assert "CartesianProduct" not in plan, plan
         # modularity's edge-count scalar is a 1-row broadcast cross join
@@ -544,16 +561,19 @@ def test_r4f_graph_ops_stay_jvm_no_nested_loop(spark):
         assert nlj <= 1, plan
 
 
-def test_bpe_train_is_all_jvm(spark):
+def test_bpe_train_is_all_jvm(spark, monkeypatch):
     """The BPE training loop must never leave the JVM: pair explode,
     argmax, and the merge replace are whole-stage-codegen expressions."""
-    from vectrain_spark.operators.textstats import bpe_train
+    from vectrain_spark.operators import textstats
 
+    lazy = _lazy_plans(monkeypatch, textstats)
     docs = spark.createDataFrame(
         [(i, "abab cdcd abcd") for i in range(10)], "doc_id long, text string"
     )
-    plan = _plan(bpe_train(docs, merges=2))
-    assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
+    out = textstats.bpe_train(docs, merges=2)
+    assert lazy
+    for plan in lazy + [_plan(out)]:
+        assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
 
 
 def test_warc_build_is_jvm_parse_is_single_arrow_pass(spark):
@@ -575,11 +595,12 @@ def test_warc_build_is_jvm_parse_is_single_arrow_pass(spark):
     assert parse_plan.count("MapInPandas") == 1, parse_plan
 
 
-def test_r4g_ops_stay_jvm_keyed_joins(spark):
+def test_r4g_ops_stay_jvm_keyed_joins(spark, monkeypatch):
     """simrank / strongly_connected_components / resolve_redirects /
     skyline_2d: zero Python in every plan; the only nested-loop joins
     allowed are 1-row broadcast scalars (simrank and skyline each
     broadcast one scalar/offset table)."""
+    from vectrain_spark.operators import graph, pareto, webcorpus
     from vectrain_spark.operators.graph import (
         simrank,
         strongly_connected_components,
@@ -587,6 +608,7 @@ def test_r4g_ops_stay_jvm_keyed_joins(spark):
     from vectrain_spark.operators.pareto import skyline_2d
     from vectrain_spark.operators.webcorpus import resolve_redirects
 
+    lazy = _lazy_plans(monkeypatch, graph, pareto, webcorpus)
     edges = spark.createDataFrame(
         [(f"v{i % 7}", f"v{(i * 3 + 1) % 11}") for i in range(30)],
         "src string, dst string",
@@ -595,7 +617,7 @@ def test_r4g_ops_stay_jvm_keyed_joins(spark):
         [(i, float(i % 13), (i * 7) % 17) for i in range(60)],
         "id long, price double, size int",
     )
-    for df in (
+    dfs = (
         simrank(edges, rounds=2),
         # force the distributed path: the plan property under test is the
         # scale shape, not the small-graph Tarjan dispatch
@@ -607,39 +629,43 @@ def test_r4g_ops_stay_jvm_keyed_joins(spark):
             )
         ),
         skyline_2d(rows, "price", "size"),
-    ):
-        plan = _plan(df)
+    )
+    for plan in lazy + [_plan(df) for df in dfs]:
         assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
         assert "CartesianProduct" not in plan, plan
 
 
-def test_kmeans_parallel_seed_broadcasts_candidates(spark):
+def test_kmeans_parallel_seed_broadcasts_candidates(spark, monkeypatch):
     """k-means|| plan: candidates and the 1-row cost scalar broadcast
     (BroadcastNestedLoopJoin over one row / a tiny candidate set is the
     intended shape); the corpus side must never EvalPython and never
     shuffle-sort — per-point minima are hash aggregates."""
-    from vectrain_spark.operators.similarity import kmeans_parallel_seed
+    from vectrain_spark.operators import similarity
 
+    plans = _lazy_plans(monkeypatch, similarity)
     emb = spark.createDataFrame(
         [(i, [float(i % 5), float(i % 3)]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
-    plan = _plan(kmeans_parallel_seed(emb, l=4, rounds=2))
-    assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastExchange" in plan, plan
+    similarity.kmeans_parallel_seed(emb, l=4, rounds=2)
+    for plan in plans:  # every round, then the weighting pass
+        assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastExchange" in plan, plan
 
 
-def test_r4h_ops_stay_jvm_keyed_joins(spark):
+def test_r4h_ops_stay_jvm_keyed_joins(spark, monkeypatch):
     """snm_candidates / ontology_infer_types / functional_conflicts:
     zero Python anywhere; no cartesian product; the SNM candidate join
     and the conflicts self-join are hash-keyed; every window in the SNM
     rank is partitioned (the two-phase rank never sorts globally)."""
+    from vectrain_spark.operators import graph
     from vectrain_spark.operators.graph import ontology_infer_types
     from vectrain_spark.operators.linking import snm_candidates
     from vectrain_spark.operators.temporal import functional_conflicts
     import datetime as dt
 
+    lazy = _lazy_plans(monkeypatch, graph)
     recs = spark.createDataFrame(
         [(i, f"name{i % 9}") for i in range(50)], "id long, name string"
     )
@@ -657,32 +683,35 @@ def test_r4h_ops_stay_jvm_keyed_joins(spark):
         "subj string, pred string, obj string, valid_from timestamp,"
         " valid_to timestamp, is_current boolean",
     )
-    for df in (
+    dfs = (
         snm_candidates(recs, "name", "id", window=4),
         ontology_infer_types(assertions, hier),
         functional_conflicts(hist, ["subj", "pred"], "obj"),
-    ):
-        plan = _plan(df)
+    )
+    for plan in lazy + [_plan(df) for df in dfs]:
         assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoop" not in plan, plan
 
 
-def test_luby_mis_rounds_are_keyed_aggregates(spark):
+def test_luby_mis_rounds_are_keyed_aggregates(spark, monkeypatch):
     """Each Luby round must be hash joins + a keyed min-aggregate:
     no Python, no cartesian product, no window at all (the winner rule
     is an aggregate, never a sort)."""
-    from vectrain_spark.operators.graph import luby_mis
+    from vectrain_spark.operators import graph
 
+    plans = _lazy_plans(monkeypatch, graph)
     pairs = spark.createDataFrame(
         [(f"v{i}", f"v{(i + 1) % 30}") for i in range(30)],
         "a string, b string",
     )
-    plan = _plan(luby_mis(pairs, rounds=2))
-    assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoop" not in plan, plan
-    assert "WindowExec" not in plan, plan
+    graph.luby_mis(pairs, rounds=2)
+    assert plans
+    for plan in plans:  # every round's state update, then the result
+        assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoop" not in plan, plan
+        assert "WindowExec" not in plan, plan
 
 
 def test_r4i_gates_stay_jvm_side(spark):

@@ -7,8 +7,20 @@ collection can only remove ids, so the check is deterministic."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from vectrain_spark.operators import canonicalize, dedup, graph, similarity
+from vectrain_spark.operators import (
+    canonicalize,
+    corpus,
+    dedup,
+    events,
+    fusion,
+    graph,
+    pareto,
+    similarity,
+    textstats,
+    webcorpus,
+)
 from vectrain_spark.session import release
 
 
@@ -28,6 +40,52 @@ def _edges(spark):
 
 def _seeds(spark):
     return spark.createDataFrame([("a",), ("x",)], "seed string")
+
+
+def _pairs(spark):
+    # undirected a < b: a 4-clique (a..d) with a tail, a triangle and a
+    # separate pair — triangles, 4-truss support and more than one core
+    return spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
+         ("c", "d"), ("d", "e"), ("e", "f"), ("e", "g"), ("f", "g"),
+         ("x", "y")],
+        "a string, b string",
+    )
+
+
+def _wedges(spark):
+    p = _pairs(spark)
+    return p.withColumn("w", (F.length(F.concat("a", "b")) + F.ascii("b")).cast("long"))
+
+
+def _rpq_edges(spark):
+    return spark.createDataFrame(
+        [("s0", "a", "s"), ("a", "b", "m"), ("b", "c", "m"), ("c", "a", "m"),
+         ("b", "t1", "e"), ("c", "t2", "e")],
+        "src string, dst string, pred string",
+    )
+
+
+def _events(spark):
+    import datetime as dt
+
+    rows = [
+        (1, dt.datetime(2024, 1, 1, 0), 1, "view"),
+        (2, dt.datetime(2024, 1, 1, 1), 1, "click"),
+        (3, dt.datetime(2024, 1, 1, 2), 1, "purchase"),
+        (4, dt.datetime(2024, 1, 1, 0), 2, "view"),
+    ]
+    return spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string"
+    )
+
+
+def _claims(spark):
+    return spark.createDataFrame(
+        [("u1", "s", "p", "x"), ("u2", "s", "p", "y"), ("u3", "s", "p", "x"),
+         ("u1", "t", "p", "z")],
+        "source string, subj string, pred string, obj string",
+    )
 
 
 def _corpus(spark):
@@ -50,7 +108,7 @@ def _lpa(spark):
     return graph.label_propagation(e.select(e.src.alias("a"), e.dst.alias("b")), 2)
 
 
-# every caller of checkpoint_result, on inputs built inside the call
+# every operator that checkpoints, on inputs built inside the call
 # (building a frame persists nothing)
 OPS = {
     "minhash_pairs": lambda s: dedup.minhash_pairs(_corpus(s)),
@@ -67,6 +125,63 @@ OPS = {
         _edges(s), small_graph_max_edges=0
     ),
     "bowtie_classes": lambda s: graph.bowtie_classes(_edges(s)),
+    "cc_scale_path": lambda s: canonicalize.connected_components(
+        _edges(s), small_graph_max_edges=0
+    ),
+    "k_core": lambda s: graph.k_core(_pairs(s), k=2, rounds=3),
+    "transitive_closure": lambda s: graph.transitive_closure(_edges(s)),
+    "triangle_counts": lambda s: graph.triangle_counts(_pairs(s)),
+    "local_clustering": lambda s: graph.local_clustering(_pairs(s)),
+    "wl_refinement": lambda s: graph.wl_refinement(_pairs(s)),
+    "neighbor_jaccard": lambda s: graph.neighbor_jaccard(_pairs(s)),
+    "adamic_adar": lambda s: graph.adamic_adar(_pairs(s)),
+    "k_truss": lambda s: graph.k_truss(_pairs(s), k=3, rounds=2),
+    "label_spread": lambda s: graph.label_spread(
+        _pairs(s),
+        s.createDataFrame([("a", "org"), ("x", "person")], "id string, type string"),
+        2,
+    ),
+    "modularity": lambda s: graph.modularity(
+        _pairs(s),
+        s.createDataFrame([("a", 1), ("b", 1), ("e", 2)], "id string, label int"),
+    ),
+    "random_walks": lambda s: graph.random_walks(_edges(s)),
+    "random_walks_node2vec": lambda s: graph.random_walks_node2vec(_edges(s)),
+    "neighbor_minhash": lambda s: graph.neighbor_minhash(_pairs(s)),
+    "hyperball": lambda s: graph.hyperball(_edges(s), max_t=2),
+    "simrank": lambda s: graph.simrank(_edges(s), rounds=2),
+    "betweenness_scale_path": lambda s: graph.betweenness_sampled(
+        _edges(s), _seeds(s), small_graph_max_edges=0
+    ),
+    "luby_mis": lambda s: graph.luby_mis(_pairs(s), rounds=2),
+    "boruvka_msf": lambda s: graph.boruvka_msf(_wedges(s), rounds=2),
+    "rpq_bounded": lambda s: graph.rpq_bounded(_rpq_edges(s), "s", "m", "e"),
+    "pseudo_diameter": lambda s: graph.pseudo_diameter(_edges(s), rounds=3),
+    "resolve_redirects": lambda s: webcorpus.resolve_redirects(_edges(s), max_rounds=3),
+    "mmr_rerank": lambda s: similarity.mmr_rerank(
+        _embeddings(s), n_queries=2, pool=6, k=3
+    ),
+    "kmeans_parallel_seed": lambda s: similarity.kmeans_parallel_seed(
+        _embeddings(s), l=3
+    ),
+    "unigram_lm_train": lambda s: textstats.unigram_lm_train(_corpus(s), iters=1),
+    "bpe_train": lambda s: textstats.bpe_train(_corpus(s), merges=2),
+    "bpe_encode_tokens": lambda s: textstats.bpe_encode_tokens(_corpus(s), merges=2),
+    "attribution_removal_effect": lambda s: events.attribution_removal_effect(
+        _events(s)
+    ),
+    "pack_sequences": lambda s: corpus.pack_sequences(
+        _corpus(s).withColumn("lang", F.lit("en")), capacity=16
+    ),
+    "fuse_facts": lambda s: fusion.fuse_facts(_claims(s)),
+    "skyline_2d": lambda s: pareto.skyline_2d(
+        s.createDataFrame(
+            [(1, 1.0, 10), (2, 2.0, 20), (3, 3.0, 15)],
+            "id long, price double, size int",
+        ),
+        "price",
+        "size",
+    ),
     "ann_ivf": lambda s: similarity.ann_ivf(s, _embeddings(s), n_queries=3, n_cells=4),
     "pq_topk": lambda s: similarity.pq_topk(s, _embeddings(s), n_queries=3),
     "ivfpq_topk": lambda s: similarity.ivfpq_topk(
@@ -104,3 +219,38 @@ def test_pq_rejects_indivisible_dims_without_caching(spark, op):
     with pytest.raises(ValueError):
         getattr(similarity, op)(spark, vecs, m=3)
     assert _persisted(spark) - before == set()
+
+
+def _method_calls(path, names: set[str]) -> list[tuple[int, str]]:
+    """(line, name) of every ``.name(`` call in the code of ``path``:
+    tokenizing keeps comments, docstrings and other strings out."""
+    import tokenize
+
+    skip = {tokenize.NL, tokenize.NEWLINE, tokenize.COMMENT, tokenize.INDENT,
+            tokenize.DEDENT}
+    with open(path) as f:
+        toks = [t for t in tokenize.generate_tokens(f.readline) if t.type not in skip]
+    return [
+        (tok.start[0], tok.string)
+        for dot, tok, paren in zip(toks, toks[1:], toks[2:])
+        if dot.string == "." and tok.type == tokenize.NAME
+        and tok.string in names and paren.string == "("
+    ]
+
+
+def test_only_session_cuts_and_frees_lineage():
+    """session.py owns how lineage is cut and freed: no other module
+    calls ``.localCheckpoint(`` (which skips the stats reset and leaves
+    blocks release cannot free) or ``.unpersist(``."""
+    from pathlib import Path
+
+    import vectrain_spark
+
+    root = Path(vectrain_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(root)}:{line} .{name}("
+        for p in sorted(root.rglob("*.py"))
+        if p.name != "session.py"
+        for line, name in _method_calls(p, {"localCheckpoint", "unpersist"})
+    ]
+    assert hits == []

@@ -15,8 +15,9 @@ DataFrame programs:
   aggregation skew (no explicit salt column needed for an algebraic min);
 * the min-label join back onto the (skewed) edge list is covered by AQE
   skew-join splitting (enabled in session.py);
-* each iteration is ``localCheckpoint``-ed to truncate lineage, otherwise
-  the plan grows exponentially with iterations;
+* each iteration is checkpointed and the round it superseded freed
+  (``session.checkpoint_result``), otherwise the plan grows
+  exponentially with iterations;
 * convergence is O(log n) rounds; checked by an edge-set checksum.
 """
 
@@ -25,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import fresh_checkpoint, release
+from ..session import checkpoint_result, fresh_checkpoint, release
 
 # The one small-graph limit. Graphs whose distinct (src, dst) pairs number
 # at or under it are collected and solved driver-side (union-find for CC,
@@ -175,23 +176,23 @@ def connected_components(
         .unionAll(e_all.select(F.col("dst").alias("id")))
         .distinct()
     )
-    e = e_all.filter(F.col("src") != F.col("dst")).localCheckpoint()
-    release(e_all)
+    e = checkpoint_result(e_all.filter(F.col("src") != F.col("dst")), e_all)
     prev = None
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        e = checkpoint_result(_small_star(_large_star(e)), e)
         cur = _checksum(e)
         if cur == prev:
             break
         prev = cur
     else:
+        release(nodes, e)
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     # converged: every non-root has exactly one edge to its component min
     labels = e.select(F.col("src").alias("id"), F.col("dst").alias("canon"))
     mapping = nodes.join(labels, "id", "left").select(
         "id", F.coalesce("canon", "id").alias("canon")
     )
-    return mapping
+    return checkpoint_result(mapping, nodes, e)
 
 
 def apply_canonical(

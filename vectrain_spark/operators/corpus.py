@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import release
+from ..session import fresh_checkpoint, release
 
 # Java-regex / RE2 common-subset patterns (no lookaround, no \b needed —
 # the planted fixture delimits tokens with spaces).
@@ -224,7 +224,7 @@ def pack_sequences(
     persist (pinning the sampled range boundaries), per-(partition,
     shard) token totals to the driver (<= P x shards rows —
     maintenance-scale), prefix-sum those into offsets, broadcast back,
-    and each task window-sums only its own range. localCheckpoint lets
+    and each task window-sums only its own range. A checkpoint lets
     the staging cache release without recompute ever resampling
     boundaries.
     """
@@ -266,7 +266,7 @@ def pack_sequences(
         pre = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
         first = F.floor(F.col("start_offset") / capacity)
         last = F.floor((F.col("start_offset") + F.col("n_tokens") - 1) / capacity)
-        out = (
+        out = fresh_checkpoint(
             parted.join(off, ["_pid", shard_col])
             .withColumn("start_offset", F.col("_off") + pre)
             .select(
@@ -278,7 +278,6 @@ def pack_sequences(
                 last.cast("long").alias("last_bin"),
                 (last - first + 1).cast("long").alias("n_bins"),
             )
-            .localCheckpoint()
         )
     finally:
         release(parted)

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint_result, fresh_checkpoint
+
 
 def asof_join(
     left: DataFrame,
@@ -557,17 +559,19 @@ def attribution_removal_effect(
             "p",
         )
     )
-    edges_r = edges.select(
-        F.col("removed").alias("e_removed"),
-        F.col("src").alias("e_src"),
-        "dst",
-        "p",
-    ).localCheckpoint()
+    edges_r = fresh_checkpoint(
+        edges.select(
+            F.col("removed").alias("e_removed"),
+            F.col("src").alias("e_src"),
+            "dst",
+            "p",
+        )
+    )
     v = variants.select(
         "removed", F.lit("start").alias("state"), F.lit(1.0).alias("v")
     )
     for _ in range(steps):
-        v = (
+        nxt = (
             v.join(
                 edges_r,
                 (F.col("removed") == F.col("e_removed"))
@@ -580,8 +584,8 @@ def attribution_removal_effect(
                 F.col("dst").alias("state"),
                 "v",
             )
-            .localCheckpoint()
         )
+        v = checkpoint_result(nxt, v)
     # LEFT join from the variant list: a channel whose removal zeroes
     # conversion has NO conv row in v — it must surface as p_conv=0,
     # removal_effect=1 (the single most important channel), not vanish
@@ -595,7 +599,7 @@ def attribution_removal_effect(
     full = pconv.filter(F.col("removed") == "__none__").select(
         F.col("p_conv").alias("p_full")
     )
-    return (
+    out = (
         pconv.filter(F.col("removed") != "__none__")
         .crossJoin(F.broadcast(full))
         .select(
@@ -613,6 +617,7 @@ def attribution_removal_effect(
             ).alias("removal_effect"),
         )
     )
+    return checkpoint_result(out, edges_r, v)
 
 
 def attribution_oracle_sql(

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import checkpoint_result, fresh_checkpoint
+
 
 def fuse_facts(claims: DataFrame) -> DataFrame:
     """(source, subj, pred, obj) claims -> one fused fact per (subj, pred).
@@ -46,11 +48,11 @@ def fuse_facts(claims: DataFrame) -> DataFrame:
       weight_micro   = integer sum of supporter accuracies in 1e-6 units
       n_alternatives = how many distinct objects competed for the slot
     """
-    # localCheckpoint: the distinct claim set feeds THREE consumers
+    # checkpoint: the distinct claim set feeds THREE consumers
     # (round-1 votes, the accuracy join, the weighted re-vote) — without
     # truncation each consumer re-runs the caller's upstream plan (the
     # full extract->link->canonicalize chain in the gate)
-    c = claims.select("source", "subj", "pred", "obj").distinct().localCheckpoint()
+    c = fresh_checkpoint(claims.select("source", "subj", "pred", "obj").distinct())
     votes = c.groupBy("subj", "pred", "obj").agg(
         F.count(F.lit(1)).alias("votes")
     )
@@ -90,7 +92,7 @@ def fuse_facts(claims: DataFrame) -> DataFrame:
         F.col("weight_micro").desc(), F.col("obj").asc()
     )
     alts = Window.partitionBy("subj", "pred")
-    return (
+    out = (
         weighted.withColumn("rk", F.row_number().over(w2))
         .withColumn("n_alternatives", F.count(F.lit(1)).over(alts))
         .filter(F.col("rk") == 1)
@@ -103,6 +105,7 @@ def fuse_facts(claims: DataFrame) -> DataFrame:
             F.col("n_alternatives").cast("bigint").alias("n_alternatives"),
         )
     )
+    return checkpoint_result(out, c)
 
 
 def fuse_facts_oracle_sql(claims_sql: str) -> str:

@@ -13,8 +13,11 @@ Scale design:
   shuffle, then per-iteration joins co-locate); the per-``dst`` sum is a
   two-phase aggregate (map-side partial combine collapses hub fan-in
   before the exchange — the skew answer for algebraic aggregates);
-  ``localCheckpoint`` truncates the lineage so the plan stays flat
-  across iterations instead of growing exponentially.
+  each round reads the previous ranks once, so the loop unrolls into
+  one plan, linear in the round count, that ``checkpoint_result`` runs
+  as one job. Every loop state and working frame here is cut and freed
+  through the ``session`` verbs (``fresh_checkpoint``, ``release``,
+  ``checkpoint_result``; the latter's docstring gives the why).
 * k-hop is two self-joins with the seed side broadcast — at web scale
   seeds are a handful of entities, so no shuffle touches the edge table
   beyond its own partitioning.
@@ -202,8 +205,8 @@ def katz_centrality(
 
     Scale shape: identical to pagerank — the edge table is partitioned
     once on src and every iteration is one co-partitioned join + one
-    map-side-combinable sum; per-round localCheckpoint truncates the
-    lineage so plan size stays constant in n_iter.
+    map-side-combinable sum; each round reads the previous scores once,
+    so the unrolled plan grows linearly in n_iter.
     """
     e = edges.select("src", "dst").distinct()
     spark = edges.sparkSession
@@ -347,6 +350,17 @@ def k_hop(edges: DataFrame, seeds: DataFrame, k: int = 2) -> DataFrame:
     )
 
 
+def _degrees(e: DataFrame, name: str = "deg") -> DataFrame:
+    """Undirected (a, b) edge list -> (id, ``name``): each node's edge
+    count, a two-phase count (map-side combine collapses hub fan-in)."""
+    return (
+        e.select(F.col("a").alias("id"))
+        .unionAll(e.select(F.col("b").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias(name))
+    )
+
+
 def _oriented_wedges(e: DataFrame) -> DataFrame:
     """Degree-oriented wedge enumeration (Suri & Vassilvitskii WWW'11)
     over a distinct undirected (a, b) edge list -> (u, a, b) wedges
@@ -355,12 +369,7 @@ def _oriented_wedges(e: DataFrame) -> DataFrame:
     bounded by the *oriented* out-degree — O(sqrt(|E|)) even for hub
     nodes — which is the exact-answer hub cap triangle counting and
     per-edge common-neighbor counting both ride on."""
-    deg = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(e)
     da = F.broadcast(deg).withColumnsRenamed({"id": "a", "deg": "deg_a"})
     db = F.broadcast(deg).withColumnsRenamed({"id": "b", "deg": "deg_b"})
     # orient: u = lower (deg, id) endpoint, v = higher
@@ -401,10 +410,10 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     is node-sized and broadcast onto the edge list; the wedge->edge
     existence probe is a shuffle join on the (lo, hi) edge key.
     """
-    # localCheckpoint the edge list (consumed by degrees, orientation and
+    # checkpoint the edge list (consumed by degrees, orientation and
     # the wedge close) and the triangle set (three union branches below)
-    e = pairs.select("a", "b").distinct().localCheckpoint()
-    triangles = _oriented_wedges(e).join(e, ["a", "b"]).localCheckpoint()
+    e = fresh_checkpoint(pairs.select("a", "b").distinct())
+    triangles = checkpoint_result(_oriented_wedges(e).join(e, ["a", "b"]), e)
     per_node = (
         triangles.select(F.col("u").alias("id"))
         .unionAll(triangles.select(F.col("a").alias("id")))
@@ -412,7 +421,7 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    return per_node
+    return checkpoint_result(per_node, triangles)
 
 
 def triangle_counts_oracle_sql(pairs_sql: str) -> str:
@@ -451,14 +460,9 @@ def local_clustering(pairs: DataFrame) -> DataFrame:
     node-sized. Nodes with deg < 2 have no wedge and get 0.0 by
     definition. Output rounded to 6 decimals for cross-engine parity.
     """
-    e = pairs.select("a", "b").distinct().localCheckpoint()
-    deg = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    triangles = _oriented_wedges(e).join(e, ["a", "b"]).localCheckpoint()
+    e = fresh_checkpoint(pairs.select("a", "b").distinct())
+    deg = _degrees(e)
+    triangles = fresh_checkpoint(_oriented_wedges(e).join(e, ["a", "b"]))
     per_node = (
         triangles.select(F.col("u").alias("id"))
         .unionAll(triangles.select(F.col("a").alias("id")))
@@ -467,7 +471,7 @@ def local_clustering(pairs: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
     wedge_pairs = (F.col("deg") * (F.col("deg") - 1) / 2).cast("double")
-    return deg.join(per_node, "id", "left").select(
+    out = deg.join(per_node, "id", "left").select(
         "id",
         F.col("deg").cast("long").alias("deg"),
         F.coalesce(F.col("triangles"), F.lit(0)).cast("long").alias("triangles"),
@@ -480,6 +484,7 @@ def local_clustering(pairs: DataFrame) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("clustering"),
     )
+    return checkpoint_result(out, e, triangles)
 
 
 def wl_refinement(pairs: DataFrame, rounds: int = 2) -> DataFrame:
@@ -504,7 +509,7 @@ def wl_refinement(pairs: DataFrame, rounds: int = 2) -> DataFrame:
     the symmetrized edge list against the node-sized color table + one
     two-phase sum — the PageRank shuffle shape.
     """
-    e = pairs.select("a", "b").distinct().localCheckpoint()
+    e = fresh_checkpoint(pairs.select("a", "b").distinct())
     sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
@@ -522,7 +527,7 @@ def wl_refinement(pairs: DataFrame, rounds: int = 2) -> DataFrame:
         sums = contrib.groupBy(F.col("src").alias("id")).agg(
             F.sum("h").alias("s")
         )
-        colors = (
+        nxt = (
             colors.join(sums, "id", "left")
             .select(
                 "id",
@@ -538,9 +543,12 @@ def wl_refinement(pairs: DataFrame, rounds: int = 2) -> DataFrame:
                     16,
                 ).alias("color"),
             )
-            .localCheckpoint()
         )
-    return colors
+        colors = checkpoint_result(nxt, colors)
+    if rounds > 0:
+        release(e)  # the last round's colors no longer read it
+        return colors
+    return checkpoint_result(colors, e)
 
 
 def wl_refinement_oracle_sql(pairs_sql: str, rounds: int = 2) -> str:
@@ -625,24 +633,17 @@ def neighbor_jaccard(pairs: DataFrame) -> DataFrame:
     three of its edges. Exact — no cap/sample approximation. The
     degree table is node-sized and broadcast.
     """
-    # localCheckpoint the distinct edge list FIRST: degrees, orientation,
+    # checkpoint the distinct edge list FIRST: degrees, orientation,
     # the wedge close and the final joins all scan it — without
     # truncation each consumer re-runs the caller's upstream plan
     # (co_mentions in the gate: ~10 s x 6 evaluations, measured)
-    e = pairs.select("a", "b").distinct().localCheckpoint()
-    deg = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    # _edge_support localCheckpoints the triangle set internally: it
-    # feeds three union branches, and without truncation each branch
-    # re-runs the whole wedge join (measured 4x wall on the bench graph)
-    common = _edge_support(e).withColumnRenamed("support", "common")
+    e = fresh_checkpoint(pairs.select("a", "b").distinct())
+    deg = _degrees(e)
+    supp, tri = _edge_support(e)
+    common = supp.withColumnRenamed("support", "common")
     da = F.broadcast(deg).withColumnsRenamed({"id": "a", "deg": "deg_a"})
     db = F.broadcast(deg).withColumnsRenamed({"id": "b", "deg": "deg_b"})
-    return (
+    out = (
         e.join(da, "a")
         .join(db, "b")
         .join(common, ["a", "b"], "left")
@@ -659,6 +660,7 @@ def neighbor_jaccard(pairs: DataFrame) -> DataFrame:
             ).alias("jaccard"),
         )
     )
+    return checkpoint_result(out, e, tri)
 
 
 def neighbor_jaccard_oracle_sql(pairs_sql: str) -> str:
@@ -707,14 +709,9 @@ def adamic_adar(pairs: DataFrame) -> DataFrame:
     to 6) so the DuckDB oracle reproduces the values bit-for-bit
     regardless of addend order.
     """
-    e = pairs.select("a", "b").distinct().localCheckpoint()
-    deg = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    tri = _oriented_wedges(e).join(e, ["a", "b"]).localCheckpoint()
+    e = fresh_checkpoint(pairs.select("a", "b").distinct())
+    deg = _degrees(e)
+    tri = fresh_checkpoint(_oriented_wedges(e).join(e, ["a", "b"]))
     # each triangle credits all three of its edges; z = the third vertex
     credits = (
         tri.select("a", "b", F.col("u").alias("z"))
@@ -745,20 +742,16 @@ def adamic_adar(pairs: DataFrame) -> DataFrame:
             F.sum(F.round(F.lit(1.0) / F.col("deg_z"), 9)).alias("ra_raw"),
         )
     )
-    return (
-        e.join(scored, ["a", "b"], "left")
-        .select(
-            "a",
-            "b",
-            F.coalesce(F.col("common"), F.lit(0)).cast("long").alias("common"),
-            F.round(F.coalesce(F.col("aa_raw"), F.lit(0.0)), 6).alias(
-                "adamic_adar"
-            ),
-            F.round(F.coalesce(F.col("ra_raw"), F.lit(0.0)), 6).alias(
-                "resource_alloc"
-            ),
-        )
+    out = e.join(scored, ["a", "b"], "left").select(
+        "a",
+        "b",
+        F.coalesce(F.col("common"), F.lit(0)).cast("long").alias("common"),
+        F.round(F.coalesce(F.col("aa_raw"), F.lit(0.0)), 6).alias("adamic_adar"),
+        F.round(F.coalesce(F.col("ra_raw"), F.lit(0.0)), 6).alias(
+            "resource_alloc"
+        ),
     )
+    return checkpoint_result(out, e, tri)
 
 
 def adamic_adar_oracle_sql(pairs_sql: str) -> str:
@@ -803,31 +796,18 @@ def k_core(pairs: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
     hub fan-in before the exchange, so skewed degrees never concentrate
     on one reducer.
     """
-    e0 = pairs.select("a", "b").distinct().persist()
-    e = e0
+    e = pairs.select("a", "b").distinct().persist()
     for _ in range(rounds):
-        deg = (
-            e.select(F.col("a").alias("id"))
-            .unionAll(e.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
+        deg = _degrees(e)
         alive = F.broadcast(deg.filter(F.col("deg") >= k).select("id"))
-        e = (
+        e = checkpoint_result(
             e.join(alive.withColumnRenamed("id", "a"), "a", "left_semi")
             .join(alive.withColumnRenamed("id", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint()
+            .select("a", "b"),
+            e,
         )
-    out = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .filter(F.col("core_degree") >= k)
-    )
-    release(e0)
-    return out
+    out = _degrees(e, "core_degree").filter(F.col("core_degree") >= k)
+    return checkpoint_result(out, e)
 
 
 def k_core_oracle_sql(pairs_sql: str, k: int = 3, rounds: int = 6) -> str:
@@ -860,14 +840,17 @@ SELECT id, count(*)::BIGINT AS core_degree FROM (
 """
 
 
-def _edge_support(e: DataFrame) -> DataFrame:
+def _edge_support(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Per-edge triangle support over a distinct undirected (a, b) edge
-    list -> (a, b, support): how many triangles contain each edge. Rides
-    the degree-oriented wedge enumeration (:func:`_oriented_wedges`) —
-    each triangle found once, crediting all three of its edges — so a
-    hub never pivots the wedge join."""
-    tri = _oriented_wedges(e).join(e, ["a", "b"]).localCheckpoint()
-    return (
+    list -> (lazy (a, b, support), the triangle checkpoint it reads): how
+    many triangles contain each edge. Rides the degree-oriented wedge
+    enumeration (:func:`_oriented_wedges`) — each triangle found once,
+    crediting all three of its edges — so a hub never pivots the wedge
+    join. The triangle set is checkpointed because it feeds three union
+    branches (without truncation each re-runs the wedge join, measured
+    4x wall on the bench graph); the caller releases it."""
+    tri = fresh_checkpoint(_oriented_wedges(e).join(e, ["a", "b"]))
+    supp = (
         tri.select("a", "b")
         .unionAll(
             tri.select(
@@ -882,6 +865,7 @@ def _edge_support(e: DataFrame) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("support"))
     )
+    return supp, tri
 
 
 def k_truss(pairs: DataFrame, k: int = 4, rounds: int = 3) -> DataFrame:
@@ -901,7 +885,7 @@ def k_truss(pairs: DataFrame, k: int = 4, rounds: int = 3) -> DataFrame:
     Scale shape: each round is one degree-ORIENTED wedge enumeration
     (per-pivot fan-out O(sqrt(|E|)) — :func:`_oriented_wedges`) plus a
     two-phase per-edge credit aggregate and an edge-keyed filter join.
-    The surviving edge list is localCheckpointed every round: it feeds
+    The surviving edge list is checkpointed every round: it feeds
     the next round's degrees, orientation, wedge close and filter, and
     without truncation the lineage would re-run all prior rounds per
     consumer. Requires k >= 3 (support >= 1), which lets the filter be
@@ -909,21 +893,23 @@ def k_truss(pairs: DataFrame, k: int = 4, rounds: int = 3) -> DataFrame:
     """
     if k < 3:
         raise ValueError("k_truss requires k >= 3")
-    e = pairs.select("a", "b").distinct().localCheckpoint()
+    e = fresh_checkpoint(pairs.select("a", "b").distinct())
     for _ in range(rounds):
-        supp = _edge_support(e)
-        e = (
+        supp, tri = _edge_support(e)
+        e = checkpoint_result(
             e.join(supp, ["a", "b"])
             .filter(F.col("support") >= k - 2)
-            .select("a", "b")
-            .localCheckpoint()
+            .select("a", "b"),
+            e,
+            tri,
         )
-    final = _edge_support(e)
-    return e.join(final, ["a", "b"], "left").select(
+    final, tri = _edge_support(e)
+    out = e.join(final, ["a", "b"], "left").select(
         "a",
         "b",
         F.coalesce(F.col("support"), F.lit(0)).cast("long").alias("support"),
     )
+    return checkpoint_result(out, e, tri)
 
 
 def k_truss_oracle_sql(pairs_sql: str, k: int = 4, rounds: int = 3) -> str:
@@ -981,7 +967,7 @@ def _global_sorted_rank(
     (<=P rows to the driver — maintenance-scale, not a data collect),
     prefix-sum the counts into offsets, and rank within each partition
     (Window.partitionBy(pid) — every task sorts only its own range). The
-    result is localCheckpoint-ed so the staging cache can be released
+    result is checkpointed so the staging cache can be released
     immediately and downstream recomputes can never resample boundaries.
 
     rank = offset[pid] + row_number-within-pid - 1 == global sorted rank,
@@ -1009,11 +995,10 @@ def _global_sorted_rank(
             spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
         )
         w = Window.partitionBy("_pid").orderBy(col)
-        ranked = (
+        ranked = fresh_checkpoint(
             parted.join(off, "_pid")
             .withColumn(out, F.row_number().over(w) - 1 + F.col("_off"))
             .drop("_pid", "_off")
-            .localCheckpoint(eager=True)
         )
     finally:
         release(parted)
@@ -1126,11 +1111,11 @@ def hits(edges: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
     joins key on one side of it; the per-target sums are two-phase
     aggregates with map-side combine, the skew answer for hub fan-in);
     the L1 total is a 1-row aggregate broadcast back into the projection
-    (never a driver-side collect in the data path); ``localCheckpoint``
-    keeps the plan flat across iterations. Determinism / oracle parity:
-    scores round to ITER_ROUND decimals after every normalization, so
-    both engines iterate on identical doubles (same contract as
-    pagerank's unrolled-CTE oracle).
+    (never a driver-side collect in the data path); a per-round
+    checkpoint keeps the plan flat across iterations. Determinism /
+    oracle parity: scores round to ITER_ROUND decimals after every
+    normalization, so both engines iterate on identical doubles (same
+    contract as pagerank's unrolled-CTE oracle).
     """
     e = edges.select("src", "dst").distinct()
     spark = edges.sparkSession
@@ -1287,7 +1272,7 @@ def label_propagation(pairs: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     collapses hub fan-in, then a per-node top-1 pick. That pick is a
     window, but partitioned BY NODE over per-label counts (cardinality <=
     degree), which Spark >= 3.5 executes as a WindowGroupLimit — never a
-    global sort. ``localCheckpoint`` keeps the iterated plan flat.
+    global sort. A per-round checkpoint keeps the iterated plan flat.
     """
     e = pairs.select("a", "b").distinct()
     sym = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -1432,15 +1417,18 @@ def label_spread(
     against the node-sized type table + a two-phase (node, type) count
     (map-side combine collapses hub fan-in) + a per-node top-1 window
     over per-type counts (cardinality <= degree — WindowGroupLimit,
-    never a global sort); localCheckpoint keeps the iterated plan flat.
+    never a global sort); a per-round checkpoint keeps the iterated plan
+    flat.
     """
     from pyspark.sql import Window
 
     e = pairs.select("a", "b").distinct()
-    sym = e.select(F.col("a").alias("v"), F.col("b").alias("u")).unionAll(
-        e.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    ).localCheckpoint()
-    types = seeds.select("id", "type").localCheckpoint()
+    sym = fresh_checkpoint(
+        e.select(F.col("a").alias("v"), F.col("b").alias("u")).unionAll(
+            e.select(F.col("b").alias("v"), F.col("a").alias("u"))
+        )
+    )
+    types = fresh_checkpoint(seeds.select("id", "type"))
     w = Window.partitionBy("v").orderBy(F.desc("cnt"), F.asc("type"))
     for _ in range(rounds):
         counts = (
@@ -1454,7 +1442,8 @@ def label_spread(
             .select(F.col("v").alias("id"), "type")
             .join(types.select("id"), "id", "left_anti")
         )
-        types = types.unionAll(fresh).localCheckpoint()
+        types = checkpoint_result(types.unionAll(fresh), types)
+    release(sym)
     return types
 
 
@@ -1506,7 +1495,7 @@ def modularity(pairs: DataFrame, labels: DataFrame) -> DataFrame:
     three aggregates and two node-sized joins — no shuffle touches the
     edge list beyond its own grouping even at 10^12 edges.
     """
-    e = pairs.select("a", "b").distinct().localCheckpoint()
+    e = fresh_checkpoint(pairs.select("a", "b").distinct())
     lab = labels.select("id", "label")
     m = e.groupBy().agg(F.count(F.lit(1)).alias("m"))
     la = lab.withColumnsRenamed({"id": "a", "label": "lab_a"})
@@ -1518,12 +1507,7 @@ def modularity(pairs: DataFrame, labels: DataFrame) -> DataFrame:
         .groupBy(F.col("lab_a").alias("label"))
         .agg(F.count(F.lit(1)).alias("intra_edges"))
     )
-    deg = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(e)
     per_label = (
         lab.join(deg, "id")
         .groupBy("label")
@@ -1532,7 +1516,7 @@ def modularity(pairs: DataFrame, labels: DataFrame) -> DataFrame:
             F.sum("deg").alias("deg_sum"),
         )
     )
-    return (
+    out = (
         per_label.join(intra, "label", "left")
         .crossJoin(F.broadcast(m))
         .select(
@@ -1551,6 +1535,7 @@ def modularity(pairs: DataFrame, labels: DataFrame) -> DataFrame:
             ).alias("contribution"),
         )
     )
+    return checkpoint_result(out, e)
 
 
 def modularity_oracle_sql(pairs_sql: str, labels_sql: str) -> str:
@@ -1642,12 +1627,15 @@ def shortest_paths(
     combine is MIN — order-free over doubles, unlike sums — so the
     unrolled-CTE oracle matches bit-for-bit.
 
-    Scale shape mirrors pagerank: the (weighted, deduped) edge list is
-    hash-partitioned ONCE on src and persisted; each round is one join
-    of the frontier with the edge table plus a two-phase MIN aggregate
-    (map-side combine collapses hub fan-in); localCheckpoint keeps the
-    plan flat. Bounded rounds = bounded iterations — at web scale you
-    run delta-stepping frontiers, but the per-round dataflow is this.
+    Scale shape mirrors pagerank: the (weighted, deduped) edge list plus
+    one zero-cost self-loop per node (edge endpoints and seeds) is
+    hash-partitioned ONCE on src and persisted; each round is one inner
+    join of dist with that table plus a two-phase MIN aggregate
+    (map-side combine collapses hub fan-in). The self-loop's relax row
+    carries each reached node's current dist, so a round reads the
+    previous dist once and the unrolled plan grows linearly, as
+    pagerank's does. Bounded rounds = bounded iterations — at web scale
+    you run delta-stepping frontiers, but the per-round dataflow is this.
     """
     if weight is None:
         e = edges.select("src", "dst").distinct().withColumn("w", F.lit(1.0))
@@ -1662,37 +1650,39 @@ def shortest_paths(
     parts = max(
         1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
     )
-    e = e.repartition(parts, "src").persist()
-    n_e = e.count()  # fill the cache before the single job
+    nodes = (
+        e.select(F.col("src").alias("id"))
+        .unionAll(e.select(F.col("dst").alias("id")))
+        .unionAll(seeds.select(F.col("seed").alias("id")))
+        .distinct()
+    )
+    loops = nodes.select(
+        F.col("id").alias("src"), F.col("id").alias("dst"), F.lit(0.0).alias("w")
+    )
+    e = e.unionByName(loops).repartition(parts, "src").persist()
+    e.count()  # fill the cache before the single job
     # dist holds (seed, reached node) rows, and one seed reaches at most
-    # n_e + 1 nodes: broadcast it only when that bound fits
-    small = seeds.count() * (n_e + 1) <= SMALL_GRAPH_ROWS
+    # n_edges + 1 nodes: broadcast it only when that bound fits
+    small = seeds.count() * (n_edges + 1) <= SMALL_GRAPH_ROWS
     dist = seeds.select(
         F.col("seed"), F.col("seed").alias("id"), F.lit(0.0).alias("dist")
     )
-    # each round references the previous dist TWICE (relax + carry), so
-    # every level gets a lazy persist — deduped by the cache manager
-    # inside the single final job (round-6: was one eager checkpoint job
-    # per round); the dist side broadcasts under the bound above
-    levels: list[DataFrame] = []
+    # one inner join per round (only an inner join honours the broadcast
+    # hint on dist); round(d + 0.0) == d, so each node's self-loop row
+    # keeps its current dist in the min
     for _ in range(rounds):
-        relaxed = (
+        dist = (
             _bc_if(small, dist).join(e.withColumnRenamed("src", "id"), "id")
             .select(
                 "seed",
                 F.col("dst").alias("id"),
                 F.round(F.col("dist") + F.col("w"), ITER_ROUND).alias("dist"),
             )
-        )
-        dist = (
-            dist.unionByName(relaxed)
             .groupBy("seed", "id")
             .agg(F.min("dist").alias("dist"))
-            .persist()
         )
-        levels.append(dist)
     out = dist.select("seed", "id", F.round("dist", OUT_ROUND).alias("dist"))
-    return checkpoint_result(out, e, *levels)
+    return checkpoint_result(out, e)
 
 
 def _shortest_paths_cte_parts(
@@ -1772,7 +1762,7 @@ def personalized_pagerank(
 
     Same dataflow, determinism contract, and scale shape as
     :func:`pagerank` (edge table partitioned once on src, two-phase
-    per-dst sums, per-iteration rounding, localCheckpoint); the base
+    per-dst sums, per-iteration rounding, one unrolled plan); the base
     vector is one broadcast left-join onto the node table. |S| is a
     driver-side count of the seed frame — control-plane, seeds are a
     handful of entities.
@@ -1903,8 +1893,8 @@ def transitive_closure(edges: DataFrame, max_hops: int = CLOSURE_MAX_HOPS) -> Da
     Scale shape: the deduped edge table is hash-partitioned once on src
     and persisted (reused by every round); each round is one
     frontier-edge join + distinct + anti-join, all partitioned on the
-    pair key; localCheckpoint keeps the iterated plan flat. The output
-    is O(|V|^2) in the worst case — at web scale you'd restrict src to a
+    pair key; a per-round checkpoint keeps the iterated plan flat. The
+    output is O(|V|^2) in the worst case — at web scale you'd restrict src to a
     seed set (see k_hop) or a predicate slice; the dataflow per round is
     unchanged.
     """
@@ -1915,8 +1905,9 @@ def transitive_closure(edges: DataFrame, max_hops: int = CLOSURE_MAX_HOPS) -> Da
         1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
     )
     e = e.repartition(parts, "src").persist()
-    closure = e.withColumn("hops", F.lit(1)).localCheckpoint()
+    closure = fresh_checkpoint(e.withColumn("hops", F.lit(1)))
     frontier = closure
+    last = None  # the previous round's new pairs (a checkpoint of its own)
     hop = 1
     while hop < max_hops:
         hop += 1
@@ -1926,17 +1917,17 @@ def transitive_closure(edges: DataFrame, max_hops: int = CLOSURE_MAX_HOPS) -> Da
             .select("src", "dst")
             .distinct()
         )
-        new = (
+        new = fresh_checkpoint(
             grown.join(closure.select("src", "dst"), ["src", "dst"], "left_anti")
             .withColumn("hops", F.lit(hop))
-            .localCheckpoint()
         )
         if not new.take(1):
+            release(new)
             break
-        closure = closure.unionByName(new).localCheckpoint()
-        frontier = new
-    release(e)
-    return closure.filter(F.col("src") != F.col("dst"))
+        closure = checkpoint_result(closure.unionByName(new), closure, last)
+        frontier = last = new
+    out = closure.filter(F.col("src") != F.col("dst"))
+    return checkpoint_result(out, e, closure, last)
 
 
 def transitive_closure_oracle_sql(
@@ -2372,21 +2363,18 @@ def random_walks(edges: DataFrame, length: int = 3) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    # localCheckpoint (not persist): adj/deg/frontier and every step all
-    # re-read the distinct edge set, and an un-unpersisted cache would
-    # outlive the call (the leak ADVICE r2 flagged in dedup); checkpoint
-    # blocks are freed with the DataFrame.
-    e0 = (
+    # checkpoint: adj/deg/frontier and every step all
+    # re-read the distinct edge set
+    e0 = fresh_checkpoint(
         edges.select(
             F.col("src").cast("string").alias("src"),
             F.col("dst").cast("string").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct()
     )
     wsrc = Window.partitionBy("src").orderBy("dst")
     adj = e0.withColumn("idx", F.row_number().over(wsrc) - 1)
     deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    steps = []
     frontier = (
         e0.select("src").distinct().select(
             F.col("src").alias("start"), F.col("src").alias("node")
@@ -2408,7 +2396,11 @@ def random_walks(edges: DataFrame, length: int = 3) -> DataFrame:
             ).cast("long"),
             F.col("deg"),
         )
-        frontier = (
+        # eager checkpoint: each frontier is read TWICE (the output
+        # union and the next step's join) and its lineage is a chain
+        # of joins — without truncation step t recomputes steps 1..t-1
+        # and the self-joining consumers multiply that again.
+        frontier = fresh_checkpoint(
             frontier.join(deg, deg["src"] == frontier["node"])
             .withColumn("c", choice)
             .join(
@@ -2420,16 +2412,12 @@ def random_walks(edges: DataFrame, length: int = 3) -> DataFrame:
                 (F.col("a_src") == F.col("node")) & (F.col("idx") == F.col("c")),
             )
             .select("start", F.col("a_dst").alias("node"))
-            # eager checkpoint: each frontier is read TWICE (the output
-            # union and the next step's join) and its lineage is a chain
-            # of joins — without truncation step t recomputes steps 1..t-1
-            # and the self-joining consumers multiply that again.
-            .localCheckpoint()
         )
+        steps.append(frontier)
         out = out.unionByName(
             frontier.select("start", F.lit(t).cast("long").alias("step"), "node")
         )
-    return out
+    return checkpoint_result(out, e0, *steps)
 
 
 def random_walks_node2vec(
@@ -2456,20 +2444,18 @@ def random_walks_node2vec(
     co-partitioned frontier-vs-adjacency joins as random_walks, plus a
     left join against the edge set on (prev, dst) for the distance-1
     test; the cumulative window partitions per walker (<= out-degree
-    rows). localCheckpoint truncates each step's join-chain lineage.
+    rows). A per-step checkpoint truncates the join-chain lineage.
     """
     from pyspark.sql import Window
 
     def _h(col):
         return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
-    e0 = (
+    e0 = fresh_checkpoint(
         edges.select(
             F.col("src").cast("string").alias("src"),
             F.col("dst").cast("string").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct()
     )
     wsrc = Window.partitionBy("src").orderBy("dst")
     adj = e0.withColumn("idx", F.row_number().over(wsrc) - 1)
@@ -2479,13 +2465,13 @@ def random_walks_node2vec(
     )
     out = starts.select("start", F.lit(0).cast("long").alias("step"), "node")
     if length < 1:
-        return out
+        return checkpoint_result(out, e0)
     # step 1: uniform, exactly random_walks' rule
     c1 = F.pmod(
         _h(F.concat_ws("|", F.col("start"), F.col("node"), F.lit("1"))),
         F.col("deg"),
     )
-    frontier = (
+    frontier = fresh_checkpoint(
         starts.join(deg, deg["src"] == starts["node"])
         .withColumn("c", c1)
         .join(
@@ -2497,8 +2483,8 @@ def random_walks_node2vec(
         .select(
             "start", F.col("node").alias("prev"), F.col("a_dst").alias("node")
         )
-        .localCheckpoint()
     )
+    steps = [frontier]
     out = out.unionByName(
         frontier.select("start", F.lit(1).cast("long").alias("step"), "node")
     )
@@ -2544,7 +2530,7 @@ def random_walks_node2vec(
             ),
             F.col("tot"),
         )
-        frontier = (
+        frontier = fresh_checkpoint(
             cand.withColumn("cw", F.sum("w").over(wcum))
             .withColumn("tot", F.sum("w").over(wtot))
             .withColumn("r", r)
@@ -2555,14 +2541,14 @@ def random_walks_node2vec(
             .select(
                 "start", F.col("node").alias("prev"), F.col("dst").alias("node")
             )
-            .localCheckpoint()
         )
+        steps.append(frontier)
         out = out.unionByName(
             frontier.select(
                 "start", F.lit(t).cast("long").alias("step"), "node"
             )
         )
-    return out
+    return checkpoint_result(out, e0, *steps)
 
 
 def walk_skipgrams(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -2786,7 +2772,7 @@ def neighbor_minhash(
     sig = sym.groupBy("id").agg(
         *[F.min(_h(F.col("nbr"), k)).alias(f"s{k}") for k in range(num_hashes)]
     )
-    sig = sig.localCheckpoint()  # feeds banding + two estimate probes
+    sig = fresh_checkpoint(sig)  # feeds banding + two estimate probes
     bands = sig.select(
         "id",
         F.explode(
@@ -2826,16 +2812,13 @@ def neighbor_minhash(
     n_equal = sum(
         (F.col(f"a{k}") == F.col(f"b{k}")).cast("bigint") for k in range(num_hashes)
     )
-    return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            n_equal.alias("n_equal"),
-            (n_equal / F.lit(float(num_hashes))).alias("est_jaccard"),
-        )
+    out = cand.join(sa, "a").join(sb, "b").select(
+        "a",
+        "b",
+        n_equal.alias("n_equal"),
+        (n_equal / F.lit(float(num_hashes))).alias("est_jaccard"),
     )
+    return checkpoint_result(out, sig)
 
 
 def neighbor_minhash_oracle_sql(
@@ -2912,8 +2895,8 @@ def hyperball(edges: DataFrame, max_t: int = 3) -> DataFrame:
     Scale shape (10^12 edges): each round is ONE co-partitioned join of
     the symmetric edge list against the register table on the neighbor
     key plus ONE (node, bucket)-keyed max-aggregate (map-side combine;
-    register rows per node <= 64). localCheckpoint truncates each
-    round's lineage. max_t rounds = max_t shuffles — no frontier blowup,
+    register rows per node <= 64). A per-round checkpoint truncates
+    the lineage. max_t rounds = max_t shuffles — no frontier blowup,
     no per-node adjacency materialization.
     """
     from .sketch import _HLL_ALPHA_M2, _TWO55, _hash60
@@ -2922,10 +2905,10 @@ def hyperball(edges: DataFrame, max_t: int = 3) -> DataFrame:
         F.col("src").cast("string").alias("src"),
         F.col("dst").cast("string").alias("dst"),
     ).distinct()
-    sym = (
-        e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint()
+    sym = fresh_checkpoint(
+        e0.unionAll(
+            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct()
     )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     h = _hash60(F.col("node"))
@@ -2936,9 +2919,10 @@ def hyperball(edges: DataFrame, max_t: int = 3) -> DataFrame:
         .otherwise(F.lit(55) - F.length(F.bin(rest)))
         .cast("int")
     )
-    regs = nodes.select(
-        "node", bucket.alias("bucket"), rank.alias("max_rank")
-    ).localCheckpoint()
+    regs = fresh_checkpoint(
+        nodes.select("node", bucket.alias("bucket"), rank.alias("max_rank"))
+    )
+    states = [regs]
 
     def _nf(r: DataFrame, t: int) -> DataFrame:
         per_node = (
@@ -2975,22 +2959,23 @@ def hyperball(edges: DataFrame, max_t: int = 3) -> DataFrame:
         prop = sym.join(regs, sym["dst"] == regs["node"]).select(
             sym["src"].alias("node"), "bucket", "max_rank"
         )
-        regs = (
+        regs = fresh_checkpoint(
             regs.unionAll(prop)
             .groupBy("node", "bucket")
             .agg(F.max("max_rank").alias("max_rank"))
-            .localCheckpoint()
         )
+        states.append(regs)
         rows.append(_nf(regs, t))
     nf = rows[0]
     for r in rows[1:]:
         nf = nf.unionAll(r)
     last = rows[-1].select(F.col("nf_est").alias("nf_max"))
-    return nf.crossJoin(F.broadcast(last)).select(
+    out = nf.crossJoin(F.broadcast(last)).select(
         "t",
         "nf_est",
         F.round(F.col("nf_est") / F.col("nf_max"), 6).alias("frac"),
     )
+    return checkpoint_result(out, sym, *states)
 
 
 def hyperball_oracle_sql(edges_sql: str, max_t: int = 3) -> str:
@@ -3154,16 +3139,15 @@ def simrank(
     Monte-Carlo random-walk-meeting estimator (Fogaras & Racz 2005)
     whose walk tables reuse :func:`random_walks`' co-partitioned shape.
     """
-    e = edges.select("src", "dst").distinct().localCheckpoint()
+    e = fresh_checkpoint(edges.select("src", "dst").distinct())
     ind = e.groupBy("dst").agg(F.count(F.lit(1)).alias("ind"))
     ea = e.select(F.col("src").alias("i"), F.col("dst").alias("a"))
     eb = e.select(F.col("src").alias("i"), F.col("dst").alias("b"))
-    common = (
+    common = fresh_checkpoint(
         ea.join(eb, "i")
         .filter(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("common"))
-        .localCheckpoint()
     )
     ia = ind.select(F.col("dst").alias("a"), F.col("ind").alias("ia"))
     ib = ind.select(F.col("dst").alias("b"), F.col("ind").alias("ib"))
@@ -3183,7 +3167,7 @@ def simrank(
             .filter(F.col("s") > 0)
         )
 
-    sim = _score(common, "common").localCheckpoint()
+    sim = fresh_checkpoint(_score(common, "common"))
     for _ in range(rounds - 1):
         simsym = sim.unionByName(
             sim.select(F.col("b").alias("a"), F.col("a").alias("b"), "s")
@@ -3206,8 +3190,9 @@ def simrank(
                 + F.coalesce(F.col("offsum"), F.lit(0.0))
             ).alias("total"),
         )
-        sim = _score(total, "total").localCheckpoint()
-    return sim.orderBy(F.desc("s"), F.asc("a"), F.asc("b")).limit(k)
+        sim = checkpoint_result(_score(total, "total"), sim)
+    top = sim.orderBy(F.desc("s"), F.asc("a"), F.asc("b")).limit(k)
+    return checkpoint_result(top, e, common, sim)
 
 
 def simrank_oracle_sql(
@@ -3279,11 +3264,9 @@ FB_MAX_ROUNDS = 256  # safety cap on any single fixpoint loop below
 # broadcast on its own) — zero exchanges on the edge side — while bigger
 # graphs keep the shuffle plan. Row counts come from the loop's own
 # drain-check counts (no extra jobs); the algorithm is identical on both
-# paths. Loop state is a stats-reset checkpoint (fresh_checkpoint), never
-# a plain localCheckpoint: pointer jumping joins the state with itself
-# every round, and an inherited size estimate would square per round
-# (driver OOM on a 24-node ring), where the reset keeps 256 rounds at
-# 256x one round.
+# paths. Loop state is a stats-reset checkpoint (fresh_checkpoint):
+# pointer jumping joins the state with itself every round (see
+# session.checkpoint_result for why the reset matters there).
 
 
 def _note_frame(stats: dict | None, df: DataFrame) -> None:
@@ -3855,7 +3838,7 @@ def betweenness_sampled(
 
     Scale shape: every join is a keyed equi-join on (seed, node) or the
     edge key; frontier rows are O(k * |V|) total across layers;
-    localCheckpoint flattens the iterated plan. Hub fan-in collapses
+    per-layer checkpoints flatten the iterated plan. Hub fan-in collapses
     map-side in the sigma/delta sums. The contribution of unreached
     node pairs is exactly zero, so output is restricted to seed-reached
     nodes (the oracle mirrors this).
@@ -3931,19 +3914,17 @@ def betweenness_sampled(
         )
         rows = [(v, round(dv, 6)) for v, dv in total.items()]
         return local_frame(edges.sparkSession, rows, schema)
-    cur = (
+    cur = fresh_checkpoint(
         seeds.select(
             F.col("seed"),
             F.col("seed").alias("v"),
             F.lit(1).cast("long").alias("sigma"),
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct()
     )
     layers = [cur]
-    visited = cur.select("seed", "v").localCheckpoint()
+    visited = fresh_checkpoint(cur.select("seed", "v"))
     for _k in range(1, max_depth + 1):
-        grown = (
+        grown = fresh_checkpoint(
             layers[-1]
             .join(e, layers[-1]["v"] == e["src"])
             .select("seed", F.col("dst").alias("nv"), "sigma")
@@ -3955,12 +3936,15 @@ def betweenness_sampled(
             .groupBy("seed", "nv")
             .agg(F.sum("sigma").alias("sigma"))
             .select("seed", F.col("nv").alias("v"), "sigma")
-            .localCheckpoint()
         )
         if not grown.take(1):
+            release(grown)
             break
         layers.append(grown)
-        visited = visited.unionByName(grown.select("seed", "v")).localCheckpoint()
+        visited = checkpoint_result(
+            visited.unionByName(grown.select("seed", "v")), visited
+        )
+    release(visited)
     estep = e.select(F.col("src").alias("v"), F.col("dst").alias("wv"))
     dl = layers[-1].select("seed", "v", F.lit(0.0).alias("delta"))
     acc = [dl]
@@ -3975,7 +3959,7 @@ def betweenness_sampled(
                 "delta",
             )
         )
-        dl = (
+        dl = fresh_checkpoint(
             layers[k]
             .join(estep, "v", "left")
             .join(w, ["seed", "wv"], "left")
@@ -3992,18 +3976,19 @@ def betweenness_sampled(
                     6,
                 ).alias("delta")
             )
-            .localCheckpoint()
         )
         acc.append(dl)
-    release(e)  # every layer above is an eager checkpoint
     all_d = acc[0]
     for part in acc[1:]:
         all_d = all_d.unionByName(part)
-    return (
+    out = (
         all_d.filter(F.col("v") != F.col("seed"))
         .groupBy("v")
         .agg(F.round(F.sum("delta"), 6).alias("betweenness"))
     )
+    # the deepest layer feeds the result lazily (acc[0]); the backward
+    # pass read every other layer, so all of them go after this job
+    return checkpoint_result(out, e, *layers, *acc[1:])
 
 
 def betweenness_oracle_sql(
@@ -4096,7 +4081,7 @@ def quotient_graph(pairs: DataFrame, rounds: int = 2) -> DataFrame:
         .groupBy("class_a", "class_b")
         .agg(F.count(F.lit(1)).alias("n_edges"))
     )
-    return (
+    out = (
         se.join(
             nn.select(F.col("color").alias("class_a"), F.col("n_nodes").alias("n_nodes_a")),
             "class_a",
@@ -4107,6 +4092,7 @@ def quotient_graph(pairs: DataFrame, rounds: int = 2) -> DataFrame:
         )
         .select("class_a", "class_b", "n_edges", "n_nodes_a", "n_nodes_b")
     )
+    return checkpoint_result(out, colors)
 
 
 def quotient_graph_oracle_sql(pairs_sql: str, rounds: int = 2) -> str:
@@ -4159,13 +4145,14 @@ def ontology_infer_types(
     self-join, no iteration over the instance data — 10^12 assertions
     stream through a map-side join.
     """
-    anc = transitive_closure(
+    closure = transitive_closure(
         subclass_of.select(F.col("cls").alias("src"), F.col("super").alias("dst")),
         max_hops,
-    ).select(F.col("src").alias("cls"), F.col("dst").alias("type"))
+    )
+    anc = closure.select(F.col("src").alias("cls"), F.col("dst").alias("type"))
     direct = assertions.select("entity", F.col("cls").alias("type"))
     inherited = assertions.join(F.broadcast(anc), "cls").select("entity", "type")
-    return direct.unionByName(inherited).distinct()
+    return checkpoint_result(direct.unionByName(inherited).distinct(), closure)
 
 
 MIS_ROUNDS = 4
@@ -4194,18 +4181,18 @@ def luby_mis(pairs: DataFrame, rounds: int = MIS_ROUNDS) -> DataFrame:
     against node-sized coins, one min-aggregate keyed by node (map-side
     combine collapses hub fan-in — a degree-10^6 hub costs its partial
     minima, never a sorted neighbor list), and two anti-joins that
-    shrink the frontier; localCheckpoint truncates the iterated plan.
+    shrink the frontier; per-round checkpoints truncate the iterated plan.
     No window, no driver-side state, nothing proportional to degree^2.
     """
     e = pairs.select("a", "b").distinct()
-    sym = (
+    sym = fresh_checkpoint(
         e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .localCheckpoint()
     )
-    active_n = sym.select(F.col("v").alias("id")).distinct().localCheckpoint()
+    active_n = fresh_checkpoint(sym.select(F.col("v").alias("id")).distinct())
     active_e = sym
     out = None
+    sels = []
     for r in range(1, rounds + 1):
         coins = active_n.select(
             "id",
@@ -4224,32 +4211,34 @@ def luby_mis(pairs: DataFrame, rounds: int = MIS_ROUNDS) -> DataFrame:
             .agg(F.min("uck").alias("mn"))
             .withColumnRenamed("v", "id")
         )
-        sel = (
+        sel = fresh_checkpoint(
             coins.join(nbr_min, "id", "left")
             .filter(F.col("mn").isNull() | (F.col("ck") < F.col("mn")))
             .select("id")
-            .localCheckpoint()
         )
+        sels.append(sel)
         sel_r = sel.select("id", F.lit(r).alias("mis_round"))
         out = sel_r if out is None else out.unionAll(sel_r)
-        removed = (
+        removed = fresh_checkpoint(
             sel.unionAll(
                 active_e.join(
                     sel.select(F.col("id").alias("u")), "u"
                 ).select(F.col("v").alias("id"))
-            )
-            .distinct()
-            .localCheckpoint()
+            ).distinct()
         )
-        active_n = active_n.join(removed, "id", "left_anti").localCheckpoint()
-        active_e = (
+        active_n = checkpoint_result(
+            active_n.join(removed, "id", "left_anti"), active_n
+        )
+        # round 1 frees sym itself: nothing else reads it
+        active_e = checkpoint_result(
             active_e.join(
                 removed.select(F.col("id").alias("v")), "v", "left_anti"
-            )
-            .join(removed.select(F.col("id").alias("u")), "u", "left_anti")
-            .localCheckpoint()
+            ).join(removed.select(F.col("id").alias("u")), "u", "left_anti"),
+            active_e,
+            removed,
         )
-    return out
+    # the result is a lazy union over the per-round selections
+    return checkpoint_result(out, active_n, active_e, *sels)
 
 
 def luby_mis_oracle_sql(pairs_sql: str, rounds: int = MIS_ROUNDS) -> str:
@@ -4328,25 +4317,22 @@ def boruvka_msf(wedges: DataFrame, rounds: int = BORUVKA_ROUNDS) -> DataFrame:
     partial minima, never a sorted edge list), and the contraction runs
     :func:`connected_components`' large/small-star rounds over the
     COMPONENT graph — whose size is #components, collapsing
-    geometrically, never the corpus-sized edge list. localCheckpoint
-    truncates the iterated lineage exactly as pagerank/luby do.
+    geometrically, never the corpus-sized edge list. Per-round
+    checkpoints truncate the iterated lineage as luby_mis' do.
     """
     from .canonicalize import connected_components
 
-    e = (
-        wedges.select("a", "b", "w")
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
+    e = fresh_checkpoint(
+        wedges.select("a", "b", "w").filter(F.col("a") != F.col("b")).distinct()
     )
-    comp = (
+    comp = fresh_checkpoint(
         e.select(F.col("a").alias("id"))
         .unionAll(e.select(F.col("b").alias("id")))
         .distinct()
         .select("id", F.col("id").alias("comp"))
-        .localCheckpoint()
     )
     out = None
+    picks = []
     for r in range(1, rounds + 1):
         lab = (
             e.join(
@@ -4370,7 +4356,8 @@ def boruvka_msf(wedges: DataFrame, rounds: int = BORUVKA_ROUNDS) -> DataFrame:
                 ),
             )
         )
-        mins = sym.groupBy("c").agg(F.min("cand").alias("m")).localCheckpoint()
+        mins = fresh_checkpoint(sym.groupBy("c").agg(F.min("cand").alias("m")))
+        picks.append(mins)
         sel = (
             mins.select(
                 F.col("m.a").alias("a"),
@@ -4384,13 +4371,15 @@ def boruvka_msf(wedges: DataFrame, rounds: int = BORUVKA_ROUNDS) -> DataFrame:
         cedges = mins.select(
             F.col("c").alias("src"), F.col("m.other").alias("dst")
         )
-        merged = connected_components(cedges).withColumnRenamed("id", "comp")
-        comp = (
-            comp.join(merged, "comp", "left")
-            .select("id", F.coalesce("canon", "comp").alias("comp"))
-            .localCheckpoint()
+        cc = connected_components(cedges)
+        comp = checkpoint_result(
+            comp.join(cc.withColumnRenamed("id", "comp"), "comp", "left")
+            .select("id", F.coalesce("canon", "comp").alias("comp")),
+            comp,
+            cc,
         )
-    return out
+    # the result is a lazy union over the per-round picks
+    return checkpoint_result(out, e, comp, *picks)
 
 
 def boruvka_oracle_sql(wedges_sql: str, rounds: int = BORUVKA_ROUNDS) -> str:
@@ -4485,9 +4474,9 @@ def rpq_bounded(
     closure is ``max_mid`` keyed hash joins with a per-level DISTINCT
     (frontier never carries duplicate (src, node) pairs forward, so a
     diamond-shaped fan cannot multiply rows level over level); the
-    min-hop fold is one map-side-combining aggregate. localCheckpoint
-    truncates the iterated lineage as every iterative operator here
-    does. No window, nothing degree-squared.
+    min-hop fold is one map-side-combining aggregate. A per-level
+    checkpoint truncates the iterated lineage as every iterative
+    operator here does. No window, nothing degree-squared.
     """
     e_start = edges.filter(F.col("pred") == pred_start).select(
         "src", F.col("dst").alias("m")
@@ -4498,24 +4487,24 @@ def rpq_bounded(
     e_end = edges.filter(F.col("pred") == pred_end).select(
         F.col("src").alias("m"), "dst"
     )
-    frontier = e_start.select("src", "m").distinct().localCheckpoint()
+    frontier = fresh_checkpoint(e_start.select("src", "m").distinct())
+    levels = [frontier]
     reach = frontier.select("src", "m", F.lit(0).alias("h"))
     for i in range(1, max_mid + 1):
-        frontier = (
-            frontier.join(e_mid, "m")
-            .select("src", F.col("m2").alias("m"))
-            .distinct()
-            .localCheckpoint()
+        frontier = fresh_checkpoint(
+            frontier.join(e_mid, "m").select("src", F.col("m2").alias("m")).distinct()
         )
+        levels.append(frontier)
         reach = reach.unionAll(
             frontier.select("src", "m", F.lit(i).alias("h"))
         )
     reach_min = reach.groupBy("src", "m").agg(F.min("h").alias("h"))
-    return (
+    out = (
         reach_min.join(e_end, "m")
         .groupBy("src", "dst")
         .agg(F.min("h").cast("int").alias("min_mid_hops"))
     )
+    return checkpoint_result(out, *levels)
 
 
 def rpq_oracle_sql(
@@ -4583,9 +4572,11 @@ def pseudo_diameter(edges: DataFrame, rounds: int = 8) -> DataFrame:
         )
 
     seed0 = sym.agg(F.min("src").alias("seed"))
-    far1 = _far(shortest_paths(sym, seed0, rounds))
-    far2 = _far(shortest_paths(sym, far1.select("seed"), rounds))
-    return (
+    d1 = shortest_paths(sym, seed0, rounds)
+    far1 = _far(d1)
+    d2 = shortest_paths(sym, far1.select("seed"), rounds)
+    far2 = _far(d2)
+    out = (
         seed0.select(F.col("seed").alias("seed_node"))
         .crossJoin(
             F.broadcast(
@@ -4603,6 +4594,7 @@ def pseudo_diameter(edges: DataFrame, rounds: int = 8) -> DataFrame:
             )
         )
     )
+    return checkpoint_result(out, d1, d2)
 
 
 def pseudo_diameter_oracle_sql(edges_sql: str, rounds: int = 8) -> str:
@@ -4677,10 +4669,13 @@ def single_linkage_clusters(
     kept = forest.filter(F.col("w") <= threshold).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
-    labels = connected_components(kept).withColumnRenamed("canon", "cluster")
-    return nodes.join(labels, "id", "left").select(
+    cc = connected_components(kept)
+    release(forest)  # cc is collected or checkpointed: it no longer reads it
+    labels = cc.withColumnRenamed("canon", "cluster")
+    out = nodes.join(labels, "id", "left").select(
         "id", F.coalesce("cluster", "id").alias("cluster")
     )
+    return checkpoint_result(out, cc)
 
 
 def single_linkage_oracle_sql(wedges_sql: str, threshold: int) -> str:

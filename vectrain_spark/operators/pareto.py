@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import release
+from ..session import checkpoint_result, fresh_checkpoint, release
 
 
 def skyline_2d(df: DataFrame, min_col: str, max_col: str) -> DataFrame:
@@ -66,25 +66,21 @@ def skyline_2d(df: DataFrame, min_col: str, max_col: str) -> DataFrame:
             .orderBy(min_col)
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        prefix = (
+        prefix = fresh_checkpoint(
             parted.join(off, "_pid")
             .withColumn(
                 "_strict_max",
                 F.greatest(F.max("_gmax").over(w), F.col("_premax")),
             )
             .select(min_col, "_gmax", "_strict_max")
-            .localCheckpoint(eager=True)
         )
     finally:
         release(parted)
     dominated = F.coalesce(
         F.col("_strict_max") >= F.col(max_col), F.lit(False)
     ) | (F.col("_gmax") > F.col(max_col))
-    return (
-        df.join(prefix, min_col)
-        .filter(~dominated)
-        .select(*df.columns)
-    )
+    out = df.join(prefix, min_col).filter(~dominated).select(*df.columns)
+    return checkpoint_result(out, prefix)
 
 
 def skyline_2d_oracle_sql(

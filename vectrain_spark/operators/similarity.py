@@ -808,7 +808,7 @@ def mmr_rerank(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("rel"), F.asc("n_id"))
-    pool_df = (
+    pool_df = fresh_checkpoint(
         vecs.join(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
@@ -822,9 +822,8 @@ def mmr_rerank(
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= pool)
         .drop("rn")
-        .localCheckpoint()
     )
-    sims = (
+    sims = fresh_checkpoint(
         pool_df.select("q_id", F.col("n_id").alias("d"), F.col("emb").alias("d_emb"))
         .join(
             pool_df.select(
@@ -841,7 +840,6 @@ def mmr_rerank(
             .cast("decimal(10,6)")
             .alias("sim"),
         )
-        .localCheckpoint()
     )
     cand = pool_df.select("q_id", "n_id", "rel")
 
@@ -892,13 +890,16 @@ def mmr_rerank(
                 ).alias("mmr"),
             )
         )
-        selected = selected.unionByName(_pick(scored, i)).localCheckpoint()
-    return selected.select(
+        selected = checkpoint_result(
+            selected.unionByName(_pick(scored, i)), selected
+        )
+    out = selected.select(
         "q_id",
         "n_id",
         F.round(F.col("mmr"), 6).cast("double").alias("mmr"),
         "pick",
     )
+    return checkpoint_result(out, pool_df, sims, selected)
 
 
 # ---------------------------------------------------------------------------
@@ -940,7 +941,7 @@ def kmeans_parallel_seed(
     which is the entire point of the algorithm vs k-means++'s k scans.
     """
     vecs = _vecs(embeddings)
-    cand = (
+    cand = fresh_checkpoint(
         vecs.orderBy("vec_id")
         .limit(1)
         .select(
@@ -948,7 +949,6 @@ def kmeans_parallel_seed(
             F.col("emb").alias("c_emb"),
             F.lit(0).alias("round_added"),
         )
-        .localCheckpoint()
     )
     for r in range(1, rounds + 1):
         d2s = (
@@ -979,7 +979,7 @@ def kmeans_parallel_seed(
             F.col("emb").alias("c_emb"),
             F.lit(r).alias("round_added"),
         )
-        cand = cand.unionByName(new).localCheckpoint()
+        cand = checkpoint_result(cand.unionByName(new), cand)
     best = (
         vecs.crossJoin(F.broadcast(cand.select("cand_id", "c_emb")))
         .select("vec_id", "cand_id", _d2_expr("emb", "c_emb").alias("d2"))
@@ -989,7 +989,7 @@ def kmeans_parallel_seed(
     weights = best.groupBy(F.col("m.cand_id").alias("cand_id")).agg(
         F.count(F.lit(1)).alias("weight")
     )
-    return (
+    out = (
         cand.select("cand_id", "round_added")
         .join(weights, "cand_id", "left")
         .select(
@@ -998,6 +998,7 @@ def kmeans_parallel_seed(
             F.coalesce("weight", F.lit(0)).alias("weight"),
         )
     )
+    return checkpoint_result(out, cand)
 
 
 def kmeans_parallel_oracle_sql(l: int = 8, rounds: int = 2) -> str:

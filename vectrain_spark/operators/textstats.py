@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint_result, fresh_checkpoint, release
 from .dedup import normalized_text, shingles_col, spread
 
 STOPWORDS: dict[str, list[str]] = {
@@ -626,8 +627,9 @@ def bpe_train(docs: DataFrame, merges: int = 3) -> DataFrame:
     round verbatim (unrolled CTEs).
     """
     words = _bpe_words(docs).filter(F.length("w") >= 2)
-    _, out = _bpe_loop(words, merges)
-    return out
+    seq, table, bests = _bpe_loop(words, merges)
+    release(seq)
+    return checkpoint_result(table, *bests)
 
 
 def _bpe_words(docs: DataFrame) -> DataFrame:
@@ -644,19 +646,23 @@ def _bpe_words(docs: DataFrame) -> DataFrame:
 
 def _bpe_loop(words: DataFrame, merges: int):
     """Shared BPE merge loop: (w, f) vocabulary -> (final symbol
-    sequences, learned merge table). See :func:`bpe_train` for the
-    double-space boundary encoding that makes one literal replace per
-    round exactly greedy BPE."""
+    sequences, lazy learned merge table, the per-round checkpoints that
+    table reads); the caller releases the checkpoints. See :func:`bpe_train` for the double-space boundary
+    encoding that makes one literal replace per round exactly greedy
+    BPE."""
     # ' a  b  c ' — one symbol per char, DOUBLE-space separated, padded
-    seq = words.select(
-        F.concat(
-            F.lit(" "),
-            F.trim(F.regexp_replace("w", "(.)", "$1  ")),
-            F.lit(" "),
-        ).alias("s"),
-        "f",
-    ).localCheckpoint()
+    seq = fresh_checkpoint(
+        words.select(
+            F.concat(
+                F.lit(" "),
+                F.trim(F.regexp_replace("w", "(.)", "$1  ")),
+                F.lit(" "),
+            ).alias("s"),
+            "f",
+        )
+    )
     out = None
+    bests = []
     for r in range(merges):
         toks = F.split(F.trim("s"), "  ")
         pair_list = F.when(
@@ -668,7 +674,7 @@ def _bpe_loop(words: DataFrame, merges: int):
                 ),
             ),
         ).otherwise(F.array().cast("array<string>"))
-        best = (
+        best = fresh_checkpoint(
             seq.select(F.explode(pair_list).alias("pair"), "f")
             .groupBy("pair")
             .agg(F.sum("f").alias("cnt"))
@@ -683,10 +689,10 @@ def _bpe_loop(words: DataFrame, merges: int):
                 ),
                 F.col("cnt").cast("long").alias("cnt"),
             )
-            .localCheckpoint()
         )
+        bests.append(best)
         out = best if out is None else out.unionAll(best)
-        seq = seq.crossJoin(F.broadcast(best)).select(
+        nxt = seq.crossJoin(F.broadcast(best)).select(
             F.replace(
                 F.col("s"),
                 F.concat(
@@ -696,8 +702,9 @@ def _bpe_loop(words: DataFrame, merges: int):
                 F.concat(F.lit(" "), F.col("merged"), F.lit(" ")),
             ).alias("s"),
             "f",
-        ).localCheckpoint()
-    return seq, out
+        )
+        seq = checkpoint_result(nxt, seq)
+    return seq, out, bests
 
 
 def bpe_encode_tokens(
@@ -712,19 +719,21 @@ def bpe_encode_tokens(
     every corpus token. Same all-JVM loop; the final explode/count is
     one two-phase aggregate + TakeOrdered."""
     words = _bpe_words(docs)
-    seq, _ = _bpe_loop(words.filter(F.length("w") >= 2), merges)
+    seq, _, bests = _bpe_loop(words.filter(F.length("w") >= 2), merges)
+    release(*bests)  # seq is a checkpoint: it no longer reads them
     singles = words.filter(F.length("w") < 2).select(
         F.concat(F.lit(" "), F.col("w"), F.lit(" ")).alias("s"), "f"
     )
     toks = seq.unionAll(singles).select(
         F.explode(F.split(F.trim("s"), "  ")).alias("token"), "f"
     )
-    return (
+    top = (
         toks.groupBy("token")
         .agg(F.sum("f").cast("long").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("token"))
         .limit(top_n)
     )
+    return checkpoint_result(top, seq)
 
 
 def bpe_encode_oracle_sql(norm_sql: str, merges: int = 3, top_n: int = 30) -> str:
@@ -1149,7 +1158,7 @@ def unigram_lm_train(
     occurrences after the first wordcount, so 100 TB costs one
     aggregate plus vocabulary-sized work per EM round.
     """
-    words = _unigram_words(docs).localCheckpoint()
+    words = fresh_checkpoint(_unigram_words(docs))
     seed_counts = (
         words.select(
             "f",
@@ -1178,7 +1187,7 @@ def unigram_lm_train(
             | (F.col("cnt") >= UNIGRAM_MIN_COUNT)
         )
     )
-    pieces = _unigram_quantize(seed_counts).localCheckpoint()
+    pieces = fresh_checkpoint(_unigram_quantize(seed_counts))
     for _ in range(iters):
         seg = _unigram_viterbi(words, pieces)
         counted = (
@@ -1186,12 +1195,13 @@ def unigram_lm_train(
             .groupBy("piece")
             .agg(F.sum("f").alias("cnt"))
         )
-        pieces = _unigram_quantize(counted).localCheckpoint()
-    return (
+        pieces = checkpoint_result(_unigram_quantize(counted), pieces)
+    top = (
         pieces.orderBy(F.desc("cnt"), F.asc("piece"))
         .limit(top_n)
         .select("piece", F.col("cnt").cast("long").alias("cnt"), "logp_q")
     )
+    return checkpoint_result(top, words, pieces)
 
 
 def unigram_lm_oracle_sql(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import _page_html
+from ..session import checkpoint_result, fresh_checkpoint
 from ..textops import PREDICATE_PHRASES
 
 # phrase order is the PREDICATE_PHRASES declaration order (8 entries)
@@ -428,15 +429,15 @@ def resolve_redirects(redirects: DataFrame, max_rounds: int = 16) -> DataFrame:
     ceil(log2 L) rounds — 5 self-joins for L = 32 where the naive
     frontier walk needs 32. At 10^12 redirect rows each round is one
     hash-partitioned equi-join on the url key plus a semi-join fixpoint
-    probe; localCheckpoint keeps the iterated plan flat. Cycles (which
+    probe; a per-round checkpoint keeps the iterated plan flat. Cycles (which
     violate HTTP but occur in the wild) can never terminate a follow:
     rows still pending after ``max_rounds`` doubling rounds (chains
     beyond 2^max_rounds are physically impossible) come back with
     ``resolved = false`` instead of looping — the crawler quarantines
     them like any other protocol violation."""
-    f = redirects.select(
-        "src", "dst", F.lit(1).cast("long").alias("hops")
-    ).localCheckpoint()
+    f = fresh_checkpoint(
+        redirects.select("src", "dst", F.lit(1).cast("long").alias("hops"))
+    )
     for _ in range(max_rounds):
         pending = f.join(
             f.select(F.col("src").alias("dst")).distinct(), "dst", "left_semi"
@@ -448,17 +449,16 @@ def resolve_redirects(redirects: DataFrame, max_rounds: int = 16) -> DataFrame:
             F.col("dst").alias("_sdst"),
             F.col("hops").alias("_shops"),
         )
-        f = (
-            f.join(step, f["dst"] == step["_ssrc"], "left")
-            .select(
+        f = checkpoint_result(
+            f.join(step, f["dst"] == step["_ssrc"], "left").select(
                 "src",
                 F.coalesce("_sdst", "dst").alias("dst"),
                 (F.col("hops") + F.coalesce("_shops", F.lit(0))).alias("hops"),
-            )
-            .localCheckpoint()
+            ),
+            f,
         )
     srcs = redirects.select("src").distinct()
-    return (
+    out = (
         f.join(
             srcs.select(F.col("src").alias("dst"), F.lit(False).alias("_open")),
             "dst",
@@ -471,6 +471,7 @@ def resolve_redirects(redirects: DataFrame, max_rounds: int = 16) -> DataFrame:
             F.coalesce("_open", F.lit(True)).alias("resolved"),
         )
     )
+    return checkpoint_result(out, f)
 
 
 def robots_filter(frontier: DataFrame, rules: DataFrame) -> DataFrame:

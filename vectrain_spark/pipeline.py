@@ -146,6 +146,7 @@ def _canonical_mapping(
         # table on each of the 2-per-group mapping joins
         mapping = connected_components(edges_from_aliases(aliases_df))
         cat.write("entity_canon", mapping, mode="replace")
+        release(mapping)
         return cat.read(spark, "entity_canon")
     amin = alias_pdf.groupby("alias")["entity_id"].transform("min")
     mask = alias_pdf["entity_id"] != amin
@@ -569,21 +570,7 @@ def _run_groups_and_finalize(
     # (mid-flight orphan deltas were already pruned by the staging sync in
     # run_pipeline — extracted never leads triples at this point)
 
-    if fail_after_groups is not None:
-        # deterministic crash point for the resume tests: sequential
-        ran = 0
-        for g in pending:
-            gstats = _run_group(
-                spark, pages, linker, mapping, g, cfg.n_groups, cat,
-                cfg.fingerprint(), broadcast_maps=use_broadcast_maps,
-                wave=wave, seen_urls=seen_urls,
-            )
-            manifest.mark_done(g, gstats)
-            stats["groups"].append(gstats)
-            ran += 1
-            if ran >= fail_after_groups:
-                raise InjectedFailure(f"injected failure after {ran} groups")
-    elif pending:
+    if pending:
         from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
         from .monitor import stop_requested
@@ -602,9 +589,11 @@ def _run_groups_and_finalize(
         # JSON names the branch.
         t_disp = time.time()
         parts = _group_pages(pages, pending[0], cfg.n_groups).rdd.getNumPartitions()
+        # the resume tests' crash point (fail_after_groups) runs the
+        # groups one at a time, so "after K groups" is deterministic
         workers = group_workers(
             len(pending), spark.sparkContext.defaultParallelism, parts,
-            cfg.max_concurrent_groups,
+            1 if fail_after_groups is not None else cfg.max_concurrent_groups,
         )
         stats["group_workers"] = {"workers": workers, "partitions": parts}
         _prof(f"dispatch group_workers={workers} partitions={parts}", t_disp)
@@ -633,6 +622,10 @@ def _run_groups_and_finalize(
                     gstats = fut.result()  # re-raises group failures
                     manifest.mark_done(gstats["group"], gstats)
                     stats["groups"].append(gstats)
+                    if len(stats["groups"]) == fail_after_groups:
+                        raise InjectedFailure(
+                            f"injected failure after {fail_after_groups} groups"
+                        )
 
     if stopped:
         # committed groups are durable; finalize is deferred to the

@@ -75,20 +75,15 @@ _FALLBACK_WARNED = False
 
 
 def fresh_checkpoint(df, eager: bool = True):
-    """``localCheckpoint`` that also RESETS the plan statistics.
-
-    Since SPARK-39834 a checkpoint's ``LogicalRDD`` inherits the origin
-    plan's statistics. In an iterative dataflow whose round JOINS the
-    checkpointed frame with itself (pointer jumping, star contraction,
-    ...), the inherited ``sizeInBytes`` estimates MULTIPLY round over
-    round — a self-join SQUARES it — so the BigInt's digit count doubles
-    every round and Catalyst's ``SizeInBytesOnlyStatsPlanVisitor`` ends
-    up doing million-digit BigInt arithmetic per plan node: planning goes
-    exponential (measured: 2.5x per round on a 24-node fixture) and
-    finally OOMs the driver. Rebuilding the frame from the checkpointed
-    internal RDD drops the origin stats, pinning every round's estimate
-    at the engine default; the data path is untouched (same materialized
-    blocks, no recompute, no Python round-trip).
+    """``localCheckpoint`` that also RESETS the plan statistics — the
+    only place in the package that cuts lineage (see
+    :func:`checkpoint_result` for why the reset matters). Rebuilding the
+    frame from the checkpointed internal RDD drops the origin stats,
+    pinning the estimate at the engine default; the data path is
+    untouched (same materialized blocks, no recompute, no Python
+    round-trip). AQE still re-plans a small join at runtime from the
+    real stage size; a join AQE cannot demote (a crossJoin) needs an
+    explicit broadcast hint.
 
     ``eager=False`` defers materialization to the first consuming job
     (the RDD persists on first compute, and Spark's local-checkpoint
@@ -158,12 +153,26 @@ def checkpoint_result(out, *working):
     per-query working sets otherwise pile up into memory pressure that
     taxes every later query. The caller owns the returned checkpoint.
 
+    The same call is one loop round, ``state = checkpoint_result(nxt,
+    state)``: the new round is materialized before the round it was
+    built from is freed. A per-round checkpoint keeps the plan flat when
+    a round reads the previous state more than once (a lazy plan would
+    double per round). It must reset the stats: since SPARK-39834 a
+    checkpoint's ``LogicalRDD`` inherits the origin plan's statistics,
+    and in a round that JOINS the state with itself (pointer jumping,
+    star contraction, ...) the inherited ``sizeInBytes`` estimates
+    multiply round over round — a self-join squares them — until
+    Catalyst does million-digit BigInt arithmetic per plan node
+    (measured 2.5x planning time per round on a 24-node fixture, then a
+    driver OOM).
+
     A fixed-round loop whose round references the previous state once
-    (pagerank/katz/ppr shape) unrolls into ONE lazy plan, linear in the
-    round count (its size estimate grows in value, not in digit count,
-    so no SPARK-39834 blow-up), and this runs it as a single job: on
-    this engine every eager per-round checkpoint is a job submission
-    with a ~0.4 s floor at local[32]. Frames that the plan references more than once are
+    (pagerank/katz/ppr/shortest_paths shape) unrolls into ONE lazy
+    plan, linear in the round count (its size estimate grows in value,
+    not in digit count, so no SPARK-39834 blow-up), and this runs it as
+    a single job: on this engine every eager per-round checkpoint is a
+    job submission with a ~0.4 s floor at local[32]. Frames that the
+    plan references more than once are
     ``persist()``-ed lazily by the caller and filled by a plain
     ``count()`` each BEFORE this job: concurrent stages inside one job
     would otherwise race to fill the same cache and recompute the
