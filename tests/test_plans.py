@@ -648,6 +648,7 @@ def test_kmeans_parallel_seed_broadcasts_candidates(spark, monkeypatch):
         "vec_id long, embedding array<double>",
     )
     similarity.kmeans_parallel_seed(emb, l=4, rounds=2)
+    assert len(plans) == 3
     for plan in plans:  # every round, then the weighting pass
         assert "EvalPython" not in plan and "ArrowEval" not in plan, plan
         assert "CartesianProduct" not in plan, plan

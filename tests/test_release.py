@@ -21,7 +21,7 @@ from vectrain_spark.operators import (
     textstats,
     webcorpus,
 )
-from vectrain_spark.session import release
+from vectrain_spark.session import checkpoint_result, fresh_checkpoint, release
 
 
 def _persisted(spark) -> set[int]:
@@ -221,6 +221,34 @@ def test_pq_rejects_indivisible_dims_without_caching(spark, op):
     assert _persisted(spark) - before == set()
 
 
+def _estimate(df) -> int:
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def test_checkpoint_keeps_a_small_estimate_and_bounds_a_growing_one(spark):
+    """A checkpoint keeps a small frame's size estimate, so it still
+    plans static broadcast joins; in a loop that joins its state with
+    itself the inherited estimate squares per round (SPARK-39834), and
+    the checkpoint caps it at the engine default instead."""
+    limit = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    small = spark.range(100).selectExpr("id AS a", "id % 10 AS b")
+    state = fresh_checkpoint(small)
+    assert _estimate(state) == _estimate(small) < limit
+    grown = []
+    for _ in range(4):
+        nxt = (
+            state.join(state.withColumnRenamed("a", "c"), "b")
+            .selectExpr("a", "c % 10 AS b")
+            .distinct()
+        )
+        grown.append(_estimate(nxt))
+        state = checkpoint_result(nxt, state)
+        assert _estimate(state) <= limit
+    assert max(grown) > limit  # the bound was needed
+    assert state.count() == 100
+    release(state)
+
+
 def _method_calls(path, names: set[str]) -> list[tuple[int, str]]:
     """(line, name) of every ``.name(`` call in the code of ``path``:
     tokenizing keeps comments, docstrings and other strings out."""
@@ -240,7 +268,7 @@ def _method_calls(path, names: set[str]) -> list[tuple[int, str]]:
 
 def test_only_session_cuts_and_frees_lineage():
     """session.py owns how lineage is cut and freed: no other module
-    calls ``.localCheckpoint(`` (which skips the stats reset and leaves
+    calls ``.localCheckpoint(`` (which skips the estimate bound and leaves
     blocks release cannot free) or ``.unpersist(``."""
     from pathlib import Path
 

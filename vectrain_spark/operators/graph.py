@@ -46,9 +46,10 @@ OUT_ROUND = 6
 def _bc_if(cond: bool, df: DataFrame) -> DataFrame:
     """Size-adaptive broadcast hint (guide §3.1): node-sized loop state
     frames ride broadcast joins when the measured node count fits
-    SMALL_GRAPH_ROWS — a stats-reset checkpoint estimates at the
-    engine default, so the planner would otherwise sort-merge 347-row
-    rank tables against the cached edge list every iteration. Identical
+    SMALL_GRAPH_ROWS — a loop state's own estimate is a product of its
+    joins' inputs (or the engine default once that runs past it), so the
+    planner would otherwise sort-merge 347-row rank tables against the
+    cached edge list every iteration. Identical
     results either way; bigger graphs keep the keyed shuffle plan."""
     return F.broadcast(df) if cond else df
 
@@ -1907,7 +1908,6 @@ def transitive_closure(edges: DataFrame, max_hops: int = CLOSURE_MAX_HOPS) -> Da
     e = e.repartition(parts, "src").persist()
     closure = fresh_checkpoint(e.withColumn("hops", F.lit(1)))
     frontier = closure
-    last = None  # the previous round's new pairs (a checkpoint of its own)
     hop = 1
     while hop < max_hops:
         hop += 1
@@ -1924,10 +1924,10 @@ def transitive_closure(edges: DataFrame, max_hops: int = CLOSURE_MAX_HOPS) -> Da
         if not new.take(1):
             release(new)
             break
-        closure = checkpoint_result(closure.unionByName(new), closure, last)
-        frontier = last = new
+        closure = checkpoint_result(closure.unionByName(new), closure, frontier)
+        frontier = new
     out = closure.filter(F.col("src") != F.col("dst"))
-    return checkpoint_result(out, e, closure, last)
+    return checkpoint_result(out, e, closure, frontier)
 
 
 def transitive_closure_oracle_sql(
@@ -2361,10 +2361,19 @@ def random_walks(edges: DataFrame, length: int = 3) -> DataFrame:
     ranked adjacency on the current-node key, so ``length`` steps are
     ``length`` co-partitioned shuffle joins, no iteration-to-driver.
     """
+    e0, adj, walks = _walk_start(edges)
+    for t in range(1, length + 1):
+        walks = _grow_walks(walks, _uniform_step(walks, e0, adj, t), t == length)
+    return _walks_result(walks, e0)
+
+
+def _walk_start(edges: DataFrame):
+    """(e0, adj, walks) shared by the two walk operators: the distinct
+    string edge set (a checkpoint: every step re-reads it), its
+    per-source ranked adjacency (src, dst, idx), and the step-0 walk
+    table (start, step, prev, node), one row per node with out-edges."""
     from pyspark.sql import Window
 
-    # checkpoint: adj/deg/frontier and every step all
-    # re-read the distinct edge set
     e0 = fresh_checkpoint(
         edges.select(
             F.col("src").cast("string").alias("src"),
@@ -2373,51 +2382,57 @@ def random_walks(edges: DataFrame, length: int = 3) -> DataFrame:
     )
     wsrc = Window.partitionBy("src").orderBy("dst")
     adj = e0.withColumn("idx", F.row_number().over(wsrc) - 1)
+    walks = e0.select("src").distinct().select(
+        F.col("src").alias("start"),
+        F.lit(0).cast("long").alias("step"),
+        F.lit(None).cast("string").alias("prev"),
+        F.col("src").alias("node"),
+    )
+    return e0, adj, walks
+
+
+def _walk_hash(*cols):
+    return F.conv(
+        F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15), 16, 10
+    ).cast("long")
+
+
+def _uniform_step(walks: DataFrame, e0: DataFrame, adj: DataFrame, t: int):
+    """Step ``t``'s rows: each step t-1 row moves to the neighbor whose
+    rank is md5(start|node|t) % out-degree (no row past a sink)."""
+    frontier = walks.filter(F.col("step") == t - 1)
     deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    steps = []
-    frontier = (
-        e0.select("src").distinct().select(
-            F.col("src").alias("start"), F.col("src").alias("node")
+    choice = F.pmod(_walk_hash("start", "node", F.lit(str(t))), F.col("deg"))
+    return (
+        frontier.join(deg, deg["src"] == frontier["node"])
+        .withColumn("c", choice)
+        .join(
+            adj.select(F.col("src").alias("a_src"), F.col("dst").alias("a_dst"), "idx"),
+            (F.col("a_src") == F.col("node")) & (F.col("idx") == F.col("c")),
+        )
+        .select(
+            "start",
+            F.lit(t).cast("long").alias("step"),
+            F.col("node").alias("prev"),
+            F.col("a_dst").alias("node"),
         )
     )
-    out = frontier.select("start", F.lit(0).cast("long").alias("step"), "node")
-    for t in range(1, length + 1):
-        choice = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws("|", F.col("start"), F.col("node"), F.lit(str(t)))
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.col("deg"),
-        )
-        # eager checkpoint: each frontier is read TWICE (the output
-        # union and the next step's join) and its lineage is a chain
-        # of joins — without truncation step t recomputes steps 1..t-1
-        # and the self-joining consumers multiply that again.
-        frontier = fresh_checkpoint(
-            frontier.join(deg, deg["src"] == frontier["node"])
-            .withColumn("c", choice)
-            .join(
-                adj.select(
-                    F.col("src").alias("a_src"),
-                    F.col("dst").alias("a_dst"),
-                    "idx",
-                ),
-                (F.col("a_src") == F.col("node")) & (F.col("idx") == F.col("c")),
-            )
-            .select("start", F.col("a_dst").alias("node"))
-        )
-        steps.append(frontier)
-        out = out.unionByName(
-            frontier.select("start", F.lit(t).cast("long").alias("step"), "node")
-        )
-    return checkpoint_result(out, e0, *steps)
+
+
+def _grow_walks(walks: DataFrame, nxt: DataFrame, last: bool) -> DataFrame:
+    """One loop round: the walk table so far plus step rows ``nxt``.
+    The table is the loop state, so the last round's checkpoint is the
+    result (no separate result job); a round copies the rows before it,
+    which at the queries' length 3 costs less than that job would."""
+    both = walks.unionByName(nxt)
+    return checkpoint_result(both.drop("prev") if last else both, walks)
+
+
+def _walks_result(walks: DataFrame, e0: DataFrame) -> DataFrame:
+    if "prev" in walks.columns:  # length < 1: no round ran
+        return checkpoint_result(walks.drop("prev"), e0)
+    release(e0)
+    return walks
 
 
 def random_walks_node2vec(
@@ -2448,46 +2463,9 @@ def random_walks_node2vec(
     """
     from pyspark.sql import Window
 
-    def _h(col):
-        return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-    e0 = fresh_checkpoint(
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-        ).distinct()
-    )
-    wsrc = Window.partitionBy("src").orderBy("dst")
-    adj = e0.withColumn("idx", F.row_number().over(wsrc) - 1)
-    deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    starts = e0.select("src").distinct().select(
-        F.col("src").alias("start"), F.col("src").alias("node")
-    )
-    out = starts.select("start", F.lit(0).cast("long").alias("step"), "node")
-    if length < 1:
-        return checkpoint_result(out, e0)
-    # step 1: uniform, exactly random_walks' rule
-    c1 = F.pmod(
-        _h(F.concat_ws("|", F.col("start"), F.col("node"), F.lit("1"))),
-        F.col("deg"),
-    )
-    frontier = fresh_checkpoint(
-        starts.join(deg, deg["src"] == starts["node"])
-        .withColumn("c", c1)
-        .join(
-            adj.select(
-                F.col("src").alias("a_src"), F.col("dst").alias("a_dst"), "idx"
-            ),
-            (F.col("a_src") == F.col("node")) & (F.col("idx") == F.col("c")),
-        )
-        .select(
-            "start", F.col("node").alias("prev"), F.col("a_dst").alias("node")
-        )
-    )
-    steps = [frontier]
-    out = out.unionByName(
-        frontier.select("start", F.lit(1).cast("long").alias("step"), "node")
-    )
+    e0, adj, walks = _walk_start(edges)
+    if length >= 1:  # step 1: uniform, exactly random_walks' rule
+        walks = _grow_walks(walks, _uniform_step(walks, e0, adj, 1), length == 1)
     pe = e0.select(F.col("src").alias("p_src"), F.col("dst").alias("p_dst"))
     wcum = (
         Window.partitionBy("start")
@@ -2496,6 +2474,7 @@ def random_walks_node2vec(
     )
     wtot = Window.partitionBy("start")
     for t in range(2, length + 1):
+        frontier = walks.filter(F.col("step") == t - 1)
         cand = (
             frontier.join(
                 adj.select(
@@ -2522,15 +2501,10 @@ def random_walks_node2vec(
             )
         )
         r = F.pmod(
-            _h(
-                F.concat_ws(
-                    "|", F.col("start"), F.col("prev"), F.col("node"),
-                    F.lit(str(t)),
-                )
-            ),
-            F.col("tot"),
+            _walk_hash("start", "prev", "node", F.lit(str(t))), F.col("tot")
         )
-        frontier = fresh_checkpoint(
+        walks = _grow_walks(
+            walks,
             cand.withColumn("cw", F.sum("w").over(wcum))
             .withColumn("tot", F.sum("w").over(wtot))
             .withColumn("r", r)
@@ -2539,16 +2513,14 @@ def random_walks_node2vec(
                 & (F.col("r") < F.col("cw"))
             )
             .select(
-                "start", F.col("node").alias("prev"), F.col("dst").alias("node")
-            )
+                "start",
+                F.lit(t).cast("long").alias("step"),
+                F.col("node").alias("prev"),
+                F.col("dst").alias("node"),
+            ),
+            t == length,
         )
-        steps.append(frontier)
-        out = out.unionByName(
-            frontier.select(
-                "start", F.lit(t).cast("long").alias("step"), "node"
-            )
-        )
-    return checkpoint_result(out, e0, *steps)
+    return _walks_result(walks, e0)
 
 
 def walk_skipgrams(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -3167,8 +3139,12 @@ def simrank(
             .filter(F.col("s") > 0)
         )
 
-    sim = fresh_checkpoint(_score(common, "common"))
+    # the last round stays lazy: its top k, not its whole pair table, is
+    # the one result checkpoint
+    sim = None
+    nxt = _score(common, "common")
     for _ in range(rounds - 1):
+        sim = checkpoint_result(nxt, sim)
         simsym = sim.unionByName(
             sim.select(F.col("b").alias("a"), F.col("a").alias("b"), "s")
         )
@@ -3190,8 +3166,8 @@ def simrank(
                 + F.coalesce(F.col("offsum"), F.lit(0.0))
             ).alias("total"),
         )
-        sim = checkpoint_result(_score(total, "total"), sim)
-    top = sim.orderBy(F.desc("s"), F.asc("a"), F.asc("b")).limit(k)
+        nxt = _score(total, "total")
+    top = nxt.orderBy(F.desc("s"), F.asc("a"), F.asc("b")).limit(k)
     return checkpoint_result(top, e, common, sim)
 
 
@@ -3260,13 +3236,13 @@ FB_MAX_ROUNDS = 256  # safety cap on any single fixpoint loop below
 # The per-round joins of the FB/BFS loops below broadcast their
 # node/frontier side at or under SMALL_GRAPH_ROWS rows (guide-§3.1 shape:
 # hint the side you KNOW is small; the engine's own estimate for a
-# stats-reset checkpoint is the conservative default, so it would never
-# broadcast on its own) — zero exchanges on the edge side — while bigger
-# graphs keep the shuffle plan. Row counts come from the loop's own
-# drain-check counts (no extra jobs); the algorithm is identical on both
-# paths. Loop state is a stats-reset checkpoint (fresh_checkpoint):
-# pointer jumping joins the state with itself every round (see
-# session.checkpoint_result for why the reset matters there).
+# pointer-jumping checkpoint runs up to the conservative default, so it
+# would never broadcast on its own) — zero exchanges on the edge side —
+# while bigger graphs keep the shuffle plan. Row counts come from the
+# loop's own drain-check counts (no extra jobs); the algorithm is
+# identical on both paths. Loop state is a fresh_checkpoint: pointer
+# jumping joins the state with itself every round (see
+# session.checkpoint_result for why its estimate must stay bounded).
 
 
 def _note_frame(stats: dict | None, df: DataFrame) -> None:
@@ -4368,6 +4344,8 @@ def boruvka_msf(wedges: DataFrame, rounds: int = BORUVKA_ROUNDS) -> DataFrame:
             .select("a", "b", "w", F.lit(r).alias("msf_round"))
         )
         out = sel if out is None else out.unionAll(sel)
+        if r == rounds:
+            break  # no round reads the last contraction
         cedges = mins.select(
             F.col("c").alias("src"), F.col("m.other").alias("dst")
         )

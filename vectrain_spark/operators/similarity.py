@@ -286,7 +286,7 @@ def kmeans_refine(
     ``vecs`` you hand it.
 
     Round-6: each iteration's centroid table is materialized via a
-    stats-reset checkpoint and the superseded one released — each level
+    checkpoint and the superseded one released — each level
     references its predecessor twice (assignment score + empty-cell
     coalesce), so a lazy chain would re-execute the whole refinement
     per reference, doubling per iteration, and every downstream consumer

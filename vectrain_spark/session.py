@@ -75,15 +75,17 @@ _FALLBACK_WARNED = False
 
 
 def fresh_checkpoint(df, eager: bool = True):
-    """``localCheckpoint`` that also RESETS the plan statistics — the
+    """``localCheckpoint`` whose size estimate cannot run away — the
     only place in the package that cuts lineage (see
-    :func:`checkpoint_result` for why the reset matters). Rebuilding the
-    frame from the checkpointed internal RDD drops the origin stats,
-    pinning the estimate at the engine default; the data path is
+    :func:`checkpoint_result` for why the estimate matters). The
+    checkpoint keeps the origin plan's estimate, output partitioning
+    and ordering while that estimate fits the engine default
+    (``spark.sql.defaultSizeInBytes``), so a small frame still plans a
+    static broadcast join and a co-partitioned one skips the re-shuffle;
+    an estimate past the default is reset to it by rebuilding the frame
+    from the checkpointed internal RDD. Either way the data path is
     untouched (same materialized blocks, no recompute, no Python
-    round-trip). AQE still re-plans a small join at runtime from the
-    real stage size; a join AQE cannot demote (a crossJoin) needs an
-    explicit broadcast hint.
+    round-trip).
 
     ``eager=False`` defers materialization to the first consuming job
     (the RDD persists on first compute, and Spark's local-checkpoint
@@ -106,12 +108,15 @@ def fresh_checkpoint(df, eager: bool = True):
     try:
         sess = ck.sparkSession
         jdf = ck._jdf
-        jrdd = jdf.queryExecution().analyzed().rdd()
-        out_j = sess._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        out = type(ck)(out_j, sess)
-        out._fresh_ckpt_jrdd = jrdd
+        plan = jdf.queryExecution().analyzed()
+        limit = sess._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        out = ck
+        if int(str(plan.stats().sizeInBytes())) > limit:
+            out_j = sess._jsparkSession.internalCreateDataFrame(
+                jdf.queryExecution().toRdd(), jdf.schema(), False
+            )
+            out = type(ck)(out_j, sess)
+        out._fresh_ckpt_jrdd = plan.rdd()
         return out
     except Exception:  # pragma: no cover - Connect/remote sessions
         if not _FALLBACK_WARNED:
@@ -120,7 +125,7 @@ def fresh_checkpoint(df, eager: bool = True):
 
             warnings.warn(
                 "fresh_checkpoint fell back to a plain localCheckpoint: "
-                "plan-statistics reset is OFF (iterative self-join loops "
+                "the size-estimate bound is OFF (iterative self-join loops "
                 "may plan exponentially; see SPARK-39834)",
                 RuntimeWarning,
                 stacklevel=2,
@@ -146,8 +151,8 @@ def release(*frames) -> None:
 
 
 def checkpoint_result(out, *working):
-    """Materialize an operator's result once, as a stats-reset
-    checkpoint, then :func:`release` the ``working`` frames it was
+    """Materialize an operator's result once, as a
+    :func:`fresh_checkpoint`, then :func:`release` the ``working`` frames it was
     built from (persisted inputs, superseded loop state), so nothing
     stays cached behind the answer in a shared session: leaked
     per-query working sets otherwise pile up into memory pressure that
@@ -157,14 +162,16 @@ def checkpoint_result(out, *working):
     state)``: the new round is materialized before the round it was
     built from is freed. A per-round checkpoint keeps the plan flat when
     a round reads the previous state more than once (a lazy plan would
-    double per round). It must reset the stats: since SPARK-39834 a
-    checkpoint's ``LogicalRDD`` inherits the origin plan's statistics,
-    and in a round that JOINS the state with itself (pointer jumping,
-    star contraction, ...) the inherited ``sizeInBytes`` estimates
-    multiply round over round — a self-join squares them — until
-    Catalyst does million-digit BigInt arithmetic per plan node
+    double per round). Its size estimate must stay bounded: since
+    SPARK-39834 a checkpoint's ``LogicalRDD`` inherits the origin plan's
+    statistics, and in a round that JOINS the state with itself (pointer
+    jumping, star contraction, ...) the inherited ``sizeInBytes``
+    estimates multiply round over round — a self-join squares them —
+    until Catalyst does million-digit BigInt arithmetic per plan node
     (measured 2.5x planning time per round on a 24-node fixture, then a
-    driver OOM).
+    driver OOM). :func:`fresh_checkpoint` resets an estimate past the
+    engine default to it, so a round starts from at most the default
+    and the digit count stays flat.
 
     A fixed-round loop whose round references the previous state once
     (pagerank/katz/ppr/shortest_paths shape) unrolls into ONE lazy
