@@ -22,11 +22,12 @@ TABLES = [
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    # DuckDB's default limit is 80% of host memory; an oracle whose plan
-    # explodes (kg_mis: its CTEs are inlined at every reference) would take
-    # that beside the test JVM and bring on the OOM killer for the whole
-    # session. sf0.001 oracles need megabytes: past 4 GB a query fails
-    # with DuckDB's own OutOfMemoryException instead.
+    # DuckDB's default limit is 80% of host memory; any oracle whose plan
+    # explodes (say, a CTE read more than once but not MATERIALIZED, which
+    # DuckDB inlines at every reference) would take that beside the test
+    # JVM and bring on the OOM killer for the whole session. sf0.001
+    # oracles need megabytes: past 4 GB a query fails with DuckDB's own
+    # OutOfMemoryException instead.
     con.execute("SET memory_limit = '4GB'")
     for t in TABLES:
         con.execute(

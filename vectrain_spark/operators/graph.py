@@ -1452,16 +1452,21 @@ def label_spread_oracle_sql(
     pairs_sql: str, seeds_sql: str, rounds: int = 3
 ) -> str:
     """DuckDB replay of label_spread: one CTE pair per round (counts ->
-    fresh adoptions anti-joined against the already-typed set)."""
+    fresh adoptions anti-joined against the already-typed set).
+
+    Every CTE read more than once is ``AS MATERIALIZED``: DuckDB 1.0
+    inlines a plain CTE at every reference, and each round reads
+    ``ls_t{r}`` three times (carry, neighbour join, ``NOT IN``), so the
+    inlined plan would grow as 3^rounds copies of the seeds query."""
     parts = [
         f"ls_e AS MATERIALIZED (SELECT DISTINCT a, b FROM ({pairs_sql}))",
-        "ls_sym AS (SELECT a AS v, b AS u FROM ls_e"
+        "ls_sym AS MATERIALIZED (SELECT a AS v, b AS u FROM ls_e"
         " UNION ALL SELECT b, a FROM ls_e)",
-        f"ls_t0 AS (SELECT id, type FROM ({seeds_sql}))",
+        f"ls_t0 AS MATERIALIZED (SELECT id, type FROM ({seeds_sql}))",
     ]
     for r in range(rounds):
         parts.append(
-            f"""ls_t{r + 1} AS (
+            f"""ls_t{r + 1} AS MATERIALIZED (
   SELECT id, type FROM ls_t{r}
   UNION ALL
   SELECT id, type FROM (
@@ -4219,33 +4224,39 @@ def luby_mis(pairs: DataFrame, rounds: int = MIS_ROUNDS) -> DataFrame:
 
 def luby_mis_oracle_sql(pairs_sql: str, rounds: int = MIS_ROUNDS) -> str:
     """Unrolled-round DuckDB replay of :func:`luby_mis` — identical
-    md5 coin keys, identical strict-minimum winner rule per round."""
+    md5 coin keys, identical strict-minimum winner rule per round.
+
+    Every CTE read more than once is ``AS MATERIALIZED`` (so is
+    ``m{r}``, read once, to keep the rounds alike): DuckDB 1.0 inlines a
+    plain CTE at every reference, and inlined, each ``e{r}`` holds seven
+    copies of ``e{r-1}``, so the plan would grow as 7^rounds."""
     parts = [
         f"e AS MATERIALIZED (SELECT DISTINCT a, b FROM ({pairs_sql}))",
         "sym AS MATERIALIZED (SELECT a AS v, b AS u FROM e"
         " UNION ALL SELECT b, a FROM e)",
-        "n0 AS (SELECT DISTINCT v AS id FROM sym)",
-        "e0 AS (SELECT v, u FROM sym)",
+        "n0 AS MATERIALIZED (SELECT DISTINCT v AS id FROM sym)",
+        "e0 AS MATERIALIZED (SELECT v, u FROM sym)",
     ]
     sel_terms = []
     for r in range(1, rounds + 1):
         parts.append(
-            f"c{r} AS (SELECT id, md5(id || ':{r}') || ':' || id AS ck"
-            f" FROM n{r - 1})"
+            f"c{r} AS MATERIALIZED (SELECT id,"
+            f" md5(id || ':{r}') || ':' || id AS ck FROM n{r - 1})"
         )
         parts.append(
-            f"""m{r} AS (
+            f"""m{r} AS MATERIALIZED (
   SELECT ae.v AS id, min(cu.ck) AS mn
   FROM e{r - 1} ae JOIN c{r} cu ON cu.id = ae.u
   GROUP BY ae.v
 )"""
         )
         parts.append(
-            f"s{r} AS (SELECT c.id FROM c{r} c LEFT JOIN m{r} m USING (id)"
+            f"s{r} AS MATERIALIZED (SELECT c.id FROM c{r} c"
+            f" LEFT JOIN m{r} m USING (id)"
             f" WHERE m.mn IS NULL OR c.ck < m.mn)"
         )
         parts.append(
-            f"""rm{r} AS (
+            f"""rm{r} AS MATERIALIZED (
   SELECT DISTINCT id FROM (
     SELECT id FROM s{r}
     UNION ALL
@@ -4254,11 +4265,11 @@ def luby_mis_oracle_sql(pairs_sql: str, rounds: int = MIS_ROUNDS) -> str:
 )"""
         )
         parts.append(
-            f"n{r} AS (SELECT id FROM n{r - 1}"
+            f"n{r} AS MATERIALIZED (SELECT id FROM n{r - 1}"
             f" WHERE id NOT IN (SELECT id FROM rm{r}))"
         )
         parts.append(
-            f"e{r} AS (SELECT ae.v, ae.u FROM e{r - 1} ae"
+            f"e{r} AS MATERIALIZED (SELECT ae.v, ae.u FROM e{r - 1} ae"
             f" WHERE ae.v NOT IN (SELECT id FROM rm{r})"
             f" AND ae.u NOT IN (SELECT id FROM rm{r}))"
         )
