@@ -158,10 +158,10 @@ def test_corpus_stats_single_aggregation_shuffle(spark):
 
 
 def test_pagerank_lineage_stays_flat_across_iterations(spark):
-    """Each iteration is localCheckpoint-ed, so the returned frame's plan
-    is a checkpoint scan + projection whose SIZE DOES NOT GROW with the
-    iteration count — the property that keeps iterative-join PageRank
-    from compiling exponentially deep plans at 20 iterations."""
+    """The returned result is a checkpoint scan: its plan re-derives none
+    of the loop (no join, exchange or Python stage) and its SIZE DOES NOT
+    GROW with the iteration count, so a caller that builds on the ranks
+    never plans through the unrolled rounds again."""
     from vectrain_spark.operators.graph import pagerank
 
     spark.catalog.clearCache()

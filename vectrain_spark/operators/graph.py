@@ -54,6 +54,74 @@ def _bc_if(cond: bool, df: DataFrame) -> DataFrame:
     return F.broadcast(df) if cond else df
 
 
+def _partitioned(df: DataFrame, key: str, rows: int | None = None) -> DataFrame:
+    """``df`` hash-partitioned ONCE on ``key`` and persisted (the first
+    action fills the cache): every round's join on ``key`` then
+    co-locates without re-exchanging it. The partition count adapts to
+    ``rows`` (``df``'s own count when None), one per 50k rows up to the
+    session's parallelism: entity graphs distilled from a corpus are
+    often orders of magnitude smaller than the corpus itself, and rounds
+    of exchanges over empty 32-way partitions are pure scheduler
+    overhead, while a web-scale edge set still fans out fully."""
+    if rows is None:
+        rows = df.count()
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    parts = max(1, min(parallelism, rows // 50_000 + 1))
+    return df.repartition(parts, key).persist()
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """(id): the distinct node ids at either end of the (src, dst) edges."""
+    return (
+        e.select(F.col("src").alias("id"))
+        .unionAll(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
+def _propagate(
+    e: DataFrame,
+    base: DataFrame,
+    x0: DataFrame,
+    scale: float,
+    n_iter: int,
+    small: bool,
+    outdeg: DataFrame | None = None,
+) -> DataFrame:
+    """``n_iter`` synchronous rounds of x(v) = b(v) + scale * sum over
+    in-edges u->v of x(u), each share weighted by w / outw(u) when
+    ``outdeg`` (src, outw) is given -> (id, x) rounded to OUT_ROUND.
+
+    ``e`` is the src-partitioned edge table (with a ``w`` column when
+    ``outdeg`` is given), ``base`` the (id, b) node table every round
+    left-joins its in-sums onto, ``x0`` the (id, x) start state. Each
+    round reads the previous state exactly ONCE, so the loop unrolls
+    into one lazy plan, linear in ``n_iter``, that checkpoint_result
+    runs as one job: no per-round job submissions or retained per-round
+    checkpoint blocks. Node-sized state rides broadcast joins when
+    ``small``, so the cached edge table never re-exchanges. Rounding to
+    ITER_ROUND every round pins both engines to identical doubles."""
+    x = x0
+    for _ in range(n_iter):
+        c = e.join(_bc_if(small, x.withColumnRenamed("id", "src")), "src")
+        share = "x"  # the column holding each in-edge's share of x(u)
+        if outdeg is not None:
+            share = "c"
+            c = c.join(_bc_if(small, outdeg), "src").withColumn(
+                share, F.col("x") * F.col("w") / F.col("outw")
+            )
+        contribs = c.select("dst", share).groupBy("dst").agg(F.sum(share).alias("s"))
+        x = base.join(
+            _bc_if(small, contribs.withColumnRenamed("dst", "id")), "id", "left"
+        ).select(
+            "id",
+            F.round(
+                F.col("b") + F.lit(scale) * F.coalesce("s", F.lit(0.0)), ITER_ROUND
+            ).alias("x"),
+        )
+    return x.select("id", F.round("x", OUT_ROUND).alias("x"))
+
+
 def pagerank(
     edges: DataFrame,
     n_iter: int = N_ITER,
@@ -77,62 +145,23 @@ def pagerank(
         e = edges.groupBy("src", "dst").agg(
             F.sum(F.col(weight).cast("double")).alias("w")
         )
-    # one-time partitioning by src: every iteration's contribution join
-    # then co-locates without further exchanges of the edge table.
-    # Partition count adapts to the edge count (one cheap count on the
-    # pre-aggregated edge set): entity graphs distilled from a corpus are
-    # often orders of magnitude smaller than the corpus itself, and 5
-    # iterations x several exchanges of empty 32-way partitions is pure
-    # scheduler overhead — while a web-scale edge set still fans out to
-    # the session's full parallelism.
-    spark = edges.sparkSession
-    n_edges = e.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
-    )
-    e = e.repartition(parts, "src").persist()
+    e = _partitioned(e, "src")
     outdeg = e.groupBy("src").agg(F.sum("w").alias("outw")).persist()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+    nodes = _endpoints(e).persist()
     # fill the caches before the single job (see checkpoint_result);
     # nodes' pass also fills e's cache
     n_nodes = nodes.count()
     outdeg.count()
-    small = n_nodes <= SMALL_GRAPH_ROWS
-    ranks = nodes.select("id", F.lit(1.0).alias("rank"))
-    base = 1.0 - damping
-    # each round references the previous ranks exactly ONCE, so the whole
-    # loop unrolls into one lazy plan executed as a single job by
-    # checkpoint_result — no per-round job submissions or retained
-    # per-round checkpoint blocks; node-sized state rides broadcast joins
-    # when it fits, so the cached edge table never re-exchanges
-    # (round-6, guide §2.4/§3.1/§5)
-    for _ in range(n_iter):
-        contribs = (
-            e.join(_bc_if(small, ranks.withColumnRenamed("id", "src")), "src")
-            .join(_bc_if(small, outdeg), "src")
-            .select("dst", (F.col("rank") * F.col("w") / F.col("outw")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(
-                _bc_if(small, contribs.withColumnRenamed("dst", "id")), "id", "left"
-            )
-            .select(
-                "id",
-                F.round(
-                    F.lit(base) + F.lit(damping) * F.coalesce("s", F.lit(0.0)),
-                    ITER_ROUND,
-                ).alias("rank"),
-            )
-        )
-    out = ranks.select("id", F.round("rank", OUT_ROUND).alias("rank"))
-    return checkpoint_result(out, e, outdeg, nodes)
+    ranks = _propagate(
+        e,
+        nodes.select("id", F.lit(1.0 - damping).alias("b")),
+        nodes.select("id", F.lit(1.0).alias("x")),
+        damping,
+        n_iter,
+        n_nodes <= SMALL_GRAPH_ROWS,
+        outdeg,
+    )
+    return checkpoint_result(ranks.withColumnRenamed("x", "rank"), e, outdeg, nodes)
 
 
 def pagerank_oracle_sql(
@@ -209,43 +238,18 @@ def katz_centrality(
     map-side-combinable sum; each round reads the previous scores once,
     so the unrolled plan grows linearly in n_iter.
     """
-    e = edges.select("src", "dst").distinct()
-    spark = edges.sparkSession
-    n_edges = e.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
-    )
-    e = e.repartition(parts, "src").persist()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+    e = _partitioned(edges.select("src", "dst").distinct(), "src")
+    nodes = _endpoints(e).persist()
     n_nodes = nodes.count()  # also fills e's cache (see checkpoint_result)
-    small = n_nodes <= SMALL_GRAPH_ROWS
-    x = nodes.select("id", F.lit(beta).alias("katz"))
-    for _ in range(n_iter):
-        contribs = (
-            e.join(_bc_if(small, x.withColumnRenamed("id", "src")), "src")
-            .groupBy("dst")
-            .agg(F.sum("katz").alias("s"))
-        )
-        x = (
-            nodes.join(
-                _bc_if(small, contribs.withColumnRenamed("dst", "id")), "id", "left"
-            )
-            .select(
-                "id",
-                F.round(
-                    F.lit(beta) + F.lit(alpha) * F.coalesce("s", F.lit(0.0)),
-                    ITER_ROUND,
-                ).alias("katz"),
-            )
-        )
-    # single-reference rounds -> one lazy plan, one job (round-6)
-    out = x.select("id", F.round("katz", OUT_ROUND).alias("katz"))
-    return checkpoint_result(out, e, nodes)
+    x = _propagate(
+        e,
+        nodes.select("id", F.lit(beta).alias("b")),
+        nodes.select("id", F.lit(beta).alias("x")),
+        alpha,
+        n_iter,
+        n_nodes <= SMALL_GRAPH_ROWS,
+    )
+    return checkpoint_result(x.withColumnRenamed("x", "katz"), e, nodes)
 
 
 def katz_oracle_sql(
@@ -1029,12 +1033,7 @@ def negative_edges(edges: DataFrame, k: int = 2) -> DataFrame:
     executor (VERDICT r2 "What's wrong #1").
     """
     e = edges.select("src", "dst").distinct()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    vocab, n_vocab = _global_sorted_rank(nodes, "id", "idx")
+    vocab, n_vocab = _global_sorted_rank(_endpoints(e), "id", "idx")
 
     def h60(*cols):
         return F.conv(
@@ -1118,19 +1117,8 @@ def hits(edges: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
     normalization, so both engines iterate on identical doubles (same
     contract as pagerank's unrolled-CTE oracle).
     """
-    e = edges.select("src", "dst").distinct()
-    spark = edges.sparkSession
-    n_edges = e.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
-    )
-    e = e.repartition(parts, "src").persist()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+    e = _partitioned(edges.select("src", "dst").distinct(), "src")
+    nodes = _endpoints(e).persist()
     n_nodes = nodes.count()  # also fills e's cache (see checkpoint_result)
     small = n_nodes <= SMALL_GRAPH_ROWS
     hubs = nodes.select("id", F.lit(1.0).alias("hub"))
@@ -1277,15 +1265,8 @@ def label_propagation(pairs: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     """
     e = pairs.select("a", "b").distinct()
     sym = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    spark = pairs.sparkSession
-    n_edges = sym.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
-    )
     # (node v, neighbor u): label flows u -> v
-    sym = sym.select(F.col("a").alias("v"), F.col("b").alias("u")).repartition(
-        parts, "u"
-    ).persist()
+    sym = _partitioned(sym.select(F.col("a").alias("v"), F.col("b").alias("u")), "u")
     nodes = sym.select(F.col("v").alias("id")).distinct().persist()
     n_nodes = nodes.count()  # also fills sym's cache (see checkpoint_result)
     small = n_nodes <= SMALL_GRAPH_ROWS
@@ -1651,21 +1632,12 @@ def shortest_paths(
             .agg(F.sum(F.col(weight).cast("double")).alias("cnt"))
             .select("src", "dst", F.round(F.lit(1.0) / F.col("cnt"), 6).alias("w"))
         )
-    spark = edges.sparkSession
     n_edges = e.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .unionAll(seeds.select(F.col("seed").alias("id")))
-        .distinct()
-    )
+    nodes = _endpoints(e).unionAll(seeds.select(F.col("seed").alias("id"))).distinct()
     loops = nodes.select(
         F.col("id").alias("src"), F.col("id").alias("dst"), F.lit(0.0).alias("w")
     )
-    e = e.unionByName(loops).repartition(parts, "src").persist()
+    e = _partitioned(e.unionByName(loops), "src", n_edges)
     e.count()  # fill the cache before the single job
     # dist holds (seed, reached node) rows, and one seed reaches at most
     # n_edges + 1 nodes: broadcast it only when that bound fits
@@ -1773,20 +1745,11 @@ def personalized_pagerank(
     driver-side count of the seed frame — control-plane, seeds are a
     handful of entities.
     """
-    e = edges.select("src", "dst").distinct().withColumn("w", F.lit(1.0))
-    spark = edges.sparkSession
-    n_edges = e.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
+    e = _partitioned(
+        edges.select("src", "dst").distinct().withColumn("w", F.lit(1.0)), "src"
     )
-    e = e.repartition(parts, "src").persist()
     outdeg = e.groupBy("src").agg(F.sum("w").alias("outw")).persist()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+    nodes = _endpoints(e).persist()
     n_seeds = seeds.select("seed").distinct().count()
     base_mass = (1.0 - damping) / n_seeds
     base = nodes.join(
@@ -1803,31 +1766,18 @@ def personalized_pagerank(
     n_nodes = nodes.count()
     outdeg.count()
     base.count()
-    small = n_nodes <= SMALL_GRAPH_ROWS
-    ranks = base.select("id", F.col("b").alias("rank"))
-    for _ in range(n_iter):
-        contribs = (
-            e.join(_bc_if(small, ranks.withColumnRenamed("id", "src")), "src")
-            .join(_bc_if(small, outdeg), "src")
-            .select("dst", (F.col("rank") * F.col("w") / F.col("outw")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            base.join(
-                _bc_if(small, contribs.withColumnRenamed("dst", "id")), "id", "left"
-            )
-            .select(
-                "id",
-                F.round(
-                    F.col("b") + F.lit(damping) * F.coalesce("s", F.lit(0.0)),
-                    ITER_ROUND,
-                ).alias("rank"),
-            )
-        )
-    # single-reference rounds -> one lazy plan, one job (round-6)
-    out = ranks.select("id", F.round("rank", OUT_ROUND).alias("rank"))
-    return checkpoint_result(out, e, outdeg, nodes, base)
+    ranks = _propagate(
+        e,
+        base,
+        base.select("id", F.col("b").alias("x")),
+        damping,
+        n_iter,
+        n_nodes <= SMALL_GRAPH_ROWS,
+        outdeg,
+    )
+    return checkpoint_result(
+        ranks.withColumnRenamed("x", "rank"), e, outdeg, nodes, base
+    )
 
 
 def personalized_pagerank_oracle_sql(
@@ -1904,13 +1854,7 @@ def transitive_closure(edges: DataFrame, max_hops: int = CLOSURE_MAX_HOPS) -> Da
     seed set (see k_hop) or a predicate slice; the dataflow per round is
     unchanged.
     """
-    spark = edges.sparkSession
-    e = edges.select("src", "dst").distinct()
-    n_edges = e.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
-    )
-    e = e.repartition(parts, "src").persist()
+    e = _partitioned(edges.select("src", "dst").distinct(), "src")
     closure = fresh_checkpoint(e.withColumn("hops", F.lit(1)))
     frontier = closure
     hop = 1
@@ -2596,12 +2540,7 @@ def transe_eval(
     vecs = _vecs(embeddings)
     nv = vecs.groupBy().agg(F.count(F.lit(1)).alias("n"))
     e = edges.select("src", "pred", "dst").distinct()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    vocab, n_vocab = _global_sorted_rank(nodes, "id", "idx")
+    vocab, n_vocab = _global_sorted_rank(_endpoints(e), "id", "idx")
 
     slots = F.explode(F.array(*[F.lit(i) for i in range(n_neg)])).alias("slot")
     negs = (

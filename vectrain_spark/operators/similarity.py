@@ -147,12 +147,7 @@ def embedding_near_dups_exact(
     anchor for the LSH variant below. Accepts either a raw embeddings table
     or a prebuilt (vec_id, emb: array<double>) corpus.
     """
-    if "emb" in embeddings.columns:
-        vecs = embeddings.select("vec_id", "emb")
-    else:
-        vecs = embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
+    vecs = _vecs(embeddings)
     a = vecs.select(F.col("vec_id").alias("a"), F.col("emb").alias("ea"))
     b = vecs.select(F.col("vec_id").alias("b"), F.col("emb").alias("eb"))
     pairs = a.join(b, F.col("a") < F.col("b")).select(
@@ -210,12 +205,7 @@ def embedding_near_dups_lsh(
         .select(F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"))
         .distinct()
     )
-    if col == "emb":
-        vecs = embeddings.select("vec_id", "emb")
-    else:
-        vecs = embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
+    vecs = _vecs(embeddings)
     va = vecs.select(F.col("vec_id").alias("a"), F.col("emb").alias("ea"))
     vb = vecs.select(F.col("vec_id").alias("b"), F.col("emb").alias("eb"))
     return (
