@@ -265,18 +265,27 @@ def test_negative_edges_vocab_rank_is_global_sorted_order(spark):
     assert got == {v: i for i, v in enumerate(sorted(ids))}
 
 
-def test_negative_edges_plan_has_no_global_window(spark):
+def test_negative_edges_plan_has_no_global_window(spark, monkeypatch):
     """VERDICT r2 'What's wrong #1': the vocabulary index must never run a
     partition-less WindowExec (single-task global sort). The vocab is now
     checkpointed two-phase ranking, so the operator's physical plan must
     contain NO Window at all."""
-    from vectrain_spark.operators.graph import negative_edges
+    from vectrain_spark.operators import graph
 
+    # the result is a checkpoint scan: read the dataflow handed to it
+    plans = []
+    orig = graph.checkpoint_result
+
+    def spy(out, *working):
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return orig(out, *working)
+
+    monkeypatch.setattr(graph, "checkpoint_result", spy)
     e = spark.createDataFrame(
         [(i % 5, 10 + (i * 3) % 7) for i in range(20)], "src long, dst long"
     )
-    out = negative_edges(e, k=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    graph.negative_edges(e, k=2)
+    (plan,) = plans
     assert "Window" not in plan
 
 

@@ -660,13 +660,12 @@ def test_r4h_ops_stay_jvm_keyed_joins(spark, monkeypatch):
     zero Python anywhere; no cartesian product; the SNM candidate join
     and the conflicts self-join are hash-keyed; every window in the SNM
     rank is partitioned (the two-phase rank never sorts globally)."""
-    from vectrain_spark.operators import graph
+    from vectrain_spark.operators import graph, linking
     from vectrain_spark.operators.graph import ontology_infer_types
-    from vectrain_spark.operators.linking import snm_candidates
     from vectrain_spark.operators.temporal import functional_conflicts
     import datetime as dt
 
-    lazy = _lazy_plans(monkeypatch, graph)
+    lazy = _lazy_plans(monkeypatch, graph, linking)
     recs = spark.createDataFrame(
         [(i, f"name{i % 9}") for i in range(50)], "id long, name string"
     )
@@ -684,8 +683,8 @@ def test_r4h_ops_stay_jvm_keyed_joins(spark, monkeypatch):
         "subj string, pred string, obj string, valid_from timestamp,"
         " valid_to timestamp, is_current boolean",
     )
+    linking.snm_candidates(recs, "name", "id", window=4)
     dfs = (
-        snm_candidates(recs, "name", "id", window=4),
         ontology_infer_types(assertions, hier),
         functional_conflicts(hist, ["subj", "pred"], "obj"),
     )

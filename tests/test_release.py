@@ -16,6 +16,7 @@ from vectrain_spark.operators import (
     events,
     fusion,
     graph,
+    linking,
     pareto,
     similarity,
     textstats,
@@ -103,6 +104,17 @@ def _embeddings(spark):
     return spark.createDataFrame(rows, "vec_id long, emb array<double>")
 
 
+def _kg_edges(spark):
+    pred = F.when(F.col("src") < "d", "p").otherwise("q")
+    return _edges(spark).select("src", pred.alias("pred"), "dst")
+
+
+def _records(spark):
+    return spark.createDataFrame(
+        [(i, f"name{i % 4}") for i in range(12)], "id long, name string"
+    )
+
+
 def _lpa(spark):
     e = _edges(spark)
     return graph.label_propagation(e.select(e.src.alias("a"), e.dst.alias("b")), 2)
@@ -146,6 +158,8 @@ OPS = {
         s.createDataFrame([("a", 1), ("b", 1), ("e", 2)], "id string, label int"),
     ),
     "random_walks": lambda s: graph.random_walks(_edges(s)),
+    "negative_edges": lambda s: graph.negative_edges(_edges(s)),
+    "transe_eval": lambda s: graph.transe_eval(_kg_edges(s), _embeddings(s), n_neg=2),
     "random_walks_node2vec": lambda s: graph.random_walks_node2vec(_edges(s)),
     "neighbor_minhash": lambda s: graph.neighbor_minhash(_pairs(s)),
     "hyperball": lambda s: graph.hyperball(_edges(s), max_t=2),
@@ -166,6 +180,10 @@ OPS = {
     ),
     "unigram_lm_train": lambda s: textstats.unigram_lm_train(_corpus(s), iters=1),
     "bpe_train": lambda s: textstats.bpe_train(_corpus(s), merges=2),
+    "ccnet_buckets": lambda s: textstats.ccnet_buckets(_corpus(s)),
+    "snm_candidates": lambda s: linking.snm_candidates(
+        _records(s), "name", "id", window=3
+    ),
     "bpe_encode_tokens": lambda s: textstats.bpe_encode_tokens(_corpus(s), merges=2),
     "attribution_removal_effect": lambda s: events.attribution_removal_effect(
         _events(s)
@@ -282,3 +300,40 @@ def test_only_session_cuts_and_frees_lineage():
         for line, name in _method_calls(p, {"localCheckpoint", "unpersist"})
     ]
     assert hits == []
+
+
+def test_only_sketch_hash60_converts_bases():
+    """One engine-portable hash: ``sketch._hash60`` is the only place that
+    spells the md5-60 rule (first 15 hex chars of md5 as a bigint), so no
+    other module calls ``.conv(``."""
+    from pathlib import Path
+
+    import vectrain_spark
+
+    root = Path(vectrain_spark.__file__).parent
+    hits = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        for _call in _method_calls(p, {"conv"})
+    ]
+    assert hits == ["operators/sketch.py"]
+
+
+def test_edges_cache_is_keyed_by_application(spark, monkeypatch):
+    """The shared edge frame one application cached (a stopped session's,
+    say) is never handed to another application on the same sf_dir."""
+    from vectrain_spark import driver_queries as dq
+
+    app = ["app-old"]
+    monkeypatch.setattr(
+        type(spark.sparkContext), "applicationId", property(lambda sc: app[0])
+    )
+    monkeypatch.setattr(dq, "q_kg_edges", lambda s, sf_dir: _edges(s))
+    monkeypatch.setattr(dq, "_EDGES_CACHE", {})
+    try:
+        old = dq._materialized_edges(spark, "sf")
+        assert dq._materialized_edges(spark, "sf") is old
+        app[0] = "app-new"
+        assert dq._materialized_edges(spark, "sf") is not old
+    finally:
+        release(*dq._EDGES_CACHE.values())

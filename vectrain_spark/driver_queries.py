@@ -26,7 +26,6 @@ from .operators.dedup import (
 from .operators.extract import extract_pages, extract_triples_df, split_quarantine
 from .operators.linking import build_alias_index, link_mentions, mention_surfaces
 from .operators.canonicalize import (
-    apply_canonical,
     connected_components,
     dedup_triples,
     edges_from_aliases,
@@ -39,6 +38,7 @@ from .operators.similarity import (
     knn_bruteforce,
     neardup_embedding_corpus,
 )
+from .operators.sketch import _hash60
 from .operators.textstats import (
     LANG_ORDER,
     STOPWORDS,
@@ -58,6 +58,7 @@ from .operators.webcorpus import (
     pages_from_documents,
     second_crawl_documents,
 )
+from .pipeline import adjacency_table, canonicalize_triples, edge_table
 
 # ---------------------------------------------------------------------------
 # Shared SQL fragments
@@ -203,17 +204,8 @@ def _canonical_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
     aliases = corpus_aliases(spark)
     idx = build_alias_index(aliases.toPandas())
     linked_m = link_mentions(spark, mention_surfaces(tri), idx)
-    subj_map = linked_m.select(
-        F.col("surface").alias("subj"), F.col("entity_id").alias("subj_id")
-    )
-    obj_map = linked_m.select(
-        F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-    )
-    linked = tri.join(F.broadcast(subj_map), "subj").join(
-        F.broadcast(obj_map), "obj"
-    )
     mapping = connected_components(edges_from_aliases(aliases))
-    return apply_canonical(linked, mapping)
+    return canonicalize_triples(tri, linked_m, mapping)
 
 
 def q_kg_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -730,28 +722,16 @@ FROM events p JOIN events s
 
 
 def q_kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ct = q_kg_canonical_triples(spark, sf_dir)
-    return ct.select(
-        F.col("subj_canon").alias("src"),
-        F.col("obj_canon").alias("dst"),
-        "pred",
-        "cnt",
-    )
+    return edge_table(q_kg_canonical_triples(spark, sf_dir))
 
 
 def q_kg_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z1 adjacency materialization as a gate query: build the per-source
-    sorted out-edge list + degree exactly as pipeline.py's finalize does
-    (sort_array over collect_list of (dst, pred, cnt) structs), then
-    re-flatten with posexplode so every list element AND its position is
-    value-checked against the oracle's row_number ordering."""
-    edges = q_kg_edges(spark, sf_dir)
-    adj = edges.groupBy("src").agg(
-        F.sort_array(F.collect_list(F.struct("dst", "pred", "cnt"))).alias(
-            "out_edges"
-        ),
-        F.sum("cnt").alias("degree"),
-    )
+    """Z1 adjacency materialization as a gate query: the per-source sorted
+    out-edge list + degree from pipeline.adjacency_table (the one
+    finalize writes), re-flattened with posexplode so every list element
+    AND its position is value-checked against the oracle's row_number
+    ordering."""
+    adj = adjacency_table(q_kg_edges(spark, sf_dir))
     return adj.select(
         "src", "degree", F.posexplode("out_edges").alias("pos", "e")
     ).select(
@@ -1023,16 +1003,18 @@ FROM edges e JOIN deg ON deg.src = e.src
 # pagerank / k-hop / co-citation instead of re-running the whole
 # extract->link->CC chain per query. The cache is a PERSISTED DataFrame
 # (executor-side blocks, materialized once by the count) — nothing is
-# collected to the driver.
+# collected to the driver. It is keyed on (application id, sf_dir), so a
+# later SparkSession never gets a frame bound to a stopped context.
 _EDGES_CACHE: dict = {}
 
 
 def _materialized_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _EDGES_CACHE.get(sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
+    df = _EDGES_CACHE.get(key)
     if df is None:
         df = q_kg_edges(spark, sf_dir).persist()
         df.count()
-        _EDGES_CACHE[sf_dir] = df
+        _EDGES_CACHE[key] = df
     return df
 
 
@@ -1289,7 +1271,7 @@ def q_kg_sage_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup): each entity's output vector is the integer-micro-unit-exact
     mean of its neighbors' embeddings, flattened to (id, pos, val) for
     the value gate."""
-    from .operators.graph import co_mentions, neighbor_mean_embeddings
+    from .operators.graph import _vid, co_mentions, neighbor_mean_embeddings
     from .operators.similarity import _vecs
 
     pairs = co_mentions(_materialized_edges(spark, sf_dir)).select("a", "b")
@@ -1300,16 +1282,7 @@ def q_kg_sage_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(pairs.select(F.col("b").alias("id")))
         .distinct()
     )
-    vid = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("id").cast("string"), F.lit("|e"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.col("n"),
-    )
+    vid = _vid(F.col("id").cast("string"), "|e")
     node_vecs = (
         nodes.crossJoin(F.broadcast(n))
         .select("id", vid.alias("vec_id"))
@@ -7459,12 +7432,7 @@ def q_kg_fact_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon = _canonical_linked(spark, sf_dir)
     source = F.concat(
         F.lit("src"),
-        F.pmod(
-            F.conv(F.substring(F.md5(F.col("url")), 1, 15), 16, 10).cast(
-                "long"
-            ),
-            F.lit(8),
-        ),
+        F.pmod(_hash60(F.col("url")), F.lit(8)),
     )
     claims = canon.select(
         source.alias("source"),

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .sketch import _hash60
+
 M_BITS_DEFAULT = 4096  # 64 words of 64 bits
 K_HASHES_DEFAULT = 3
 
@@ -52,13 +54,7 @@ def _positions(col: Column, m_bits: int, k: int) -> list[Column]:
     independent engine can reproduce every position)."""
     out = []
     for j in range(k):
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{j}\x1f"), col.cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        h = _hash60(F.concat(F.lit(f"{j}\x1f"), col.cast("string")))
         out.append((h % m_bits).cast("int"))
     return out
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import fresh_checkpoint, release
+from .sketch import _hash60
 
 # Java-regex / RE2 common-subset patterns (no lookaround, no \b needed —
 # the planted fixture delimits tokens with spaces).
@@ -121,8 +122,7 @@ def _hash_bucket(col, buckets: int = SAMPLE_BUCKETS):
     """Deterministic [0, buckets) bucket from md5 — first 15 hex chars as
     a bigint (always < 2^60, so non-negative in both engines; identical
     to DuckDB's ('0x' || substr(md5(x), 1, 15))::BIGINT % buckets)."""
-    h = F.conv(F.substring(F.md5(col.cast("string").cast("binary")), 1, 15), 16, 10)
-    return F.pmod(h.cast("long"), F.lit(buckets))
+    return F.pmod(_hash60(col.cast("string").cast("binary")), F.lit(buckets))
 
 
 def stratified_sample(
@@ -164,13 +164,7 @@ def fixed_k_sample(
 
     # full 60-bit hash as the rank key (not the coarse sample bucket):
     # ties are practically impossible, key_col is the deterministic breaker
-    rank_key = F.conv(
-        F.substring(
-            F.md5(F.col(key_col).cast("string").cast("binary")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    rank_key = _hash60(F.col(key_col).cast("string").cast("binary"))
     w = Window.partitionBy(stratum_col).orderBy(rank_key, F.col(key_col))
     return (
         docs.withColumn("rn", F.row_number().over(w))
@@ -364,7 +358,6 @@ def dsir_logweights(
     deterministic conversion.
     """
     from .dedup import normalized_text, spread
-    from .sketch import _hash60
 
     toks = (
         spread(docs)
@@ -487,7 +480,6 @@ def quality_probe_scores(
     cluster; adding steps or buckets changes no plan shape.
     """
     from .dedup import normalized_text, spread
-    from .sketch import _hash60
 
     toks = (
         spread(docs)
@@ -650,11 +642,7 @@ def priority_sample(
     single final merge, so the 10^12-row corpus never sorts globally
     (same bounded-shuffle shape as fixed_k_sample's rank-and-filter).
     """
-    h = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string").cast("binary")), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = _hash60(F.col(key_col).cast("string").cast("binary"))
     # u in (0, 1]: (h + 1) / 2^60, h uniform in [0, 2^60)
     u = (h + F.lit(1)).cast("double") / F.lit(float(2**60))
     w = F.col(weight_col).cast("double")

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import checkpoint_result
+from .sketch import _hash60
 
 N_MINHASH = 128
 N_MINHASH_BANDS = 32  # r = 4 rows/band: P(miss | J=0.8) = (1-0.8^4)^32 ~ 5e-8
@@ -534,9 +535,7 @@ def simhash_docs(corpus: DataFrame) -> DataFrame:
     )
     hx = wo.select(
         "doc_id",
-        F.conv(F.substring(F.md5(F.col("word").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        _hash60(F.col("word").cast("binary")).alias("h"),
     )
     sums = [
         F.sum(
@@ -613,9 +612,7 @@ def sentence_dup_profile(docs: DataFrame, min_chars: int = 20) -> DataFrame:
         .filter(F.length("s") >= min_chars)
         .select(
             "doc_id",
-            F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h"),
+            _hash60(F.col("s")).alias("h"),
         )
     )
     freq = sent.groupBy("h").agg(F.count(F.lit(1)).alias("freq"))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..session import checkpoint_result, fresh_checkpoint, release
 from .canonicalize import SMALL_GRAPH_ROWS, collect_small_graph, local_frame
+from .sketch import _hash60
 
 DAMPING = 0.85
 N_ITER = 5
@@ -522,10 +523,7 @@ def wl_refinement(pairs: DataFrame, rounds: int = 2) -> DataFrame:
         F.count(F.lit(1)).cast("string").alias("color")
     )
     for _ in range(rounds):
-        h = F.pmod(
-            F.conv(F.substring(F.md5("color"), 1, 15), 16, 10).cast("long"),
-            F.lit(2147483648),
-        )
+        h = F.pmod(_hash60(F.col("color")), F.lit(2147483648))
         contrib = sym.join(
             colors.withColumnRenamed("id", "dst"), "dst"
         ).select("src", h.alias("h"))
@@ -1035,11 +1033,6 @@ def negative_edges(edges: DataFrame, k: int = 2) -> DataFrame:
     e = edges.select("src", "dst").distinct()
     vocab, n_vocab = _global_sorted_rank(_endpoints(e), "id", "idx")
 
-    def h60(*cols):
-        return F.conv(
-            F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15), 16, 10
-        ).cast("long")
-
     slots = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("slot")
     base = e.select("src", "dst", slots)
     tail = base.select(
@@ -1047,16 +1040,18 @@ def negative_edges(edges: DataFrame, k: int = 2) -> DataFrame:
         "dst",
         "slot",
         F.lit("tail").alias("kind"),
-        F.pmod(h60(F.col("src"), F.col("dst"), F.col("slot"), F.lit("t")),
-               F.lit(n_vocab)).alias("idx"),
+        F.pmod(
+            _hash60(F.concat_ws("|", "src", "dst", "slot", F.lit("t"))), F.lit(n_vocab)
+        ).alias("idx"),
     )
     head = base.select(
         "src",
         "dst",
         "slot",
         F.lit("head").alias("kind"),
-        F.pmod(h60(F.col("src"), F.col("dst"), F.col("slot"), F.lit("h")),
-               F.lit(n_vocab)).alias("idx"),
+        F.pmod(
+            _hash60(F.concat_ws("|", "src", "dst", "slot", F.lit("h"))), F.lit(n_vocab)
+        ).alias("idx"),
     )
     cands = (
         tail.join(F.broadcast(vocab), "idx")
@@ -1077,10 +1072,11 @@ def negative_edges(edges: DataFrame, k: int = 2) -> DataFrame:
         ((F.col("kind") == "tail") & (F.col("dst") != F.col("orig")))
         | ((F.col("kind") == "head") & (F.col("src") != F.col("orig")))
     )
-    return (
+    return checkpoint_result(
         out.join(e.withColumnRenamed("dst", "dst"), ["src", "dst"], "left_anti")
         .select("src", "dst", "kind", F.col("slot").cast("long").alias("slot"))
-        .distinct()
+        .distinct(),
+        vocab,
     )
 
 
@@ -1933,6 +1929,28 @@ def star_join(edges: DataFrame, preds: list[str]) -> DataFrame:
     return out
 
 
+def _vid(col, salt: str):
+    """Embedding-matrix row of a name: its salted md5-60 hash modulo the
+    matrix size, read from the crossJoined ``n`` column."""
+    return F.pmod(_hash60(F.concat(col, F.lit(salt))), F.col("n"))
+
+
+def _transe_d2(h, r, t):
+    """||h + r - t||^2 as the EXPANDED quadratic hh + rr + tt + 2hr - 2ht
+    - 2rt: six left-fold dot products in a fixed order, so both engines
+    execute identical IEEE op sequences."""
+    from .similarity import _dot
+
+    return (
+        _dot(h, h)
+        + _dot(r, r)
+        + _dot(t, t)
+        + F.lit(2.0) * _dot(h, r)
+        - F.lit(2.0) * _dot(h, t)
+        - F.lit(2.0) * _dot(r, t)
+    )
+
+
 def _triple_embeddings(edges: DataFrame, embeddings: DataFrame) -> DataFrame:
     """(src, pred, dst, h, r, t): each distinct edge joined with its
     head/relation/tail vectors from the pretrained embedding MATRIX,
@@ -1947,12 +1965,6 @@ def _triple_embeddings(edges: DataFrame, embeddings: DataFrame) -> DataFrame:
 
     vecs = _vecs(embeddings)
     n = vecs.groupBy().agg(F.count(F.lit(1)).alias("n"))
-
-    def _vid(col, salt):
-        h = F.conv(
-            F.substring(F.md5(F.concat(col, F.lit(salt))), 1, 15), 16, 10
-        ).cast("long")
-        return F.pmod(h, F.col("n"))
 
     e = (
         edges.select("src", "pred", "dst")
@@ -2029,17 +2041,8 @@ def transe_scores(
     rank: local top-k inside (pred, hash-bucket) partitions first, then
     the global window only sees <= buckets*k finalists per predicate.
     """
-    from .similarity import _dot
-
     e = _triple_embeddings(edges, embeddings)
-    d2 = (
-        _dot("h", "h")
-        + _dot("r", "r")
-        + _dot("t", "t")
-        + F.lit(2.0) * _dot("h", "r")
-        - F.lit(2.0) * _dot("h", "t")
-        - F.lit(2.0) * _dot("r", "t")
-    )
+    d2 = _transe_d2("h", "r", "t")
     # the expanded quadratic can cancel to a tiny negative near zero;
     # clamp before the root or sqrt yields NaN, which sorts ABOVE every
     # real score in DESC order in both engines (oracle clamps identically)
@@ -2170,16 +2173,10 @@ def transe_train_epoch(
     no driver loops — an epoch over 10^12 edges is exactly these
     shuffles.
     """
-    from .similarity import _dot, _vecs
+    from .similarity import _vecs
 
     vecs = _vecs(embeddings)
     n = vecs.groupBy().agg(F.count(F.lit(1)).alias("n"))
-
-    def _vid(col, salt):
-        h = F.conv(
-            F.substring(F.md5(F.concat(col, F.lit(salt))), 1, 15), 16, 10
-        ).cast("long")
-        return F.pmod(h, F.col("n"))
 
     e = (
         edges.select("src", "pred", "dst")
@@ -2203,18 +2200,9 @@ def transe_train_epoch(
         e = e.join(
             vecs.select(F.col("vec_id").alias(idc), F.col("emb").alias(out)), idc
         )
-    d2 = lambda tail: F.round(  # noqa: E731 — shared expanded quadratic
-        _dot("h", "h")
-        + _dot("r", "r")
-        + _dot(tail, tail)
-        + F.lit(2.0) * _dot("h", "r")
-        - F.lit(2.0) * _dot("h", tail)
-        - F.lit(2.0) * _dot("r", tail),
-        6,
-    )
     act = (
-        e.withColumn("d2p", d2("t"))
-        .withColumn("d2n", d2("c"))
+        e.withColumn("d2p", F.round(_transe_d2("h", "r", "t"), 6))
+        .withColumn("d2n", F.round(_transe_d2("h", "r", "c"), 6))
         .filter(F.lit(gamma) + F.col("d2p") - F.col("d2n") > 0)
     )
     fl = act.select(
@@ -2341,9 +2329,7 @@ def _walk_start(edges: DataFrame):
 
 
 def _walk_hash(*cols):
-    return F.conv(
-        F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15), 16, 10
-    ).cast("long")
+    return _hash60(F.concat_ws("|", *cols))
 
 
 def _uniform_step(walks: DataFrame, e0: DataFrame, adj: DataFrame, t: int):
@@ -2535,7 +2521,7 @@ def transe_eval(
     skew pivot anywhere. The vocabulary index is the two-phase
     :func:`_global_sorted_rank` (never a partition-less sort).
     """
-    from .similarity import _dot, _vecs
+    from .similarity import _vecs
 
     vecs = _vecs(embeddings)
     nv = vecs.groupBy().agg(F.count(F.lit(1)).alias("n"))
@@ -2548,19 +2534,7 @@ def transe_eval(
         .withColumn(
             "idx",
             F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|", "src", "pred", "dst", "slot", F.lit("ev")
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
+                _hash60(F.concat_ws("|", "src", "pred", "dst", "slot", F.lit("ev"))),
                 F.lit(n_vocab),
             ),
         )
@@ -2571,12 +2545,6 @@ def transe_eval(
     )
 
     def _score(df: DataFrame, tail_col: str, out: str) -> DataFrame:
-        def _vid(col, salt):
-            h = F.conv(
-                F.substring(F.md5(F.concat(col, F.lit(salt))), 1, 15), 16, 10
-            ).cast("long")
-            return F.pmod(h, F.col("n"))
-
         d = df.crossJoin(F.broadcast(nv)).select(
             "*",
             _vid(F.col("src"), "|e").alias("h_id"),
@@ -2588,14 +2556,7 @@ def transe_eval(
                 vecs.select(F.col("vec_id").alias(idc), F.col("emb").alias(v)),
                 idc,
             )
-        d2 = (
-            _dot("_h", "_h")
-            + _dot("_r", "_r")
-            + _dot("_t", "_t")
-            + F.lit(2.0) * _dot("_h", "_r")
-            - F.lit(2.0) * _dot("_h", "_t")
-            - F.lit(2.0) * _dot("_r", "_t")
-        )
+        d2 = _transe_d2("_h", "_r", "_t")
         return d.withColumn(
             out, F.round(-F.sqrt(F.greatest(d2, F.lit(0.0))), 6)
         ).drop("h_id", "r_id", "t_id", "_h", "_r", "_t", "n")
@@ -2626,7 +2587,7 @@ def transe_eval(
             "rr", F.round(F.lit(1.0) / F.col("rank"), 6).cast("decimal(10,6)")
         )
     )
-    return ranked.groupBy("pred").agg(
+    summary = ranked.groupBy("pred").agg(
         F.count(F.lit(1)).cast("long").alias("n_triples"),
         F.round(
             F.sum("rr").cast("double") / F.count(F.lit(1)), 6
@@ -2639,6 +2600,7 @@ def transe_eval(
         ).alias("hits3"),
         F.round(F.sum("rank") / F.count(F.lit(1)), 6).alias("mean_rank"),
     )
+    return checkpoint_result(summary, vocab)
 
 
 def neighbor_minhash(
@@ -2675,9 +2637,7 @@ def neighbor_minhash(
     n_bands = num_hashes // rows_per_band
 
     def _h(col, k: int):
-        return F.conv(
-            F.substring(F.md5(F.concat(col, F.lit(f"|mh{k}"))), 1, 15), 16, 10
-        ).cast("long")
+        return _hash60(F.concat(col, F.lit(f"|mh{k}")))
 
     e = pairs.select("a", "b").distinct()
     sym = (
@@ -2815,7 +2775,7 @@ def hyperball(edges: DataFrame, max_t: int = 3) -> DataFrame:
     the lineage. max_t rounds = max_t shuffles — no frontier blowup,
     no per-node adjacency materialization.
     """
-    from .sketch import _HLL_ALPHA_M2, _TWO55, _hash60
+    from .sketch import _HLL_ALPHA_M2, _TWO55
 
     e0 = edges.select(
         F.col("src").cast("string").alias("src"),

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sketch import _hash60
+
 DOCS_JSONL_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
@@ -57,9 +59,7 @@ def jsonl_roundtrip_stats(
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
-        F.expr(
-            "bit_xor(cast(conv(substring(md5(text), 1, 15), 16, 10) as long))"
-        ).alias("text_xor"),
+        F.bit_xor(_hash60(F.col("text"))).alias("text_xor"),
     )
 
 
@@ -116,9 +116,7 @@ def csv_roundtrip_stats(
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
-        F.expr(
-            "bit_xor(cast(conv(substring(md5(text), 1, 15), 16, 10) as long))"
-        ).alias("text_xor"),
+        F.bit_xor(_hash60(F.col("text"))).alias("text_xor"),
     )
 
 

@@ -35,8 +35,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import release
+from ..session import checkpoint_result, release
 from ..textops import EMBED_DIM, embed_many, hyperplanes, lsh_bands, stable_id
+from .similarity import _dot
 
 LINK_THRESHOLD = 0.60
 N_BITS = 64
@@ -260,16 +261,6 @@ def embed_with_bands(
     return src.mapInPandas(_embed_bands_factory(dim, n_bits, n_bands), schema=_EMBED_BANDS_SCHEMA)
 
 
-def cosine_col(a: str, b: str):
-    """JVM-side cosine of two float-array columns (whole-stage codegen —
-    no Python in the hot loop). Inputs are pre-normalized, so dot == cos."""
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def link_mentions_join(
     surfaces: DataFrame,
     alias_bands: DataFrame,
@@ -293,7 +284,7 @@ def link_mentions_join(
     cand = m.join(a, on=["band", "sig"], how="inner").select(
         F.col("m.surface").alias("surface"),
         F.col("a.entity_id").alias("entity_id"),
-        cosine_col("m.embedding", "a.embedding").alias("score"),
+        _dot("m.embedding", "a.embedding").alias("score"),
     )
     # top-1 per surface without a window: two-phase max then min-id tiebreak
     best = cand.groupBy("surface").agg(F.max("score").alias("best"))
@@ -583,7 +574,7 @@ def cosine_topk_join(
         .select(
             F.col("surface"),
             F.col("entity_id"),
-            cosine_col("qe", "ae").alias("score"),
+            _dot("qe", "ae").alias("score"),
         )
     )
     w = W.partitionBy("surface").orderBy(F.desc("score"), F.asc("entity_id"))
@@ -736,7 +727,7 @@ def snm_candidates(
         F.col("_rank").alias("_rb"),
         F.floor(F.col("_rank") / window).alias("_b"),
     )
-    return (
+    return checkpoint_result(
         a.join(b, "_b")
         .filter(
             (F.col("_rb") > F.col("_ra"))
@@ -748,7 +739,8 @@ def snm_candidates(
             "key_a",
             "key_b",
             (F.col("_rb") - F.col("_ra")).cast("long").alias("dist"),
-        )
+        ),
+        ranked,
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import checkpoint_result, fresh_checkpoint, release
+from .sketch import _hash60
 
 
 def _dot(a: str | object, b: str | object):
@@ -950,15 +951,8 @@ def kmeans_parallel_seed(
             )
         )
         phi = d2s.agg(F.sum("d2s").alias("phi"))
-        u = F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.col("vec_id"), F.lit(f"kpp{r}"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long") / F.lit(float(2**60))
+        key = F.concat_ws("|", F.col("vec_id"), F.lit(f"kpp{r}"))
+        u = _hash60(key) / F.lit(float(2**60))
         sel = (
             d2s.crossJoin(F.broadcast(phi))
             .filter((u * F.col("phi")) < (F.lit(l) * F.col("d2s")))

@@ -32,7 +32,9 @@ _TWO60 = float(1 << 60)  # md5-prefix hash space: 15 hex chars = 60 bits
 
 
 def _hash60(col: F.Column) -> F.Column:
-    # identical on both engines: first 15 hex chars of md5 -> bigint
+    # identical on both engines: first 15 hex chars of md5 -> bigint, the
+    # DuckDB ('0x' || substr(md5(x), 1, 15))::BIGINT; every md5-60 hash
+    # in the package goes through here
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
@@ -110,9 +112,7 @@ CMS_WIDTH = 16
 def _cms_bucket(col: F.Column, j: int, width: int) -> F.Column:
     # row-j hash: md5 over a row-tagged key (0x1f separator cannot appear
     # in a word after whitespace normalization); identical in DuckDB
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{j}\x1f"), col)), 1, 15), 16, 10
-    ).cast("long")
+    h = _hash60(F.concat(F.lit(f"{j}\x1f"), col))
     return (h % width).cast("int")
 
 
@@ -580,13 +580,7 @@ AMS_COUNTERS = 8
 def _ams_sign(col: F.Column, j: int) -> F.Column:
     # counter-j sign hash: md5 parity over a counter-tagged key -> ±1;
     # identical construction in DuckDB (same tag, same substring)
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"s{j}\x1f"), col.cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = _hash60(F.concat(F.lit(f"s{j}\x1f"), col.cast("string")))
     return (F.lit(1) - F.lit(2) * (h % 2)).cast("long")
 
 

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .sketch import _hash60
+
 
 def salted_join(
     fact: DataFrame,
@@ -118,23 +120,11 @@ def rendezvous_assign(
     ).select(
         "key",
         "j",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("key").cast("string"),
-                        F.lit(":"),
-                        F.col("j").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("w"),
+        _hash60(
+            F.concat(
+                F.col("key").cast("string"), F.lit(":"), F.col("j").cast("string")
+            )
+        ).alias("w"),
     )
     return tagged.groupBy("key").agg(
         F.max_by("j", "w").cast("int").alias("shard")

@@ -393,10 +393,13 @@ def ccnet_buckets(docs: DataFrame) -> DataFrame:
     ranked, n = _global_sorted_rank(keyed, "_ck", "_rank")
     b = F.floor(F.lit(3) * F.col("_rank") / F.lit(n))
     labels = F.array(F.lit("head"), F.lit("middle"), F.lit("tail"))
-    return ranked.select(
-        "doc_id",
-        "avg_p",
-        F.element_at(labels, (b + 1).cast("int")).alias("bucket"),
+    return checkpoint_result(
+        ranked.select(
+            "doc_id",
+            "avg_p",
+            F.element_at(labels, (b + 1).cast("int")).alias("bucket"),
+        ),
+        ranked,
     )
 
 

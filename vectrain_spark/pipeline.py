@@ -161,6 +161,48 @@ def _canonical_mapping(
     return mapping  # written for resume; the in-memory frame serves this run
 
 
+def canonicalize_triples(
+    tri: DataFrame, linked_m: DataFrame, mapping: DataFrame, broadcast: bool = True
+) -> DataFrame:
+    """Link each triple's subj/obj surface through the linked-mention map
+    ``linked_m`` (surface, entity_id, ...) and map both ids to canonical
+    form: the link -> canonicalize chain the batch build, the streaming
+    ingest and the gate queries share. The maps are distinct-surface-sized
+    (bounded by dictionary + tail): broadcast-hinted while the dictionary
+    itself is broadcast-sized, otherwise planned as shuffle joins (AQE
+    re-broadcasts from the runtime size if the surface set turns out
+    small). The caller owns ``linked_m``'s materialization."""
+    subj_map = linked_m.select(
+        F.col("surface").alias("subj"), F.col("entity_id").alias("subj_id")
+    )
+    obj_map = linked_m.select(
+        F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
+    )
+    if broadcast:
+        subj_map, obj_map = F.broadcast(subj_map), F.broadcast(obj_map)
+    linked = tri.join(subj_map, "subj").join(obj_map, "obj")
+    return apply_canonical(linked, mapping, broadcast_map=broadcast)
+
+
+def edge_table(canonical: DataFrame) -> DataFrame:
+    """(src, dst, pred, cnt): the canonical triples as graph edges."""
+    return canonical.select(
+        F.col("subj_canon").alias("src"),
+        F.col("obj_canon").alias("dst"),
+        "pred",
+        "cnt",
+    )
+
+
+def adjacency_table(edges: DataFrame) -> DataFrame:
+    """(src, out_edges, degree): each source's sorted (dst, pred, cnt)
+    out-edge list and its summed count."""
+    return edges.groupBy("src").agg(
+        F.sort_array(F.collect_list(F.struct("dst", "pred", "cnt"))).alias("out_edges"),
+        F.sum("cnt").alias("degree"),
+    )
+
+
 def _group_pages(pages: DataFrame, group: int, n_groups: int) -> DataFrame:
     """One bucket-group's pages: ``pmod(xxhash64(url), n_groups) == group``.
 
@@ -246,22 +288,7 @@ def _run_group(
 
         # Linking: distinct surfaces (small) -> broadcast probe UDF -> tiny maps
         linked_m = fresh_checkpoint(linker(mention_surfaces(tri)))
-        subj_map = linked_m.select(
-            F.col("surface").alias("subj"),
-            F.col("entity_id").alias("subj_id"),
-            F.col("method").alias("subj_method"),
-        )
-        obj_map = linked_m.select(
-            F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-        )
-        # linked-mention maps are distinct-surface-sized (bounded by dictionary
-        # + tail): broadcast-hinted while the dictionary itself is broadcast-
-        # sized, otherwise planned as shuffle joins (AQE re-broadcasts from the
-        # runtime size if the group's surface set turns out small)
-        if broadcast_maps:
-            subj_map, obj_map = F.broadcast(subj_map), F.broadcast(obj_map)
-        linked = tri.join(subj_map, "subj").join(obj_map, "obj")
-        canon = apply_canonical(linked, mapping, broadcast_map=broadcast_maps).select(
+        canon = canonicalize_triples(tri, linked_m, mapping, broadcast_maps).select(
             "url",
             "sent_idx",
             "subj",
@@ -368,18 +395,9 @@ def finalize(spark: SparkSession, cat: Catalog) -> dict:
             F.count(F.lit(1)), F.coalesce(F.sum("cnt"), F.lit(0))
         ).collect()[0]
         cat.write("canonical_triples", canonical, mode="replace")
-        edges = canonical.select(
-            F.col("subj_canon").alias("src"),
-            F.col("obj_canon").alias("dst"),
-            "pred",
-            "cnt",
-        )
+        edges = edge_table(canonical)
         cat.write("edges", edges, mode="replace")
-        adjacency = edges.groupBy("src").agg(
-            F.sort_array(F.collect_list(F.struct("dst", "pred", "cnt"))).alias("out_edges"),
-            F.sum("cnt").alias("degree"),
-        )
-        cat.write("adjacency", adjacency, mode="replace")
+        cat.write("adjacency", adjacency_table(edges), mode="replace")
         _prof("finalize materialize", t0)
     finally:
         release(canonical)

@@ -30,9 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import Catalog
-from .operators.canonicalize import apply_canonical
 from .operators.extract import extract_pages, extract_triples_df, split_quarantine
 from .operators.linking import AliasIndex, link_mentions, mention_surfaces
+from .pipeline import canonicalize_triples
 from .session import release
 
 PAGES_SCHEMA = T.StructType(
@@ -151,16 +151,7 @@ def start_ingest(
         good, quarantine = split_quarantine(ext)
         tri = extract_triples_df(good)
         linked_m = link_mentions(spark, mention_surfaces(tri), index).persist()
-        subj_map = linked_m.select(
-            F.col("surface").alias("subj"), F.col("entity_id").alias("subj_id")
-        )
-        obj_map = linked_m.select(
-            F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-        )
-        linked = tri.join(F.broadcast(subj_map), "subj").join(
-            F.broadcast(obj_map), "obj"
-        )
-        canon = apply_canonical(linked, mapping).withColumn(
+        canon = canonicalize_triples(tri, linked_m, mapping).withColumn(
             "group_id", F.lit(int(batch_id))
         )
         try:
@@ -175,9 +166,7 @@ def start_ingest(
             if not q_done:
                 cat.write(
                     "quarantine",
-                    quarantine.select("url", "warc_ts", "lang", "error").withColumn(
-                        "group_id", F.lit(int(batch_id))
-                    ),
+                    quarantine.withColumn("group_id", F.lit(int(batch_id))),
                     mode="append",
                     meta={"stream_batch": batch_id},
                 )
